@@ -312,52 +312,28 @@ object Bench {
       }
     }
 
-    def toJson(results: Seq[(String, Double)]): String =
-      results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-        .mkString("{", ",", "}")
-
-    val results = benchSet(headline)
-    val resultsLlm = benchSet(llm10)
-    val resultsR4 = benchSet(r4new)
-    val resultsR5 = benchSet(r5new)
-    val resultsR6 = benchSet(r6new)
-    val resultsR6b = benchSet(r6bnew)
-    val resultsR7 = benchSet(r7new)
-    val resultsR8 = benchSet(r8new)
-    val resultsR9 = benchSet(r9new, n = nPassesLifecycle, warm = false)
-    val resultsR10 = benchSet(r10new, n = nPassesLifecycle, warm = false)
-    val resultsR11 = benchSet(r11new, n = nPassesLifecycle, warm = false)
-    val resultsR12 = benchSet(r12new, n = nPassesLifecycle, warm = false)
-    val qs = toJson(results)
-    val qsLlm = toJson(resultsLlm)
-    val qsR4 = toJson(resultsR4)
-    val qsR5 = toJson(resultsR5)
-    val qsR6 = toJson(resultsR6)
-    val qsR6b = toJson(resultsR6b)
-    val qsR7 = toJson(resultsR7)
-    val qsR8 = toJson(resultsR8)
-    val qsR9 = toJson(resultsR9)
-    val qsR10 = toJson(resultsR10)
-    val qsR11 = toJson(resultsR11)
-    val qsR12 = toJson(resultsR12)
-    // `value` stays the HEADLINE total only — the pinned 21-set number the
-    // driver has tracked since round 1; each later set gets its own key.
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val totalLlm = resultsLlm.map(_._2).filter(_ >= 0).sum
-    val totalR4 = resultsR4.map(_._2).filter(_ >= 0).sum
-    val totalR5 = resultsR5.map(_._2).filter(_ >= 0).sum
-    val totalR6 = resultsR6.map(_._2).filter(_ >= 0).sum
-    val totalR6b = resultsR6b.map(_._2).filter(_ >= 0).sum
-    val totalR7 = resultsR7.map(_._2).filter(_ >= 0).sum
-    val totalR8 = resultsR8.map(_._2).filter(_ >= 0).sum
-    val totalR9 = resultsR9.map(_._2).filter(_ >= 0).sum
-    val totalR10 = resultsR10.map(_._2).filter(_ >= 0).sum
-    val totalR11 = resultsR11.map(_._2).filter(_ >= 0).sum
-    val totalR12 = resultsR12.map(_._2).filter(_ >= 0).sum
+    // (JSON key suffix, set, timed passes, warmup pass), in run order;
+    // the first is the headline set, whose total is `value`
+    val sets = Seq(
+      ("", headline, nPasses, true),
+      ("_llm", llm10, nPasses, true),
+      ("_r4", r4new, nPasses, true),
+      ("_r5", r5new, nPasses, true),
+      ("_r6", r6new, nPasses, true),
+      ("_r6b", r6bnew, nPasses, true),
+      ("_r7", r7new, nPasses, true),
+      ("_r8", r8new, nPasses, true),
+      ("_r9", r9new, nPassesLifecycle, false),
+      ("_r10", r10new, nPassesLifecycle, false),
+      ("_r11", r11new, nPassesLifecycle, false),
+      ("_r12", r12new, nPassesLifecycle, false))
+    val allResults = sets.map { case (sfx, set, n, warm) =>
+      sfx -> benchSet(set, n, warm)
+    }
     // Stop Spark BEFORE printing so no shutdown log line can land after
     // the JSON — the driver parses the last stdout line.
     spark.stop()
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":$nPasses,"n_lifecycle":$nPassesLifecycle,"queries":$qs,"value_llm":$totalLlm%.3f,"queries_llm":$qsLlm,"value_r4":$totalR4%.3f,"queries_r4":$qsR4,"value_r5":$totalR5%.3f,"queries_r5":$qsR5,"value_r6":$totalR6%.3f,"queries_r6":$qsR6,"value_r6b":$totalR6b%.3f,"queries_r6b":$qsR6b,"value_r7":$totalR7%.3f,"queries_r7":$qsR7,"value_r8":$totalR8%.3f,"queries_r8":$qsR8,"value_r9":$totalR9%.3f,"queries_r9":$qsR9,"value_r10":$totalR10%.3f,"queries_r10":$qsR10,"value_r11":$totalR11%.3f,"queries_r11":$qsR11,"value_r12":$totalR12%.3f,"queries_r12":$qsR12,"sf":"$sfDir"}"""
+    val line = jsonLine(sfDir, nPasses, nPassesLifecycle, allResults)
     // the seven-set line outgrew the driver's stdout tail buffer in
     // round 6 (BENCH_r06.json: parsed=null, tail truncated mid-line) —
     // ALSO persist it to the repo so the numbers survive verbatim even
@@ -369,10 +345,7 @@ object Bench {
     // pin destroys the round's only perf evidence. A run with ANY
     // failed sample lands in BENCH_LOCAL.partial.json instead; only a
     // fully-priced run may overwrite the pin.
-    val allResults = Seq(results, resultsLlm, resultsR4, resultsR5,
-      resultsR6, resultsR6b, resultsR7, resultsR8, resultsR9,
-      resultsR10, resultsR11, resultsR12)
-    val complete = allResults.forall(_.forall(_._2 >= 0))
+    val complete = allResults.forall(_._2.forall(_._2 >= 0))
     val pinPath =
       if (complete) "/root/repo/BENCH_LOCAL.json"
       else "/root/repo/BENCH_LOCAL.partial.json"
@@ -381,5 +354,31 @@ object Bench {
     catch { case _: Throwable => () }
     println(line)
     System.out.flush()
+  }
+
+  /** The one-line bench JSON: `value`/`queries` for the headline set
+    * (the first entry, key suffix ""), then `value<sfx>`/`queries<sfx>`
+    * per later set in run order. `value` stays the HEADLINE total
+    * only — the pinned 21-set number the driver has tracked since
+    * round 1; each later set gets its own key. Failed queries (-1.0)
+    * are listed but left out of totals. */
+  private[graft] def jsonLine(sfDir: String, nPasses: Int,
+                              nPassesLifecycle: Int,
+                              results: Seq[(String,
+                                Seq[(String, Double)])]): String = {
+    def toJson(rs: Seq[(String, Double)]): String =
+      rs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+        .mkString("{", ",", "}")
+    def total(rs: Seq[(String, Double)]): Double =
+      rs.map(_._2).filter(_ >= 0).sum
+    val head = results.head._2
+    val headKeys =
+      f""""metric":"total","value":${total(head)}%.3f,"unit":"sec",""" +
+        s""""n":$nPasses,"n_lifecycle":$nPassesLifecycle,""" +
+        s""""queries":${toJson(head)}"""
+    val later = results.tail.map { case (sfx, rs) =>
+      f""""value$sfx":${total(rs)}%.3f,"queries$sfx":${toJson(rs)}"""
+    }
+    ((headKeys +: later) :+ s""""sf":"$sfDir"""").mkString("{", ",", "}")
   }
 }

@@ -45,40 +45,6 @@ object Scratch {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         println(s"recall_x2: lsh=${lsh.size} exact=${exact.size} " +
           s"missed=${(exact -- lsh).size} extra=${(lsh -- exact).size}")
-      case "ext_dbg" =>
-        graft.plans.GraftExtensions.registerAll(spark)
-        spark.sql("SELECT graft_simhash60(array('a','b')) AS fp, " +
-          "graft_minhash_bands(array('a b c')) AS bands, " +
-          "graft_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
-          "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS dot").show(false)
-        import org.apache.spark.sql.functions.{array_distinct, col, lit, lower, regexp_extract_all, split}
-        import spark.implicits._
-        val d = Seq((1L, "alpha beta gamma")).toDF("id", "text")
-        d.select(graft.operators.Dedup.simhash60(col("text"))).show(false)
-        d.createOrReplaceTempView("dbg_docs")
-        spark.sql("SELECT graft_simhash60(array_distinct(" +
-          "regexp_extract_all(lower(text), '\\\\S+', 0))) AS fp " +
-          "FROM dbg_docs").show(false)
-      case "minhash_dbg" =>
-        import spark.implicits._
-        import org.apache.spark.sql.functions.{col, lit, transform, xxhash64}
-        val df = Seq(Tuple1(Seq("a"))).toDF("sh")
-        df.select(
-          graft.functions.MinHashBands64Expr.minhashBands(col("sh"), 2, 2)
-            .as("native"),
-          graft.operators.Dedup.lshBandKeysDirect(
-            transform(col("sh"), s => xxhash64(s)), 2, 2).as("composed"),
-          xxhash64(col("sh").getItem(0)).as("h0"),
-          xxhash64(lit(0), xxhash64(col("sh").getItem(0))).as("m0")
-        ).show(false)
-        import org.apache.spark.sql.catalyst.expressions.XXH64
-        val s0 = org.apache.spark.unsafe.types.UTF8String.fromString("a")
-        val h = XXH64.hashUnsafeBytes(s0.getBaseObject, s0.getBaseOffset,
-          s0.numBytes(), 42L)
-        println("my h0   = " + h)
-        println("my m0   = " + XXH64.hashLong(h, XXH64.hashInt(0, 42L)))
-        println("my key0 = " + XXH64.hashLong(
-          XXH64.hashLong(h, XXH64.hashInt(0, 42L)), XXH64.hashInt(0, 42L)))
       case "pq_recall" =>
         // sweep PQ operating points: macro recall@5 vs exact L2 top-k
         import org.apache.spark.sql.functions.{avg, col, count, lit}
@@ -327,7 +293,7 @@ object Scratch {
         // the ANN router's PRUNABLE branch at lake scale (verdict-6
         // ask #4): a clustered embedding lake — Round12Spec's blob
         // recipe at sf0.1/sf1 row counts — through annDifficulty
-        // (RC), annTopKAuto (route), recall vs exact, probed
+        // (RC), annTopKAutoSized (route), recall vs exact, probed
         // fraction, wall time. CLUSTERED_N=20000 CLUSTERED_C=64 etc.
         // override the shape. Generated IN Spark (no driver arrays):
         // cluster centers on a deterministic hash grid, points =
@@ -370,9 +336,9 @@ object Scratch {
         val m = sys.env.getOrElse("CLUSTERED_M", "8").toInt
         val ksub = sys.env.getOrElse("CLUSTERED_KSUB", "16").toInt
         val t0 = System.nanoTime()
-        val routed = graft.operators.Similarity.annTopKAuto(
+        val routed = graft.operators.Similarity.annTopKAutoSized(
           q, lake, "vec_id", "embedding", 5, nlist = nlist,
-          nprobe = nprobe, m = m, ksub = ksub, rerank = rerank)
+          nprobe = nprobe, m = m, ksub = ksub, rerank = rerank).result
         routed.write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
         val hits = exact.as("b").join(routed.as("l"),
@@ -853,64 +819,6 @@ object Scratch {
           sy = s2; pc = p2; tk = t2
           println(f"round $r%2d  $dt%6.2f s  aff=$nAff%7d pairs=$nPc%6d " +
             s"won=${row.collect()(0).getString(1)}")
-        }
-      case "st8_debug" =>
-        // count rows per micro-batch to confirm the 2-batch split
-        import org.apache.spark.sql.functions.col
-        val out = graft.streaming.Streams.streamLateDataDrop(spark, sfDir)
-        println("st8 rows=" + out.count())
-        val ev = Tables.load(spark, sfDir, "events")
-        println("a=" + ev.filter(col("event_id") % 3 =!= 0).count() +
-          " b=" + ev.filter(col("event_id") % 3 === 0).count())
-      case "filtered_dbg" =>
-        import org.apache.spark.sql.functions._
-        import graft.operators.Similarity
-        val n = 2000L; val nlist = 64; val k = 5
-        val lake = Similarity.hashBlobLake(spark, n)
-          .withColumn("mod4", pmod(col("vec_id"), lit(4L)))
-          .localCheckpoint(true)
-        val (cents, codebook) = Similarity.ivfpqTrain(
-          lake.drop("mod4"), "vec_id", "embedding", nlist, 8, 16,
-          coarseIters = 1, pqIters = 1)
-        val encoded = Similarity.ivfpqEncode(lake.drop("mod4"),
-          "vec_id", "embedding", cents, codebook, 8)
-          .localCheckpoint(true)
-        val q = Similarity.stratifiedProbes(lake, "vec_id", 16)
-          .drop("mod4").localCheckpoint(true)
-        val r = Similarity.annTopKFilteredRouted(q, lake, "vec_id",
-          "embedding", col("mod4") === 0, k, encoded, cents,
-          codebook, nlist, m = 8, bruteCutoff = 0L)
-        println(s"route=${r.route} np=${r.nprobe} kP=${r.kPrime}")
-        val exact = Similarity.bruteTopKL2(q,
-          lake.filter(col("mod4") === 0), "vec_id", "embedding", k)
-        exact.as("b").join(r.result.as("l"),
-            col("b.query_id") === col("l.query_id") &&
-              col("b.neighbor_id") === col("l.neighbor_id"), "left")
-          .groupBy(col("b.query_id"))
-          .agg(count(lit(1)).as("n_exact"),
-            count(col("l.neighbor_id")).as("n_hit"))
-          .orderBy(col("query_id")).show(20, false)
-        // one failing query in detail: exact top-5 vs got candidates
-        val qid = exact.as("b").join(r.result.as("l"),
-            col("b.query_id") === col("l.query_id") &&
-              col("b.neighbor_id") === col("l.neighbor_id"), "left")
-          .groupBy(col("b.query_id"))
-          .agg(count(col("l.neighbor_id")).as("n_hit"))
-          .filter(col("n_hit") < k).select("query_id")
-          .head(1).headOption.map(_.getLong(0)).getOrElse(-1L)
-        println(s"failing query: $qid")
-        if (qid >= 0) {
-          exact.filter(col("query_id") === qid).show(10, false)
-          r.result.filter(col("query_id") === qid).show(10, false)
-          // where do the exact neighbors sit in the UNFILTERED ranking?
-          val un = Similarity.ivfpqSearchEncoded(
-            q.filter(col("vec_id") === qid), "vec_id", "embedding",
-            encoded, cents, codebook, 200, r.nprobe, m = 8,
-            rerank = 1500, rerankSource = Some(lake))
-          un.as("u").join(exact.filter(col("query_id") === qid).as("e"),
-              col("u.neighbor_id") === col("e.neighbor_id"), "right")
-            .select(col("e.neighbor_id"), col("e.rank").as("exact_rank"),
-              col("u.rank").as("unfiltered_rank")).show(10, false)
         }
       case "compact_rehearsal" =>
         // delete-lifecycle at the 200k decade: build+persist the

@@ -2887,7 +2887,7 @@ object SparkEntry {
     }),
 
     "x93b_ann_auto" -> ((s, dir) => {
-      // the RC-gated router end-to-end (Similarity.annTopKAuto): on
+      // the RC-gated router end-to-end (Similarity.annTopKAutoSized): on
       // this corpus the preflight measures NOT prunable (x93's pane),
       // so the route is the exact fixed-point scan — which is why the
       // oracle is the shared brute replay. The IVFPQ branch and the
@@ -2895,8 +2895,8 @@ object SparkEntry {
       // clustered corpus. The point under test: the engine picks the
       // plan from a measurement, not from hope.
       val emb = t(s, dir, "embeddings")
-      Similarity.annTopKAuto(emb.filter(col("vec_id") < 10), emb,
-          "vec_id", "embedding", k = 5)
+      Similarity.annTopKAutoSized(emb.filter(col("vec_id") < 10), emb,
+          "vec_id", "embedding", k = 5).result
         .orderBy(col("query_id"), col("rank"))
     }),
 
@@ -2907,7 +2907,7 @@ object SparkEntry {
       // take needs a corpus with known structure): the deterministic
       // hash-grid blob lake (Similarity.hashBlobLake — RC ≈ 50, the
       // regime real embedding models produce) routed through
-      // annTopKAutoRouted with the SIZED rerank default
+      // annTopKAutoSized with the SIZED rerank default
       // (Similarity.rerankFor: nprobe × n/nlist × 1.5 — the flat
       // rerank=200 this replaces collapses recall to 0.638 at
       // 312-vector cells, measured; Round15Spec pins the negative
@@ -2965,8 +2965,9 @@ object SparkEntry {
       val lake = Similarity.hashBlobLake(s, n).localCheckpoint(true)
       val q = Similarity.stratifiedProbes(lake, "vec_id", 16)
         .localCheckpoint(true)
-      val (route, routed) = Similarity.annTopKAutoRouted(q, lake,
+      val r = Similarity.annTopKAutoSized(q, lake,
         "vec_id", "embedding", k)
+      val (route, routed) = (r.route, r.result)
       val exact = Similarity.bruteTopKL2(q, lake, "vec_id",
         "embedding", k)
       exact.as("b").join(routed.as("l"),
@@ -6241,7 +6242,7 @@ object SparkEntry {
       // calibration because it fuses RANKS (engine-exact ints).
       // Each branch arrives k-bounded (top-20/query), so fusion
       // touches ≤ 40 rows/query at any corpus size; at 100 TB the
-      // dense branch swaps bruteTopK for annTopKAuto (x93b) and the
+      // dense branch swaps bruteTopK for annTopKAutoSized (x93b) and the
       // sparse branch's postings join is the x55 shape — this query
       // pins the fusion algebra against both.
       val docs = t(s, dir, "documents")

@@ -30,19 +30,21 @@ object Similarity {
   private def coef(j: Column, i: Column): Column =
     when(pmod(xxhash64(j, i), lit(2)) === 0, 1.0d).otherwise(-1.0d)
 
-  /** Sign-sketch bucket id over `planes` random hyperplanes. */
-  def signBucket(vec: Column, planes: Int = 8): Column =
-    aggregate(
-      transform(sequence(lit(0), lit(planes - 1)), j => {
-        val dotj = aggregate(
-          zip_with(vec, sequence(lit(0), size(vec) - 1),
-            (x, i) => x.cast(DoubleType) * coef(j, i)),
-          lit(0.0d), (acc, v) => acc + v)
-        struct(j.as("j"), when(dotj >= 0, 1L).otherwise(0L).as("bit"))
-      }),
-      lit(0L),
-      (acc, s) => acc + s.getField("bit") * pow(lit(2.0d),
-        s.getField("j").cast(DoubleType)).cast(LongType))
+  /** (query_id, qv, qn) and (neighbor_id, cv, cn): the query and
+    * corpus sides every cosine path scores from. */
+  private def queryPrep(queries: DataFrame, idCol: String,
+                        vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+      VectorExprs.norm(col(vecCol)).as("qn"))
+
+  private def corpusPrep(corpus: DataFrame, idCol: String,
+                         vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+      VectorExprs.norm(col(vecCol)).as("cn"))
+
+  /** Query-to-neighbor cosine over the prep columns. */
+  private def qcCos: Column =
+    VectorExprs.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))
 
   private def scoreAndRank(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
@@ -65,13 +67,10 @@ object Similarity {
     * `corpus` both expose (`idCol`, `vecCol`). */
   def bruteTopK(queries: DataFrame, corpus: DataFrame,
                 idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      VectorExprs.norm(col(vecCol)).as("qn"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      VectorExprs.norm(col(vecCol)).as("cn"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim",
-        VectorExprs.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+    val scored = corpusPrep(corpus, idCol, vecCol).join(
+      broadcast(queryPrep(queries, idCol, vecCol)),
+      col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos_sim", qcCos)
     scoreAndRank(scored, k)
   }
 
@@ -147,8 +146,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id", "qv", "qn", "cv", "cn")
       .dropDuplicates("query_id", "neighbor_id")   // OR across tables
-      .withColumn("cos_sim",
-        VectorExprs.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+      .withColumn("cos_sim", qcCos)
     scoreAndRank(scored, k)
   }
 
@@ -176,9 +174,8 @@ object Similarity {
     // (the ivfAssign/scoreAndRank fat-row class; at corpus grain that
     // is n·k·|vec| bytes of sort spill for an id-to-cell mapping)
     val best = qv.crossJoin(broadcast(cents))
-      .select(col(idName), col("cid"), aggregate(
-        zip_with(col("__qv"), col("__cv"), (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, x) => acc + x).as("__d2"))
+      .select(col(idName), col("cid"),
+        intL2(col("__qv"), col("__cv")).as("__d2"))
       .withColumn("__rk", row_number().over(
         Window.partitionBy(col(idName))
           .orderBy(col("__d2").asc, col("cid").asc)))
@@ -325,13 +322,7 @@ object Similarity {
                             idCol: String, vecCol: String,
                             k: Int, rerank: Int,
                             rerankSource: Option[DataFrame]): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_d2").asc, col("neighbor_id").asc)
-    val adc = adc0.withColumn("rank", row_number().over(w))
-    if (rerank <= 0)
-      adc.filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          col("approx_d2"))
+    if (rerank <= 0) l2TopK(adc0, "approx_d2", k)
     else {
       val src = rerankSource.getOrElse(throw new IllegalArgumentException(
         "rerank > 0 needs rerankSource (the original vectors)"))
@@ -339,21 +330,29 @@ object Similarity {
         quantize1e7(col(vecCol)).as("__qv"))
       val qv = queries.select(col(idCol).as("query_id"),
         quantize1e7(col(vecCol)).as("__rqv"))
-      val w2 = Window.partitionBy(col("query_id"))
-        .orderBy(col("exact_d2").asc, col("neighbor_id").asc)
-      adc.filter(col("rank") <= rerank)
+      l2TopK(l2TopK(adc0, "approx_d2", rerank)
         .select(col("query_id"), col("neighbor_id"))
         .join(c, Seq("neighbor_id"))
         .join(broadcast(qv), Seq("query_id"))
         // slim before the window: the sort must not carry the two
         // quantized vectors (the scoreAndRank note)
         .select(col("query_id"), col("neighbor_id"),
-          intL2(col("__rqv"), col("__qv")).as("exact_d2"))
-        .withColumn("rank", row_number().over(w2))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          col("exact_d2").as("approx_d2"))
+          intL2(col("__rqv"), col("__qv")).as("exact_d2")),
+        "exact_d2", k)
     }
+  }
+
+  /** Per-query top-k by ascending `dCol` (ties → ascending
+    * neighbor_id) as (query_id, rank, neighbor_id, approx_d2) — the
+    * one rank tail every L2 search path ends in. */
+  private def l2TopK(scored: DataFrame, dCol: String,
+                     k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(dCol).asc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        col(dCol).as("approx_d2"))
   }
 
   /** `iters` Lloyd refinement steps of a PQ codebook over exploded
@@ -546,30 +545,30 @@ object Similarity {
         nprobe, m),
       queries, idCol, vecCol, k, rerank, rerankSource)
 
-  /** The probe-and-ADC core of [[ivfpqSearchEncoded]]: (query_id,
-    * neighbor_id, approx_d2) over the probed fraction of the encoded
-    * state — shared by the single-stage (exact-rerank) and two-stage
-    * ([[ivfpqSearchRefined]]) tails. */
   /** The probe stage on its own: top-nprobe cells per query by
-    * centroid cosine (the ivf rule), as (query_id, qv, cell) — ONE
-    * definition shared by the ADC tail and the layout-pruning
-    * consumers ([[probedCellIds]]); a parallel re-derivation of the
+    * centroid cosine (the ivf rule), as (query_id, qv, qn, cell) —
+    * ONE definition shared by the IVF and ADC scoring tails and the
+    * layout-pruning consumers ([[ivfpqSearchPruned]],
+    * [[ivfpqSearchPrunedBatched]]); a parallel re-derivation of the
     * probe ranking would be the silent-divergence class the repo's
     * witnessing discipline exists to kill. */
   private def probeAssign(queries: DataFrame, idCol: String,
                           vecCol: String, cents: DataFrame,
                           nprobe: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      VectorExprs.norm(col(vecCol)).as("qn"))
     val probeW = Window.partitionBy(col("query_id"))
       .orderBy(col("probe_cos").desc, col("cent_id").asc)
-    q.join(broadcast(cents))
+    queryPrep(queries, idCol, vecCol).join(broadcast(cents))
       .withColumn("probe_cos", centCos(col("qv"), col("qn")))
       .withColumn("__pr", row_number().over(probeW))
       .filter(col("__pr") <= nprobe)
-      .select(col("query_id"), col("qv"), col("cent_id").as("cell"))
+      .select(col("query_id"), col("qv"), col("qn"),
+        col("cent_id").as("cell"))
   }
 
+  /** The probe-and-ADC core of [[ivfpqSearchEncoded]]: (query_id,
+    * neighbor_id, approx_d2) over the probed fraction of the encoded
+    * state — shared by the single-stage (exact-rerank) and two-stage
+    * ([[ivfpqSearchRefined]]) tails. */
   private def ivfpqAdc(queries: DataFrame, idCol: String,
                        vecCol: String, encoded: DataFrame,
                        cents: DataFrame, codebook: DataFrame,
@@ -636,10 +635,7 @@ object Similarity {
       s"ivfpqSearchRefined: pool=$pool refineTo=$refineTo")
     val adc = ivfpqAdc(queries, idCol, vecCol, encoded, cents,
       codebook, nprobe, m)
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_d2").asc, col("neighbor_id").asc)
-    val cand = adc.withColumn("__r1", row_number().over(wAdc))
-      .filter(col("__r1") <= pool)
+    val cand = l2TopK(adc, "approx_d2", pool)
       .select(col("query_id"), col("neighbor_id"))
     // SQ8 refine: candidates meet int8 codes — read from the standing
     // ledger when supplied ([[sq8Encode]]'s shape, the 100 TB form:
@@ -649,9 +645,7 @@ object Similarity {
     val c8 = sq8Codes.getOrElse(sq8Encode(corpus, idCol, vecCol))
     val q8 = queries.select(col(idCol).as("query_id"),
       quantizeInt8(col(vecCol)).as("q8"))
-    val wSq8 = Window.partitionBy(col("query_id"))
-      .orderBy(col("sq8_d2").asc, col("neighbor_id").asc)
-    val refined = cand.join(c8, Seq("neighbor_id"))
+    val refined = l2TopK(cand.join(c8, Seq("neighbor_id"))
       .join(broadcast(q8), Seq("query_id"))
       // slim before the window (the scoreAndRank note): the int8
       // code structs stay out of the refine sort
@@ -662,25 +656,17 @@ object Similarity {
             val y = b.cast(DoubleType) / col("c8").getField("scale")
             (x - y) * (x - y)
           }),
-        lit(0.0d), (acc, v) => acc + v).as("sq8_d2"))
-      .withColumn("__r2", row_number().over(wSq8))
-      .filter(col("__r2") <= refineTo)
+        lit(0.0d), (acc, v) => acc + v).as("sq8_d2")), "sq8_d2", refineTo)
       .select(col("query_id"), col("neighbor_id"))
     // exact fixed-point re-score of ONLY the refined survivors
     val cQ = corpus.select(col(idCol).as("neighbor_id"),
       quantize1e7(col(vecCol)).as("__cq"))
     val qQ = queries.select(col(idCol).as("query_id"),
       quantize1e7(col(vecCol)).as("__qq"))
-    val wEx = Window.partitionBy(col("query_id"))
-      .orderBy(col("exact_d2").asc, col("neighbor_id").asc)
-    refined.join(cQ, Seq("neighbor_id"))
+    l2TopK(refined.join(cQ, Seq("neighbor_id"))
       .join(broadcast(qQ), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), // slim, as above
-        intL2(col("__qq"), col("__cq")).as("exact_d2"))
-      .withColumn("rank", row_number().over(wEx))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("exact_d2").as("approx_d2"))
+        intL2(col("__qq"), col("__cq")).as("exact_d2")), "exact_d2", k)
   }
 
   /** Exact fixed-point L2² top-k (ascending distance, ties → ascending
@@ -692,17 +678,11 @@ object Similarity {
       quantize1e7(col(vecCol)).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"),
       quantize1e7(col(vecCol)).as("cv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_d2").asc, col("neighbor_id").asc)
-    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+    l2TopK(c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       // slim before the window (the scoreAndRank note): n·|q| rows
       // sort at 24 B, not with two quantized vectors aboard
       .select(col("query_id"), col("neighbor_id"),
-        intL2(col("qv"), col("cv")).as("approx_d2"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("approx_d2"))
+        intL2(col("qv"), col("cv")).as("approx_d2")), "approx_d2", k)
   }
 
   /** SQ8 (scalar-quantized int8) ANN — the third compression point on
@@ -754,14 +734,10 @@ object Similarity {
       .withColumn("__rk", row_number().over(wA))
       .filter(col("__rk") <= shortlist)
       .select(col("query_id"), col("neighbor_id"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      VectorExprs.norm(col(vecCol)).as("cn"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      VectorExprs.norm(col(vecCol)).as("qn"))
-    val scored = short.join(cv, Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("cos_sim",
-        VectorExprs.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+    val scored = short.join(corpusPrep(corpus, idCol, vecCol),
+        Seq("neighbor_id"))
+      .join(broadcast(queryPrep(queries, idCol, vecCol)), Seq("query_id"))
+      .withColumn("cos_sim", qcCos)
     scoreAndRank(scored, k)
   }
 
@@ -815,11 +791,6 @@ object Similarity {
     ivfSearchAssigned(queries, idCol, vecCol, assigned, cents, k, nprobe)
   }
 
-  private def ivfPrep(corpus: DataFrame, idCol: String,
-                      vecCol: String): DataFrame =
-    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      VectorExprs.norm(col(vecCol)).as("cn"))
-
   private def centCos(v: Column, n: Column): Column =
     VectorExprs.dot(v, col("cent_v")) / (n * col("cent_n"))
 
@@ -828,7 +799,7 @@ object Similarity {
     * the persistable index STATE ([[ivfAssign]] consumes it). */
   def ivfTrain(corpus: DataFrame, idCol: String, vecCol: String,
                nlist: Int = 16, trainIters: Int = 0): DataFrame = {
-    val c = ivfPrep(corpus, idCol, vecCol)
+    val c = corpusPrep(corpus, idCol, vecCol)
     val seeds = c
       .withColumn("__h", xxhash64(col("neighbor_id")))
       .orderBy(col("__h"), col("neighbor_id")).limit(nlist)
@@ -884,7 +855,7 @@ object Similarity {
     * discipline, for vectors). Returns (cell, neighbor_id, cv, cn). */
   def ivfAssign(batch: DataFrame, idCol: String, vecCol: String,
                 cents: DataFrame): DataFrame = {
-    val prep = ivfPrep(batch, idCol, vecCol)
+    val prep = corpusPrep(batch, idCol, vecCol)
     // argmax over SLIM rows, payload joined back by id (see the
     // ivfTrain Lloyd-step note): the n×nlist agg input must be
     // (id, cos, cent_id) ~24 B, not first(cv)-dragged vectors —
@@ -908,20 +879,10 @@ object Similarity {
   def ivfSearchAssigned(queries: DataFrame, idCol: String, vecCol: String,
                         assigned: DataFrame, cents: DataFrame,
                         k: Int, nprobe: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      VectorExprs.norm(col(vecCol)).as("qn"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("probe_cos").desc, col("cent_id").asc)
-    val probes = q.join(broadcast(cents))
-      .withColumn("probe_cos", centCos(col("qv"), col("qn")))
-      .withColumn("__pr", row_number().over(probeW))
-      .filter(col("__pr") <= nprobe)
-      .select(col("query_id"), col("qv"), col("qn"),
-        col("cent_id").as("cell"))
+    val probes = probeAssign(queries, idCol, vecCol, cents, nprobe)
     val scored = assigned.join(probes, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim",
-        VectorExprs.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+      .withColumn("cos_sim", qcCos)
     scoreAndRank(scored, k)
   }
 
@@ -970,36 +931,6 @@ object Similarity {
       prunableAt).agg(min(col("ivf_prunable"))).collect()
     rows.nonEmpty && !rows(0).isNullAt(0) && rows(0).getBoolean(0)
   }
-
-  /** RC-GATED ANN — the x93 preflight wired into the operator itself
-    * (connectedComponentsAuto's discipline: measure, then route,
-    * never assume): when the probe queries all measure prunable
-    * (clustered corpus, RC ≥ gate) the IVFPQ index path runs; in the
-    * concentration regime (the measured sf1 recall collapse — RC ≈
-    * 1.3, recall 0.44 at 12.5% probed) cell pruning cannot hold
-    * recall and the exact fixed-point scan IS the correct plan, so
-    * that is what runs. Both branches emit the same
-    * (query_id, rank, neighbor_id, approx_d2) shape.
-    *
-    * Id contract: queries and corpus share one id namespace (see
-    * [[annDifficulty]] — the preflight's self-pair exclusion and both
-    * branches' `query_id =!= neighbor_id` assume it); re-key
-    * independently-numbered query sets before routing.
-    *
-    * `nlist = 0` / `nprobe = 0` / `rerank = 0` (the defaults) size
-    * the index geometry and the exact-rerank pool from the corpus via
-    * [[nlistFor]]/[[nprobeFor]]/[[rerankFor]] — flat constants on any
-    * of these knobs are the measured failure mode (a flat rerank
-    * collapses recall as cells grow; a flat nlist stops pruning as
-    * the corpus grows). */
-  def annTopKAuto(queries: DataFrame, corpus: DataFrame,
-                  idCol: String, vecCol: String, k: Int,
-                  nlist: Int = 0, nprobe: Int = 0, m: Int = 8,
-                  ksub: Int = 16, rerank: Int = 0,
-                  prunableAt: Double = 2.0,
-                  probeCap: Int = 16): DataFrame =
-    annTopKAutoRouted(queries, corpus, idCol, vecCol, k, nlist,
-      nprobe, m, ksub, rerank, prunableAt, probeCap)._2
 
   /** Executable rerank sizing for the IVFPQ route — the
     * lgkFor/bandsFor discipline applied to the rerank knob: the
@@ -1141,15 +1072,8 @@ object Similarity {
     * recall bound (Round16Spec). */
   def ivfpqMergeTopK(perShard: Seq[DataFrame], k: Int): DataFrame = {
     require(perShard.nonEmpty, "ivfpqMergeTopK: no shards")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_d2").asc, col("neighbor_id").asc)
-    perShard.map(_.select(col("query_id"), col("neighbor_id"),
-        col("approx_d2")))
-      .reduce(_.unionAll(_))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("approx_d2"))
+    l2TopK(perShard.map(_.select(col("query_id"), col("neighbor_id"),
+      col("approx_d2"))).reduce(_.unionAll(_)), "approx_d2", k)
   }
 
   /** Standing-index GEOMETRY-DRIFT advisor — the x106/x61 drift-gate
@@ -1218,21 +1142,6 @@ object Similarity {
     (sized, sized >= rebuildFactor.toLong * trainedNlist)
   }
 
-  /** [[annTopKAuto]] with the ROUTE surfaced — ("ivfpq" | "exact",
-    * result). The route string comes from the same annPrunable vote
-    * that picks the branch, so a pane publishing it (x112) asserts
-    * the branch actually taken, not a parallel re-derivation. */
-  def annTopKAutoRouted(queries: DataFrame, corpus: DataFrame,
-                        idCol: String, vecCol: String, k: Int,
-                        nlist: Int = 0, nprobe: Int = 0, m: Int = 8,
-                        ksub: Int = 16, rerank: Int = 0,
-                        prunableAt: Double = 2.0,
-                        probeCap: Int = 16): (String, DataFrame) = {
-    val r = annTopKAutoSized(queries, corpus, idCol, vecCol, k, nlist,
-      nprobe, m, ksub, rerank, prunableAt, probeCap)
-    (r.route, r.result)
-  }
-
   /** The router's RESOLVED decision: the branch taken plus the sized
     * knobs it actually used. On the exact route the geometry knobs
     * are 0 (no index exists to size). A pane publishing these columns
@@ -1242,19 +1151,36 @@ object Similarity {
   final case class AnnRoute(route: String, nlist: Int, nprobe: Int,
                             rerank: Int, result: DataFrame)
 
-  /** [[annTopKAutoRouted]] with the SIZED KNOBS surfaced too — the
-    * full routing decision as data ([[AnnRoute]]), so consumers
-    * publish what the router resolved rather than re-deriving the
-    * sizing rules in parallel. Knob semantics: 0 (the default) means
-    * "size from the corpus" via [[nlistFor]]/[[nprobeFor]]/
-    * [[rerankFor]]; positive pins the knob. Negative values are
-    * REJECTED — rerank = 0 used to mean "no rerank" in ivfpqTopK's
-    * vocabulary, and a stale caller passing a negative to disable
-    * reranking would otherwise get silent ADC-only results under the
-    * sized-rerank contract. ADC-only search is deliberately not
+  /** RC-GATED ANN — the x93 preflight wired into the operator itself
+    * (connectedComponentsAuto's discipline: measure, then route,
+    * never assume): when the probe queries all measure prunable
+    * (clustered corpus, RC ≥ gate) the IVFPQ index path runs; in the
+    * concentration regime (the measured sf1 recall collapse — RC ≈
+    * 1.3, recall 0.44 at 12.5% probed) cell pruning cannot hold
+    * recall and the exact fixed-point scan IS the correct plan, so
+    * that is what runs. Both branches emit the same
+    * (query_id, rank, neighbor_id, approx_d2) shape.
+    *
+    * Id contract: queries and corpus share one id namespace (see
+    * [[annDifficulty]] — the preflight's self-pair exclusion and both
+    * branches' `query_id =!= neighbor_id` assume it); re-key
+    * independently-numbered query sets before routing.
+    *
+    * The decision comes back as data ([[AnnRoute]]): `.result` is
+    * the top-k, `.route` the branch the annPrunable vote took
+    * ("ivfpq" | "exact"), plus the sized knobs — consumers publish
+    * what the router resolved rather than re-deriving the sizing
+    * rules. Knobs at 0 (the default) size from the corpus via
+    * [[nlistFor]]/[[nprobeFor]]/[[rerankFor]] — flat constants are
+    * the measured failure mode (a flat rerank collapses recall as
+    * cells grow; a flat nlist stops pruning as the corpus grows);
+    * positive pins the knob. Negative values are REJECTED — rerank =
+    * 0 used to mean "no rerank" in ivfpqTopK's vocabulary, and a
+    * stale caller passing a negative to disable reranking would get
+    * silent ADC-only results. ADC-only search is deliberately not
     * expressible through the router (its recall contract assumes the
-    * sized exact-rerank pool — the measured flat-rerank collapse);
-    * call [[ivfpqTopK]] with rerank = 0 directly for that. */
+    * sized exact-rerank pool); call [[ivfpqTopK]] with rerank = 0
+    * directly for that. */
   def annTopKAutoSized(queries: DataFrame, corpus: DataFrame,
                        idCol: String, vecCol: String, k: Int,
                        nlist: Int = 0, nprobe: Int = 0, m: Int = 8,
@@ -1369,8 +1295,9 @@ object Similarity {
     * probes, one survivor-set scan at probe width. Below
     * `recallFloor` the whole batch reroutes to the exact survivor
     * scan (`exact_filtered_fallback`) — correct by construction,
-    * costing what the over-fetch heuristic was failing to avoid. */
-  /** `pruneCells = true` COMPOSES the filtered router with the
+    * costing what the over-fetch heuristic was failing to avoid.
+    *
+    * `pruneCells = true` COMPOSES the filtered router with the
     * cell-partitioned layout (x123): the ANN branch routes through
     * [[ivfpqSearchPruned]], so the router's own WIDENED nprobe (the
     * 1/sel rule) becomes a partition filter and the filtered path
@@ -1404,85 +1331,15 @@ object Similarity {
                             pruneCells: Boolean = false,
                             cellBudget: Int = 0)
       : FilteredRoute = {
-    require(k > 0, s"annTopKFilteredRouted: k=$k")
-    require(bruteCutoff >= 0,
-      s"annTopKFilteredRouted: bruteCutoff=$bruteCutoff")
-    require(recallFloor >= 0.0d && recallFloor <= 1.0d,
-      s"annTopKFilteredRouted: recallFloor=$recallFloor")
-    val survivors = corpus.filter(pred)
-    val nSurv = survivors.count()
-    require(nSurv > 0, "annTopKFilteredRouted: the filter matches " +
-      "no corpus rows — top-k over an empty survivor set is " +
-      "undefined; widen the predicate")
-    if (nSurv <= bruteCutoff)
-      // exact by construction — recall 1.0 without measuring
-      FilteredRoute("exact_filtered", nSurv, 0, k, 1.0d,
-        bruteTopKL2(queries, survivors, idCol, vecCol, k))
-    else {
-      val n = corpus.count()
-      val sel = nSurv.toDouble / n.toDouble
-      val kPrime = overfetchFor(k, sel)
-      val np = math.min(nlist,
-        math.ceil(nprobeFor(nlist) / sel).toInt)
-      val rr = math.max(rerankFor(n, nlist, np), kPrime)
-      val meta = corpus.select(col(idCol).as("neighbor_id"),
-        pred.as("__keep"))
-      def annFiltered(qs: DataFrame)
-          : (Option[Array[Long]], Seq[Array[Long]], DataFrame) = {
-        val (cellsOpt, subCells, got) =
-          if (pruneCells && cellBudget > 0) {
-            // the composed production shape: the router's own
-            // 1/sel-widened nprobe is exactly the regime that
-            // saturates a single probe union (SCALE.md round-11's
-            // honest limit), so the ANN branch runs the
-            // probe-locality batched scans — each one opens ≤
-            // budget cell directories regardless of batch width
-            val (sub, g) = ivfpqSearchPrunedBatched(qs, idCol,
-              vecCol, encoded, cents, codebook, kPrime, np, m,
-              rerank = rr, rerankSource = Some(corpus),
-              cellBudget = cellBudget)
-            (Some(sub.flatten.distinct.sorted.toArray), sub, g)
-          } else if (pruneCells) {
-            val (cells, g) = ivfpqSearchPruned(qs, idCol, vecCol,
-              encoded, cents, codebook, kPrime, np, m, rerank = rr,
-              rerankSource = Some(corpus))
-            (Some(cells), Seq.empty[Array[Long]], g)
-          } else
-            (None, Seq.empty[Array[Long]],
-              ivfpqSearchEncoded(qs, idCol, vecCol, encoded,
-                cents, codebook, kPrime, np, m, rerank = rr,
-                rerankSource = Some(corpus)))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("approx_d2").asc, col("neighbor_id").asc)
-        (cellsOpt, subCells, got.join(meta, Seq("neighbor_id"))
-          .filter(col("__keep"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("rank"), col("neighbor_id"),
-            col("approx_d2")))
-      }
-      val probes = stratifiedProbes(queries, idCol, probeCap)
-        .localCheckpoint(true)
-      val exactProbe = bruteTopKL2(probes, survivors, idCol,
-        vecCol, k)
-      val hit = exactProbe.as("b")
-        .join(annFiltered(probes)._3.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)), count(col("l.neighbor_id")))
-        .head() // 1-row preflight decision (the advisor idiom)
-      val recallEst =
-        if (hit.getLong(0) == 0L) 1.0d
-        else hit.getLong(1).toDouble / hit.getLong(0).toDouble
-      if (recallEst >= recallFloor) {
-        val (cells, subCells, result) = annFiltered(queries)
-        FilteredRoute("ann_overfetch", nSurv, np, kPrime, recallEst,
-          result, cells,
-          cells.map(_.length.toDouble / nlist.toDouble), subCells)
-      } else
-        FilteredRoute("exact_filtered_fallback", nSurv, np, kPrime,
-          recallEst, bruteTopKL2(queries, survivors, idCol, vecCol, k))
-    }
+    // one shard at the caller's nlist: no bundle load, no cents count
+    val (r, np) = filteredRouteCore("annTopKFilteredRouted", queries,
+      corpus, idCol, vecCol, pred, k,
+      Seq(ShardIndex(cents, codebook, encoded, nlist)), m, bruteCutoff,
+      recallFloor, probeCap, pruneCells, cellBudget)
+    FilteredRoute(r.route, r.nSurvivors, np.headOption.getOrElse(0),
+      r.kPrime, r.recallPreflight, r.result, r.shardCells.headOption,
+      r.shardCellFrac.headOption,
+      r.shardSubbatchCells.headOption.getOrElse(Seq.empty))
   }
 
   /** [[FilteredRoute]] for the SHARDED estate: the route and the
@@ -1497,47 +1354,35 @@ object Similarity {
     * with `cellBudget` > 0) is shard s's per-sub-batch cell unions
     * under probe-locality batching — each of its scans opened ≤
     * budget directories even when its batch union saturates. */
-  final case class ShardedFilteredRoute(route: String,
-                                        nSurvivors: Long,
-                                        kPrime: Int,
-                                        recallPreflight: Double,
-                                        result: DataFrame,
-                                        shardNprobe: Seq[Int] = Seq.empty,
-                                        shardCells: Seq[Array[Long]] =
-                                          Seq.empty,
-                                        shardCellFrac: Seq[Double] =
-                                          Seq.empty,
-                                        shardSubbatchCells:
-                                          Seq[Seq[Array[Long]]] =
-                                          Seq.empty)
+  final case class ShardedFilteredRoute(
+      route: String, nSurvivors: Long, kPrime: Int,
+      recallPreflight: Double, result: DataFrame,
+      shardNprobe: Seq[Int] = Seq.empty,
+      shardCells: Seq[Array[Long]] = Seq.empty,
+      shardCellFrac: Seq[Double] = Seq.empty,
+      shardSubbatchCells: Seq[Seq[Array[Long]]] = Seq.empty)
 
   /** [[annTopKFilteredRouted]] composed with the SHARDED estate —
     * the production query shape ("nearest WHERE lang = 'en'") at the
     * scale sharding exists for (VERDICT r10 #1): above the cell
     * clamp (~268M vectors, [[annShardsFor]]) no single bundle can
-    * hold the index, so the filtered router must run per shard and
-    * merge. Composition, not new machinery:
+    * hold the index, so the filtered router runs per shard and
+    * merges — the same core as the single-bundle router, with one
+    * leg per shard ([[filteredRouteCore]]):
     *
     *  - The ROUTE decides ONCE for the whole batch, from the GLOBAL
-    *    survivor count (one metadata-pruned scan of `corpus` —
-    *    shards routing divergently would stitch exact rows to
-    *    over-fetched ANN rows with no single recall statement).
-    *  - EXACT branches are shard-free: the survivor set is one
-    *    brute scan either way.
-    *  - The ANN branch runs the filtered form per shard — each
-    *    shard's own widened nprobe (the 1/sel rule against ITS
-    *    nlist, read from its cents — shards are sized independently)
-    *    through [[ivfpqSearchPruned]] over its cell-layout bundle,
-    *    so every shard prunes FILES like x128 — then merges the
-    *    per-shard k′ candidate lists ([[ivfpqMergeTopK]] at k′: every
-    *    global candidate survives its shard's local k′ because local
-    *    rank ≤ global rank) and post-filters the MERGED list to the
-    *    top-k survivors.
-    *  - The PREFLIGHT measures recall on the MERGED plan — the exact
-    *    plan the batch will run, per-shard probes and all — vs the
-    *    exact filtered twin on the stratified probe sample; below
-    *    `recallFloor` the whole batch reroutes to the exact survivor
-    *    scan.
+    *    survivor count — shards routing divergently would stitch
+    *    exact rows to over-fetched ANN rows with no single recall
+    *    statement. EXACT branches are shard-free.
+    *  - The ANN branch probes each shard at its own widened nprobe
+    *    (the 1/sel rule against ITS nlist, read from its cents —
+    *    shards are sized independently) through
+    *    [[ivfpqSearchPruned]] over its cell-layout bundle, so every
+    *    shard prunes FILES like x128, then merges the per-shard k′
+    *    candidate lists ([[ivfpqMergeTopK]] at k′: every global
+    *    candidate survives its shard's local k′ because local rank ≤
+    *    global rank) and post-filters the MERGED list. The PREFLIGHT
+    *    measures recall on that merged plan.
     *
     * Per-shard rerank sizes against n/|shards| (the uniform
     * [[annShardKey]] split's expected occupancy) rather than
@@ -1571,73 +1416,110 @@ object Similarity {
       s"annTopKFilteredRoutedSharded: ${shardPaths.length} shard " +
         s"paths but ${versions.length} versions — the positional " +
         "contract needs one stamp per shard")
-    require(k > 0, s"annTopKFilteredRoutedSharded: k=$k")
-    require(recallFloor >= 0.0d && recallFloor <= 1.0d,
-      s"annTopKFilteredRoutedSharded: recallFloor=$recallFloor")
     val spark = corpus.sparkSession
-    val shards = shardPaths.length
+    // per-shard geometry from each shard's own bundle: nlist is the
+    // cents row count (ground truth, not a re-parse of the version
+    // stamp), tombstones are the shard's own
+    def loadShards = shardPaths.zip(versions).map { case (p, v) =>
+      val (cents, codebook, enc0) = loadIndexCellLayout(spark, p, v)
+      val nl = cents.count().toInt
+      ShardIndex(cents, codebook,
+        liveEncoded(enc0, annTombstones(spark, p)), nl)
+    }
+    val (r, np) = filteredRouteCore("annTopKFilteredRoutedSharded",
+      queries, corpus, idCol, vecCol, pred, k, loadShards, m,
+      bruteCutoff, recallFloor, probeCap, pruneCells = true,
+      cellBudget)
+    // the per-shard nprobes are witnesses of the probes that ran:
+    // surfaced on the ANN route only
+    if (r.route == "ann_overfetch") r.copy(shardNprobe = np) else r
+  }
+
+  /** One shard of the standing index as [[filteredRouteCore]] reads
+    * it: the definition, the live encoded state and its cell count. */
+  private final case class ShardIndex(cents: DataFrame,
+                                      codebook: DataFrame,
+                                      encoded: DataFrame, nlist: Int)
+
+  /** The ONE filtered-router core: a partition-local search per
+    * shard, then one global merge (REPOSE's shape). The single-bundle
+    * router is the one-shard case — no merge, so its plan is the
+    * one-leg plan. `shards` is by-name, forced only on the ANN-sized
+    * branches: the exact route never loads or counts an index. Each
+    * leg runs [[ivfpqSearchPrunedBatched]] (`pruneCells` with
+    * `cellBudget` > 0), [[ivfpqSearchPruned]] (`pruneCells`) or the
+    * unpruned [[ivfpqSearchEncoded]] (no cell witnesses). Returns
+    * the route with `shardNprobe` unset, plus the per-shard widened
+    * nprobe (empty on the exact branch) for each public router to
+    * report on the branches its contract names. */
+  private def filteredRouteCore(who: String, queries: DataFrame,
+                                corpus: DataFrame, idCol: String,
+                                vecCol: String, pred: Column, k: Int,
+                                shards: => Seq[ShardIndex], m: Int,
+                                bruteCutoff: Long, recallFloor: Double,
+                                probeCap: Int, pruneCells: Boolean,
+                                cellBudget: Int)
+      : (ShardedFilteredRoute, Seq[Int]) = {
+    require(k > 0, s"$who: k=$k")
+    require(bruteCutoff >= 0, s"$who: bruteCutoff=$bruteCutoff")
+    require(recallFloor >= 0.0d && recallFloor <= 1.0d,
+      s"$who: recallFloor=$recallFloor")
     val survivors = corpus.filter(pred)
     val nSurv = survivors.count()
-    require(nSurv > 0, "annTopKFilteredRoutedSharded: the filter " +
-      "matches no corpus rows — top-k over an empty survivor set " +
-      "is undefined; widen the predicate")
+    require(nSurv > 0, s"$who: the filter matches no corpus rows — " +
+      "top-k over an empty survivor set is undefined; widen the " +
+      "predicate")
     if (nSurv <= bruteCutoff)
-      ShardedFilteredRoute("exact_filtered", nSurv, k, 1.0d,
-        bruteTopKL2(queries, survivors, idCol, vecCol, k))
+      // exact by construction — recall 1.0 without measuring
+      (ShardedFilteredRoute("exact_filtered", nSurv, k, 1.0d,
+        bruteTopKL2(queries, survivors, idCol, vecCol, k)), Seq.empty)
     else {
       val n = corpus.count()
       val sel = nSurv.toDouble / n.toDouble
       val kPrime = overfetchFor(k, sel)
-      val nShard = math.max(1L, n / shards)
-      // per-shard geometry from each shard's own bundle: nlist is
-      // the cents row count (ground truth, not a re-parse of the
-      // version stamp), tombstones are the shard's own
-      val shardState = shardPaths.zip(versions).map { case (p, v) =>
-        val (cents, codebook, enc0) = loadIndexCellLayout(spark, p, v)
-        val nl = cents.count().toInt
-        val np = math.min(nl, math.ceil(nprobeFor(nl) / sel).toInt)
-        val rr = math.max(rerankFor(nShard, nl, np), kPrime)
-        (cents, codebook,
-          liveEncoded(enc0, annTombstones(spark, p)), nl, np, rr)
-      }
+      val st = shards
+      val nShard = math.max(1L, n / st.length)
+      val nps = st.map(s =>
+        math.min(s.nlist, math.ceil(nprobeFor(s.nlist) / sel).toInt))
       val meta = corpus.select(col(idCol).as("neighbor_id"),
         pred.as("__keep"))
       def annFiltered(qs: DataFrame)
-          : (Seq[Array[Long]], Seq[Seq[Array[Long]]], DataFrame) = {
-        val perShard = shardState.map {
-          case (cents, codebook, enc, _, np, rr) =>
-            if (cellBudget > 0) {
-              // composed production shape (see the single-bundle
-              // router): each shard's widened-nprobe scan runs
-              // probe-locality batched, ≤ budget directories per
-              // sub-batch scan
-              val (sub, g) = ivfpqSearchPrunedBatched(qs, idCol,
-                vecCol, enc, cents, codebook, kPrime, np, m,
-                rerank = rr, rerankSource = Some(corpus),
-                cellBudget = cellBudget)
-              (sub.flatten.distinct.sorted.toArray, sub, g)
-            } else {
-              val (cells, g) = ivfpqSearchPruned(qs, idCol, vecCol,
-                enc, cents, codebook, kPrime, np, m, rerank = rr,
-                rerankSource = Some(corpus))
-              (cells, Seq.empty[Array[Long]], g)
-            }
+          : (Seq[Option[Array[Long]]], Seq[Seq[Array[Long]]],
+            DataFrame) = {
+        val perShard = st.zip(nps).map { case (s, np) =>
+          val rr = math.max(rerankFor(nShard, s.nlist, np), kPrime)
+          if (pruneCells && cellBudget > 0) {
+            // the composed production shape: the 1/sel-widened nprobe
+            // is exactly the regime that saturates a single probe
+            // union (SCALE.md round-11's honest limit), so the leg
+            // runs the probe-locality batched scans — each one opens
+            // ≤ budget cell directories regardless of batch width
+            val (sub, g) = ivfpqSearchPrunedBatched(qs, idCol, vecCol,
+              s.encoded, s.cents, s.codebook, kPrime, np, m,
+              rerank = rr, rerankSource = Some(corpus),
+              cellBudget = cellBudget)
+            (Some(sub.flatten.distinct.sorted.toArray), sub, g)
+          } else if (pruneCells) {
+            val (cells, g) = ivfpqSearchPruned(qs, idCol, vecCol,
+              s.encoded, s.cents, s.codebook, kPrime, np, m,
+              rerank = rr, rerankSource = Some(corpus))
+            (Some(cells), Seq.empty[Array[Long]], g)
+          } else
+            (None, Seq.empty[Array[Long]],
+              ivfpqSearchEncoded(qs, idCol, vecCol, s.encoded, s.cents,
+                s.codebook, kPrime, np, m, rerank = rr,
+                rerankSource = Some(corpus)))
         }
-        val mergedK = ivfpqMergeTopK(perShard.map(_._3), kPrime)
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("approx_d2").asc, col("neighbor_id").asc)
-        (perShard.map(_._1), perShard.map(_._2),
-          mergedK.join(meta, Seq("neighbor_id"))
-            .filter(col("__keep"))
-            .withColumn("rank", row_number().over(w))
-            .filter(col("rank") <= k)
-            .select(col("query_id"), col("rank"),
-              col("neighbor_id"), col("approx_d2")))
+        val merged =
+          if (perShard.length == 1) perShard.head._3
+          else ivfpqMergeTopK(perShard.map(_._3), kPrime)
+        (perShard.map(_._1), perShard.map(_._2), l2TopK(
+          merged.join(meta, Seq("neighbor_id")).filter(col("__keep")),
+          "approx_d2", k))
       }
       val probes = stratifiedProbes(queries, idCol, probeCap)
         .localCheckpoint(true)
-      val exactProbe = bruteTopKL2(probes, survivors, idCol,
-        vecCol, k)
+      val exactProbe = bruteTopKL2(probes, survivors, idCol, vecCol, k)
       val hit = exactProbe.as("b")
         .join(annFiltered(probes)._3.as("l"),
           col("b.query_id") === col("l.query_id") &&
@@ -1649,17 +1531,19 @@ object Similarity {
         else hit.getLong(1).toDouble / hit.getLong(0).toDouble
       if (recallEst >= recallFloor) {
         val (cells, subCells, result) = annFiltered(queries)
-        ShardedFilteredRoute("ann_overfetch", nSurv, kPrime,
-          recallEst, result, shardState.map(_._5), cells,
-          // per-shard degeneracy witness: cells probed / the
-          // shard's own nlist (VERDICT r11 wrong #3)
-          cells.zip(shardState).map { case (cs, st) =>
-            cs.length.toDouble / st._4.toDouble },
-          if (cellBudget > 0) subCells else Seq.empty)
+        val pruned = cells.flatten
+        (ShardedFilteredRoute("ann_overfetch", nSurv, kPrime, recallEst,
+          result, Seq.empty, pruned,
+          // per-shard degeneracy witness: cells probed / the shard's
+          // own nlist (VERDICT r11 wrong #3)
+          pruned.zip(st).map { case (cs, s) =>
+            cs.length.toDouble / s.nlist.toDouble },
+          if (pruneCells && cellBudget > 0) subCells else Seq.empty),
+          nps)
       } else
-        ShardedFilteredRoute("exact_filtered_fallback", nSurv,
-          kPrime, recallEst,
-          bruteTopKL2(queries, survivors, idCol, vecCol, k))
+        (ShardedFilteredRoute("exact_filtered_fallback", nSurv, kPrime,
+          recallEst, bruteTopKL2(queries, survivors, idCol, vecCol, k)),
+          nps)
     }
   }
 
@@ -1760,27 +1644,17 @@ object Similarity {
       encoded.withColumn("cell", col("cell").cast(LongType)))
   }
 
-  /** The DISTINCT cells a query batch will probe — the partition-
-    * pruning predicate's value list, computed by the SAME
-    * [[probeAssign]] ranking the ADC tail uses (witnessed, not
-    * re-derived). Driver-grain by design: ≤ |queries|·nprobe longs,
-    * the 1-row advisor-decision idiom widened to a pruning list —
-    * a query BATCH is thousands of rows, never corpus-grain. */
-  def probedCellIds(queries: DataFrame, idCol: String, vecCol: String,
-                    cents: DataFrame, nprobe: Int): Array[Long] =
-    probeAssign(queries, idCol, vecCol, cents, nprobe)
-      .select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-
   /** [[ivfpqSearchEncoded]] over a cell-layout ledger with the probe
     * set pushed down as a PARTITION FILTER: collect the batch's
-    * probed cells ([[probedCellIds]]), restrict the encoded scan to
-    * those directories, search as usual. EQUAL to the unpruned
-    * search by construction — the ADC join never matches rows
-    * outside probed cells anyway (Round17Spec pins the row equality;
-    * x123 pins files-read == cells-probed) — the pruning changes
-    * what is READ, not what is scored. Returns (probedCells, result)
-    * so consumers can witness the pruning that actually happened.
+    * probed cells, restrict the encoded scan to those directories,
+    * search as usual — [[ivfpqSearchPrunedBatched]] with an unbounded
+    * budget (one sub-batch; an empty batch returns no rows). EQUAL to
+    * the unpruned search by construction — the ADC join never
+    * matches rows outside probed cells anyway (Round17Spec pins the
+    * row equality; x123 pins files-read == cells-probed) — the
+    * pruning changes what is READ, not what is scored. Returns
+    * (probedCells, result) so consumers can witness the pruning that
+    * actually happened.
     *
     * FILE-PRUNING CONTRACT (the 200k-rehearsal honest limit,
     * SCALE.md round-11): the probe UNION grows with the batch —
@@ -1799,11 +1673,10 @@ object Similarity {
                         rerank: Int = 0,
                         rerankSource: Option[DataFrame] = None)
       : (Array[Long], DataFrame) = {
-    val cells = probedCellIds(queries, idCol, vecCol, cents, nprobe)
-    val pruned = encodedCellLayout
-      .filter(col("cell").isInCollection(cells))
-    (cells, ivfpqSearchEncoded(queries, idCol, vecCol, pruned, cents,
-      codebook, k, nprobe, m, rerank, rerankSource))
+    val (unions, result) = prunedSubBatches(queries, idCol, vecCol,
+      encodedCellLayout, cents, codebook, k, nprobe, m, rerank,
+      rerankSource, Int.MaxValue)
+    (unions.head, result)
   }
 
   /** PROBE-LOCALITY BATCHING for the pruned search — the executable
@@ -1878,9 +1751,32 @@ object Similarity {
     val budget =
       if (cellBudget > 0) cellBudget
       else math.max(nprobe, (cents.count() / 8L).toInt)
+    val (unions, result) = prunedSubBatches(queries, idCol, vecCol,
+      encodedCellLayout, cents, codebook, k, nprobe, m, rerank,
+      rerankSource, budget)
+    require(unions.head.nonEmpty,
+      "ivfpqSearchPrunedBatched: empty query batch — nothing to " +
+        "pack; top-k over no queries is undefined")
+    (unions, result)
+  }
+
+  /** The pruned search under a RESOLVED cell budget — the one probe
+    * collect and sub-batch plan behind [[ivfpqSearchPruned]]
+    * (unbounded budget: one sub-batch) and
+    * [[ivfpqSearchPrunedBatched]]. Returns (per-sub-batch cell
+    * unions, result); an empty batch gives one empty union and an
+    * empty result. */
+  private def prunedSubBatches(queries: DataFrame, idCol: String,
+                               vecCol: String,
+                               encodedCellLayout: DataFrame,
+                               cents: DataFrame, codebook: DataFrame,
+                               k: Int, nprobe: Int, m: Int,
+                               rerank: Int,
+                               rerankSource: Option[DataFrame],
+                               budget: Int)
+      : (Seq[Array[Long]], DataFrame) = {
     // one driver-grain probe assignment for the whole batch —
-    // ≤ |batch|·nprobe (query_id, cell) pairs, the probedCellIds
-    // idiom widened to per-query lists
+    // ≤ |batch|·nprobe (query_id, cell) pairs
     val perQuery: Seq[(Long, Seq[Long])] =
       probeAssign(queries, idCol, vecCol, cents, nprobe)
         .select(col("query_id"), col("cell")).collect()
@@ -1888,9 +1784,6 @@ object Similarity {
         .map { case (q, rs) =>
           (q, rs.map(_.getLong(1)).distinct.sorted.toSeq)
         }.toSeq
-    require(perQuery.nonEmpty,
-      "ivfpqSearchPrunedBatched: empty query batch — nothing to " +
-        "pack; top-k over no queries is undefined")
     import scala.math.Ordering.Implicits.seqOrdering
     val ordered = perQuery.sortBy { case (q, cs) => (cs, q) }
     // greedy sequential packing under the union budget
@@ -1907,6 +1800,9 @@ object Similarity {
       } else packed += ((scala.collection.mutable.ArrayBuffer(q),
         scala.collection.mutable.SortedSet(cs: _*)))
     }
+    if (packed.isEmpty)
+      packed += ((scala.collection.mutable.ArrayBuffer.empty[Long],
+        scala.collection.mutable.SortedSet.empty[Long]))
     // each sub-batch leg is ADC-ONLY over its own pruned scan; the
     // rank/rerank tail runs ONCE over the unioned scores instead of
     // once per sub-batch (round 13): every query lives in exactly one
@@ -1916,7 +1812,10 @@ object Similarity {
     // batched route's job count dominated by the per-leg tails)
     val subResults = packed.toSeq.map { case (qids, union) =>
       val cells = union.toArray
-      val qsub = queries.filter(col(idCol).isInCollection(qids))
+      // a lone sub-batch holds every query: no query-id filter
+      val qsub =
+        if (packed.length == 1) queries
+        else queries.filter(col(idCol).isInCollection(qids))
       val pruned = encodedCellLayout
         .filter(col("cell").isInCollection(cells))
       (cells, ivfpqAdc(qsub, idCol, vecCol, pruned, cents,
@@ -2250,7 +2149,7 @@ object Similarity {
     *      filter on the batch-partitioned ingest layout — the read
     *      side prunes too);
     *   2. touched = the distinct cells those rows land in (driver
-    *      list, ≤ nlist longs — the probedCellIds idiom);
+    *      list, ≤ nlist longs — the pruned search's probe-collect idiom);
     *   3. merged = bundle's touched-cell rows ∪ new rows, key-deduped
     *      on (cell, neighbor_id, sub) — deterministic encode makes
     *      replayed rows byte-identical, so a stale/lost watermark
@@ -2782,7 +2681,7 @@ object Similarity {
              + (pmod(xxhash64(vec_id, d, 7), 41) - 20) * 0.001
              AS FLOAT))""").as("embedding"))
 
-  /** [[annTopKAuto]]'s deterministic stratified probe sample: one
+  /** [[annTopKAutoSized]]'s deterministic stratified probe sample: one
     * query per xxhash64(id) bucket, smallest id winning its bucket —
     * ≤ probeCap rows, reproducible on any engine/cluster, and spread
     * across the id space no matter how ids were assigned. */
@@ -2857,7 +2756,7 @@ object Similarity {
     * — the [[bruteTopK]] idiom, no corpus shuffle) feeds both rank
     * directions as two window passes; every downstream aggregate is
     * k-bounded. At 100 TB the pair relation is replaced by the ANN
-    * stack's top-k tables ([[annTopKAuto]] in both directions — the
+    * stack's top-k tables ([[annTopKAutoSized]] in both directions — the
     * x59 "consumes any top-k table" discipline); margins, mutuality,
     * and acceptance read only those k·|A|+k·|B| rows. Determinism:
     * ranks order by round(cos,4) with id tiebreaks, and the margin
@@ -2898,7 +2797,7 @@ object Similarity {
 
   /** x96's 100 TB form: the same margin/mutual/accept algebra fed by
     * PRE-COMPUTED top-k tables from the ANN stack ([[bruteTopK]],
-    * [[annTopKAuto]], IVFPQ — anything emitting (query_id, rank,
+    * [[annTopKAutoSized]], IVFPQ — anything emitting (query_id, rank,
     * neighbor_id, cos_sim)), run once in each direction. Only
     * k·|A| + k·|B| rows ever reach this function — candidate
     * generation is the index's job. The incoming ranks are NOT

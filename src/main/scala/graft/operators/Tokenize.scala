@@ -104,7 +104,7 @@ object Tokenize {
     * recount ([[bpeTrainFullRecount]] stays as the reference
     * implementation the invariance spec replays against).
     *
-    * MEASURED-ROUTE dispatch (the joinAuto/annTopKAuto discipline):
+    * MEASURED-ROUTE dispatch (the joinAuto/annTopKAutoSized discipline):
     * below [[bpeIncrementalMinTypes]] word types the recount wins —
     * the incremental round's extra jobs (argmax off standing counts,
     * affected checkpoint, delta fold) are pure overhead when the

@@ -10,6 +10,24 @@ class EntrySmokeSpec extends GraftSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("bench JSON line keeps its keys, order and number format") {
+    val sfx = Seq("", "_llm", "_r4", "_r5", "_r6", "_r6b", "_r7", "_r8",
+      "_r9", "_r10", "_r11", "_r12")
+    // one query per set; the headline set also has a failed query,
+    // which is listed but left out of the total
+    val rs = sfx.zipWithIndex.map { case (s, i) =>
+      s -> (Seq(s"q$i" -> (i + 0.25)) ++
+        (if (i == 0) Seq("bad" -> -1.0) else Nil))
+    }
+    def q(i: Int) = f"""{"q$i":${i + 0.25}%.3f}"""
+    def set(i: Int) =
+      f""""value${sfx(i)}":${i + 0.25}%.3f,"queries${sfx(i)}":${q(i)}"""
+    val expected = """{"metric":"total","value":0.250,"unit":"sec",""" +
+      """"n":4,"n_lifecycle":2,"queries":{"q0":0.250,"bad":-1.000},""" +
+      (1 until sfx.length).map(set).mkString(",") + ""","sf":"/sf"}"""
+    assert(Bench.jsonLine("/sf", 4, 2, rs) === expected)
+  }
+
   test("every oracle key has a query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracleSql without queries: $missing")

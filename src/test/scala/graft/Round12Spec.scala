@@ -162,7 +162,8 @@ class Round12Spec extends GraftSuite {
       spark.read.parquet(s"${SparkTestBase.sfDir}/embeddings.parquet")
     val q = emb.filter($"vec_id" < 10)
     // not prunable ⇒ the routed result IS the exact scan, row for row
-    val auto = Similarity.annTopKAuto(q, emb, "vec_id", "embedding", 5)
+    val auto = Similarity.annTopKAutoSized(q, emb, "vec_id",
+      "embedding", 5).result
     val brute = Similarity.bruteTopKL2(q, emb, "vec_id", "embedding", 5)
     assert(auto.exceptAll(brute).isEmpty && brute.exceptAll(auto).isEmpty,
       "non-prunable corpus must route to the exact scan")
@@ -170,8 +171,9 @@ class Round12Spec extends GraftSuite {
     val blobs = blobCorpus()
     val bq = blobs.filter($"vec_id" < 5)
     assert(Similarity.annPrunable(blobs, bq, "vec_id", "embedding"))
-    val annb = Similarity.annTopKAuto(bq, blobs, "vec_id", "embedding",
-      5, nlist = 3, nprobe = 1, m = 8, ksub = 8, rerank = 20)
+    val annb = Similarity.annTopKAutoSized(bq, blobs, "vec_id",
+      "embedding", 5, nlist = 3, nprobe = 1, m = 8, ksub = 8,
+      rerank = 20).result
     val bruteb = Similarity.bruteTopKL2(bq, blobs, "vec_id",
       "embedding", 5)
     val hits = bruteb.as("b").join(annb.as("l"),

@@ -230,7 +230,8 @@ class Round14Spec extends GraftSuite {
        "after the probe-sampling change") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val q = emb.filter(col("vec_id") < 10)
-    val auto = Similarity.annTopKAuto(q, emb, "vec_id", "embedding", 5)
+    val auto = Similarity.annTopKAutoSized(q, emb, "vec_id",
+      "embedding", 5).result
     val brute = Similarity.bruteTopKL2(q, emb, "vec_id", "embedding", 5)
     assert(auto.exceptAll(brute).isEmpty &&
       brute.exceptAll(auto).isEmpty,

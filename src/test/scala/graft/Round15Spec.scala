@@ -68,8 +68,9 @@ class Round15Spec extends GraftSuite {
       .localCheckpoint(true)
     // no knobs: nlist/nprobe/rerank all sized from the corpus —
     // the exact call a production caller makes
-    val (route, routed) = Similarity.annTopKAutoRouted(q, lake,
-      "vec_id", "embedding", k)
+    val r = Similarity.annTopKAutoSized(q, lake, "vec_id",
+      "embedding", k)
+    val (route, routed) = (r.route, r.result)
     assert(route === "ivfpq")
     val exact = Similarity.bruteTopKL2(q, lake, "vec_id", "embedding",
       k).localCheckpoint(true)

@@ -118,6 +118,14 @@ class Round19Spec extends GraftSuite {
     val exact = Similarity.bruteTopKL2(q,
       lake.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", k)
     assert(rowsEqual(r.result, exact))
+    // a negative cutoff is rejected like the single-bundle router's,
+    // not silently read as "always ANN"
+    val neg = intercept[IllegalArgumentException] {
+      Similarity.annTopKFilteredRoutedSharded(q, lake, "vec_id",
+        "embedding", col("vec_id") % 2 === 0, k,
+        built.map(_._1), built.map(_._2), m, bruteCutoff = -1L)
+    }
+    assert(neg.getMessage.contains("bruteCutoff=-1"))
   }
 
   // --------------------------------- console: one collect per poll

@@ -153,6 +153,60 @@ class Round20Spec extends GraftSuite {
     assert(rowsEqual(rb.result, r0.result))
   }
 
+  test("the one-shard filtered router and the pruned search fire no " +
+       "more Spark jobs than their pre-merge forms (no sharded " +
+       "cents.count() on the one-bundle path)") {
+    val n = 2000L; val nlist = 64; val nprobe = 8; val k = 5; val m = 8
+    val (lake0, p, v) = bundleOf(n, nlist, m, 16, "r20_jobpin")
+    val lake = lake0
+      .withColumn("h4", pmod(xxhash64(col("vec_id")), lit(4L)))
+      .localCheckpoint(true)
+    val (cents, codebook, enc) =
+      Similarity.loadIndexCellLayout(spark, p, v)
+    val q = Similarity.stratifiedProbes(lake, "vec_id", 4)
+      .drop("h4").localCheckpoint(true)
+    // AQE off so one action is one job plus its broadcasts (the
+    // console-poll pattern); counted per job group
+    def jobsOf[T](group: String)(body: => T): (T, Int) = {
+      val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val out = try {
+        spark.sparkContext.setJobGroup(group, group,
+          interruptOnCancel = false)
+        body
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      }
+      (out, spark.sparkContext.statusTracker
+        .getJobIdsForGroup(group).length)
+    }
+    val (routed, routeJobs) = jobsOf("r20_jobs_route") {
+      Similarity.annTopKFilteredRouted(q, lake, "vec_id", "embedding",
+        col("h4") < 2, k, enc, cents, codebook, nlist, m,
+        bruteCutoff = 0L, pruneCells = true)
+    }
+    assert(routed.route === "ann_overfetch")
+    val (_, routeCollectJobs) = jobsOf("r20_jobs_route_collect") {
+      routed.result.collect()
+    }
+    val ((_, pruned), prunedJobs) = jobsOf("r20_jobs_pruned") {
+      Similarity.ivfpqSearchPruned(q, "vec_id", "embedding", enc,
+        cents, codebook, k, nprobe, m)
+    }
+    val (_, prunedCollectJobs) = jobsOf("r20_jobs_pruned_collect") {
+      pruned.collect()
+    }
+    val got = s"route=$routeJobs route_collect=$routeCollectJobs " +
+      s"pruned=$prunedJobs pruned_collect=$prunedCollectJobs"
+    // ceilings: the counts measured on the separate single-bundle
+    // router and pruned search before they shared the sharded core
+    assert(routeJobs <= 16, s"router construction: $got")
+    assert(routeCollectJobs <= 8, s"router result: $got")
+    assert(prunedJobs <= 2, s"pruned construction: $got")
+    assert(prunedCollectJobs <= 5, s"pruned result: $got")
+  }
+
   // --------------------------------------- estate re-shard lifecycle
 
   test("reshardAdvice: the published crossovers at the default " +
