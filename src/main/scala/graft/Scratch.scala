@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.AnnQueries
+
 /** Dev scratchpad (not part of the driver contract): time named
   * SparkEntry queries — `tools/run.sh graft.Scratch <sfDir> q1,q2` —
   * with the same noop-sink + min-of-2 protocol as Bench. */
@@ -29,22 +31,6 @@ object Scratch {
       dt
     }
     names.foreach {
-      case "recall_x2" =>
-        // LSH candidate recall vs the exact inverted-index pairs — run
-        // after any change to the minhash/band hashing (the x2 oracle
-        // is exact Jaccard, so the LSH must find every pair here)
-        import org.apache.spark.sql.functions.col
-        val docs = Tables.load(spark, sfDir, "documents")
-        val lsh = graft.operators.Dedup
-          .minhashPairs(docs, col("doc_id"), col("text"), 0.8)
-          .select("id_a", "id_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val exact = graft.operators.Dedup
-          .ngramJaccardPairs(docs, col("doc_id"), col("text"), 0.8)
-          .select("id_a", "id_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        println(s"recall_x2: lsh=${lsh.size} exact=${exact.size} " +
-          s"missed=${(exact -- lsh).size} extra=${(lsh -- exact).size}")
       case "pq_recall" =>
         // sweep PQ operating points: macro recall@5 vs exact L2 top-k
         import org.apache.spark.sql.functions.{avg, col, count, lit}
@@ -81,17 +67,17 @@ object Scratch {
           println(f"$tag%-28s min=${ts.min}%.3f  (${ts.mkString(", ")})")
         }
         t2("preflight_upper_bound") {
-          SparkEntry.thetaPreflightUpperBound(spark, sfDir); ()
+          AnnQueries.thetaPreflightUpperBound(spark, sfDir); ()
         }
-        val upper = SparkEntry.thetaPreflightUpperBound(spark, sfDir)
+        val upper = AnnQueries.thetaPreflightUpperBound(spark, sfDir)
         val sized = SketchFns.lgkFor(1600, upper)
         println(s"upper=$upper sized lgk=$sized")
         t2(s"screen_lgk14") {
-          SparkEntry.thetaOverlapScreen(spark, sfDir, 14)
+          AnnQueries.thetaOverlapScreen(spark, sfDir, 14)
             .write.format("noop").mode("overwrite").save()
         }
         t2(s"screen_lgk$sized") {
-          SparkEntry.thetaOverlapScreen(spark, sfDir, sized)
+          AnnQueries.thetaOverlapScreen(spark, sfDir, sized)
             .write.format("noop").mode("overwrite").save()
         }
       case "ivfpq_sweep" =>
@@ -349,59 +335,6 @@ object Scratch {
           f"probed=${100.0 * nprobe / nlist}%.1f%% wall=$dt%.2f s " +
           s"(includes the preflight; nlist=$nlist nprobe=$nprobe " +
           s"rerank=$rerank m=$m ksub=$ksub)")
-      case "refine_sweep" =>
-        // the sub-linear rerank frontier (verdict-8 ask #3): measure
-        // the two-stage refine (ADC rank -> SQ8 refine the pool ->
-        // exact top-c, c independent of n) against the single-stage
-        // exact rerank of the full rerankFor pool, on the clustered
-        // lake at the sized operating point. The decisive metric is
-        // RECALL at an n-INDEPENDENT refineTo: if c=200 holds >= 0.94
-        // at both 20k and 200k, the expensive full-vector stage
-        // becomes O(c) per query; wall times here are in-memory and
-        // only sanity-check the plan shape. CLUSTERED_N overrides n.
-        import org.apache.spark.sql.functions._
-        import graft.operators.Similarity
-        val n = sys.env.getOrElse("CLUSTERED_N", "20000").toLong
-        val nl = Similarity.nlistFor(n)
-        val np = Similarity.nprobeFor(nl)
-        val pool = Similarity.rerankFor(n, nl, np)
-        val lake = Similarity.hashBlobLake(spark, n).localCheckpoint()
-        val q = Similarity.stratifiedProbes(lake, "vec_id", 16)
-          .localCheckpoint()
-        val tb = System.nanoTime()
-        val (cents0, cb0) = Similarity.ivfpqTrain(lake, "vec_id",
-          "embedding", nl, 8, 16, coarseIters = 1, pqIters = 1)
-        val cents = cents0.localCheckpoint()
-        val cb = cb0.localCheckpoint()
-        val enc = Similarity.ivfpqEncode(lake, "vec_id", "embedding",
-          cents, cb, 8).localCheckpoint()
-        println(f"build: n=$n nlist=$nl nprobe=$np pool=$pool " +
-          f"wall=${(System.nanoTime() - tb) / 1e9}%.1f s")
-        val exact = Similarity.bruteTopKL2(q, lake, "vec_id",
-          "embedding", 5).localCheckpoint()
-        val denom = exact.count().toDouble
-        def run(tag: String)(mk: => org.apache.spark.sql.DataFrame)
-            : Unit = {
-          mk.write.format("noop").mode("overwrite").save() // warm
-          val t0 = System.nanoTime()
-          val res = mk.localCheckpoint()
-          val dt = (System.nanoTime() - t0) / 1e9
-          val hits = exact.as("b").join(res.as("l"),
-            col("b.query_id") === col("l.query_id") &&
-              col("b.neighbor_id") === col("l.neighbor_id")).count()
-          println(f"$tag recall=${hits / denom}%.3f wall=$dt%.2f s")
-          spark.catalog.clearCache()
-        }
-        run(s"single-stage exact-rerank pool=$pool") {
-          Similarity.ivfpqSearchEncoded(q, "vec_id", "embedding", enc,
-            cents, cb, 5, np, 8, pool, Some(lake))
-        }
-        for (c <- Seq(50, 100, 200, 400)) {
-          run(s"two-stage pool=$pool refineTo=$c") {
-            Similarity.ivfpqSearchRefined(q, "vec_id", "embedding",
-              enc, cents, cb, 5, np, 8, pool, c, lake)
-          }
-        }
       case "refined_cold" =>
         // verdict-9 ask #5: the two-stage refined tail measured in
         // ITS OWN claimed regime — the rerank source is a PARQUET
@@ -485,8 +418,8 @@ object Scratch {
         // the above-clamp sharding seam MEASURED (verdict-8 ask #2):
         // the 200k clustered lake split 2x100k by annShardKey, each
         // shard built at its own sized geometry, searched, and merged
-        // — against the single-index 200k row (refine_sweep's build:
-        // 168.9 s, search 4.47 s, recall 1.000). The claims under
+        // — against the single-index 200k row (build 168.9 s,
+        // search 4.47 s, recall 1.000). The claims under
         // measure: merged recall identical, and per-shard build wall
         // ~ half the single build (shards build in PARALLEL on a
         // cluster, so the critical path is max(shard walls)).
@@ -628,87 +561,6 @@ object Scratch {
           f"wall=${(System.nanoTime() - t3) / 1e9}%.1f s " +
           f"(vs sharded $routeWall%.1f s)")
 
-      case "batched_pruned_rehearsal" =>
-        // x139/x141's claims at the rehearsal grain (round-12): the
-        // 200k cell-layout bundle (nlist 2048) under the EXACT
-        // round-11 honest-limit shape — 16 stratified probes at the
-        // 1/sel-widened nprobe (~514) unioned to ~2039/2048 cells —
-        // measured three ways: (a) the unbatched pruned route
-        // (saturated baseline), (b) batched with a SPREAD query
-        // batch (stratified — no locality: expect ~singleton
-        // sub-batches, amplification ~|batch|), (c) batched with a
-        // CORRELATED batch (4 queries x 4 clusters — the production
-        // norm: expect ~1 sub-batch per cluster, amplification
-        // near 1). Wall, per-scan width, amplification, and row
-        // equality all printed; SCALE.md records the outcome.
-        import org.apache.spark.sql.functions._
-        import graft.operators.Similarity
-        val n = sys.env.getOrElse("CLUSTERED_N", "200000").toLong
-        val lake = Similarity.hashBlobLake(spark, n)
-          .withColumn("h4", pmod(xxhash64(col("vec_id")), lit(4L)))
-          .localCheckpoint()
-        val pred = col("h4") < 2
-        val nl = Similarity.nlistFor(n)
-        val v = Similarity.annIndexVersion(nl, 8, 16)
-        val p = "target/qtmp/bpr_single"
-        if (!Similarity.indexExists(spark, p, v)) {
-          val t0 = System.nanoTime()
-          val (c0, cb0) = Similarity.ivfpqTrain(lake.drop("h4"),
-            "vec_id", "embedding", nl, 8, 16,
-            coarseIters = 1, pqIters = 1)
-          Similarity.persistIndexCellLayout(p, v, c0, cb0,
-            Similarity.ivfpqEncode(lake.drop("h4"), "vec_id",
-              "embedding", c0, cb0, 8))
-          println(f"bundle: nlist=$nl " +
-            f"build+persist=${(System.nanoTime() - t0) / 1e9}%.1f s")
-        }
-        val (cents, codebook, enc0) =
-          Similarity.loadIndexCellLayout(spark, p, v)
-        val enc = Similarity.liveEncoded(enc0,
-          Similarity.annTombstones(spark, p))
-        val sel = lake.filter(pred).count().toDouble / n
-        val np = math.min(nl,
-          math.ceil(Similarity.nprobeFor(nl) / sel).toInt)
-        val k = 5
-        val rr = math.max(Similarity.rerankFor(n, nl, np),
-          Similarity.overfetchFor(k, sel))
-        val kP = Similarity.overfetchFor(k, sel)
-        def run(tag: String, q: org.apache.spark.sql.DataFrame,
-                budget: Int): Unit = {
-          val t = System.nanoTime()
-          val (sub, got) =
-            if (budget > 0)
-              Similarity.ivfpqSearchPrunedBatched(q, "vec_id",
-                "embedding", enc, cents, codebook, kP, np, 8,
-                rerank = rr, rerankSource = Some(lake.drop("h4")),
-                cellBudget = budget)
-            else {
-              val (c, g) = Similarity.ivfpqSearchPruned(q, "vec_id",
-                "embedding", enc, cents, codebook, kP, np, 8,
-                rerank = rr, rerankSource = Some(lake.drop("h4")))
-              (Seq(c), g)
-            }
-          got.write.format("noop").mode("overwrite").save()
-          val wall = (System.nanoTime() - t) / 1e9
-          val union = sub.flatten.distinct.length
-          val opens = sub.map(_.length).sum
-          println(f"$tag: nq=${q.count()} np=$np budget=$budget " +
-            f"subbatches=${sub.length} " +
-            f"maxcells=${sub.map(_.length).max} union=$union/$nl " +
-            f"amplification=${opens.toDouble / union}%.2f " +
-            f"wall=$wall%.1f s")
-        }
-        val qSpread = Similarity.stratifiedProbes(lake, "vec_id", 16)
-          .drop("h4").localCheckpoint()
-        // correlated: 4 queries from each of 4 clusters (cluster =
-        // id mod 64 at any n by the lake recipe)
-        val qLocal = lake.filter(pmod(col("vec_id"), lit(64L)) < 4 &&
-          col("vec_id") < 256).drop("h4").localCheckpoint()
-        run("unbatched/spread", qSpread, 0)
-        run("batched/spread", qSpread, np + 128)
-        run("unbatched/local", qLocal, 0)
-        run("batched/local", qLocal, np + 128)
-
       case "bpe_incr_sweep" =>
         // incremental vs full-recount BPE on a LARGE crafted type
         // table (verdict-7 ask #2's measured row): the 31-type driver
@@ -795,31 +647,6 @@ object Scratch {
         // pin, re-checked where the barriers actually fire)
         val b = timeEnc(s"chunk=${chunk * 2}", chunk * 2)
         require(a == b, s"chunking changed the encode: $a vs $b")
-      case "bpe_incr_rounds" =>
-        // per-round timing of the incremental trainer — find where
-        // cost concentrates as merges accumulate
-        import org.apache.spark.sql.functions._
-        val nTypes = sys.env.getOrElse("BPE_TYPES", "200000").toInt
-        val nMerges = sys.env.getOrElse("BPE_MERGES", "30").toInt
-        val wLen = sys.env.getOrElse("BPE_WLEN", "12").toInt
-        val words = spark.range(nTypes.toLong)
-          .select(substring(md5(col("id").cast("string")), 1, wLen)
-            .as("word"),
-            (lit(1L) + pmod(col("id"), lit(97L))).as("freq"))
-          .groupBy(col("word")).agg(max(col("freq")).as("freq"))
-          .localCheckpoint()
-        var (sy, pc, tk) = graft.operators.Tokenize.bpeInitState(words)
-        for (r <- 1 to nMerges) {
-          val t0 = System.nanoTime()
-          val (s2, p2, t2, row, aff) =
-            graft.operators.Tokenize.bpeRound(sy, pc, tk, r)
-          val nAff = aff.count()
-          val nPc = p2.count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          sy = s2; pc = p2; tk = t2
-          println(f"round $r%2d  $dt%6.2f s  aff=$nAff%7d pairs=$nPc%6d " +
-            s"won=${row.collect()(0).getString(1)}")
-        }
       case "compact_rehearsal" =>
         // delete-lifecycle at the 200k decade: build+persist the
         // sized standing index once (exists-guarded — rerun cheap),

@@ -38,6 +38,32 @@ class EntrySmokeSpec extends GraftSuite {
     assert(missing.isEmpty, s"queries without oracleSql: $missing")
   }
 
+  test("registry: 335 distinct names, both maps keyed by them, no blank oracle") {
+    // a Map literal silently keeps the last of two equal keys; the
+    // registry is a Seq, so a lost or duplicated entry shows here
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size === 335)
+    assert(names.distinct.size === names.size)
+    assert(SparkEntry.queries.keySet === names.toSet)
+    assert(SparkEntry.oracleSql.keySet === names.toSet)
+    val blank = SparkEntry.registry.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"blank oracles: $blank")
+  }
+
+  test("every Bench set member is a registered query") {
+    // an unknown name times as -1.0 and diverts the pin to the
+    // partial file, so a typo in a set must fail here instead
+    val sets = Seq("headline" -> Bench.headline, "llm10" -> Bench.llm10,
+      "r4new" -> Bench.r4new, "r5new" -> Bench.r5new,
+      "r6new" -> Bench.r6new, "r6bnew" -> Bench.r6bnew,
+      "r7new" -> Bench.r7new, "r8new" -> Bench.r8new,
+      "r9new" -> Bench.r9new, "r10new" -> Bench.r10new,
+      "r11new" -> Bench.r11new, "r12new" -> Bench.r12new)
+    val unknown = for ((set, qs) <- sets; q <- qs
+                       if !SparkEntry.queries.contains(q)) yield s"$set/$q"
+    assert(unknown.isEmpty, s"unregistered bench queries: $unknown")
+  }
+
   test("no query output carries a top-level array/map column") {
     // the driver's checker sorts result rows by every column with a
     // generic lexsort — array/map cells are unhashable there, so a

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Layout
+import graft.queries.AnnQueries
 
 /** Round-6 pins: the batchId-keyed idempotent sketch-ledger fold
   * (st17's production restart path), the corpus-calibrated Gopher
@@ -104,17 +105,17 @@ class Round12Spec extends GraftSuite {
        "contract holds at both sizes") {
     import graft.functions.SketchFns
     val dir = SparkTestBase.sfDir
-    val upper = SparkEntry.thetaPreflightUpperBound(spark, dir)
+    val upper = AnnQueries.thetaPreflightUpperBound(spark, dir)
     val lgkUpper = SketchFns.lgkFor(minOverlap = 1600,
       maxDistinct = upper)
-    val maxEst = SparkEntry.sourceDistinctLedger(spark, dir)
+    val maxEst = AnnQueries.sourceDistinctLedger(spark, dir)
       .agg(max(col("est_distinct"))).collect()(0).getDouble(0)
     val lgkLedger = SketchFns.lgkFor(minOverlap = 1600,
       maxDistinct = math.max(1L, math.ceil(maxEst * 1.05d).toLong))
     assert(lgkLedger <= lgkUpper,
       s"ledger-fed lgk $lgkLedger exceeds upper-bound lgk $lgkUpper")
     for (lgk <- Set(lgkLedger, lgkUpper))
-      assert(SparkEntry.thetaOverlapScreen(spark, dir, lgk)
+      assert(AnnQueries.thetaOverlapScreen(spark, dir, lgk)
         .filter(!col("est_within_5pct")).isEmpty,
         s"overlap contract broken at lgk=$lgk")
   }

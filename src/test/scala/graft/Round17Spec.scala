@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.queries.QuerySupport
 
 /** Round-9 (continued) pins: the standing-ledger DELETE lifecycle —
   * tombstone (logical, x119) → compact (physical erasure +
@@ -310,7 +311,7 @@ class Round17Spec extends GraftSuite {
     val version = Similarity.annIndexVersion(nlist, 8, 16)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(
       s"target/qtmp/ann_${version}_$key"))
-    val (_, _, enc0) = SparkEntry.standingAnnIndex(spark, key, lake,
+    val (_, _, enc0) = QuerySupport.standingAnnIndex(spark, key, lake,
       nlist, 8, 16)
     assert(enc0.filter(col("neighbor_id") === 42L).count() === 8L)
     Similarity.annForget(
@@ -318,7 +319,7 @@ class Round17Spec extends GraftSuite {
         .getAbsolutePath,
       Seq(42L).toDF("vec_id"))
     // a DIFFERENT consumer loads through the same helper: excluded
-    val (_, _, enc1) = SparkEntry.standingAnnIndex(spark, key, lake,
+    val (_, _, enc1) = QuerySupport.standingAnnIndex(spark, key, lake,
       nlist, 8, 16)
     assert(enc1.filter(col("neighbor_id") === 42L).count() === 0L,
       "a forgotten id surfaced from the shared loader — the " +
