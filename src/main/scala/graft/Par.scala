@@ -23,9 +23,10 @@ package graft
   *
   * Deliberately a BOUNDED pool (default 4): 2-3 jobs in flight is
   * enough to fill a tail; unbounded fan-out would make concurrent
-  * branches fight for executors and memory. Exceptions propagate
-  * (first failure rethrown, remaining work abandoned) — same failure
-  * surface as the sequential form.
+  * branches fight for executors and memory. Exceptions propagate:
+  * the first failure in input order is rethrown, but only after
+  * every sibling thunk has finished, so no branch is still writing
+  * when the caller sees the failure.
   */
 object Par {
 
@@ -41,14 +42,13 @@ object Par {
           override def call(): A = t()
         })
       }
-      futs.map { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
+      val done = futs.map(f => scala.util.Try(f.get())) // wait for all
+      done.map {
+        case scala.util.Failure(
+            e: java.util.concurrent.ExecutionException) => throw e.getCause
+        case t => t.get
       }
-    } finally pool.shutdownNow()
+    } finally pool.shutdown()
   }
 
   /** Two independent branches, typed. */

@@ -50,18 +50,6 @@ object Dedup {
     array_distinct(grams)
   }
 
-  /** k-permutation MinHash signature over a PRE-HASHED shingle array
-    * (longs). Each shingle is string-hashed exactly once upstream;
-    * permutation `j` remixes the 64-bit value with a salted long-input
-    * xxhash64 — an 8-byte hash, ~an order of magnitude cheaper than
-    * re-hashing the shingle STRING per permutation (the dominant cost
-    * of the whole pairs path: k×|shingles| hashes per doc). Pure
-    * Catalyst, codegen'd, no UDF; long-hash remixing also sidesteps
-    * ANSI overflow that a multiply-shift universal hash would hit. */
-  def minhashSignature(hashedShingles: Column, k: Int = 32): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      j => array_min(transform(hashedShingles, h => xxhash64(j, h))))
-
   /** LSH band planning as code — the [[graft.functions.SketchFns.lgkFor]]
     * discipline applied to MinHash banding: given a signature budget of
     * `k` hashes and a target Jaccard `threshold`, choose (bands b,

@@ -201,34 +201,23 @@ object Mutations {
   }
 
   /** Atomic overwrite for rewrite cycles (§7.4): materialize to a temp
-    * dir, then swap into place via rename-to-backup + rename-in (the
-    * Lake.compact discipline — the old delete-then-rename left a
-    * window where a crash LOST the standing dataset outright). A
-    * failed rewrite never destroys the target; a failed swap restores
-    * the backup or says exactly where the data lives. Reruns are
-    * idempotent (a stale backup from a prior crash is cleared first).
-    * The target path is still briefly ABSENT between the two renames —
-    * a racing reader can observe FileNotFound and should retry;
-    * single-writer maintenance/ledger loops (the streaming foreachBatch
-    * callers) are the intended deployment. */
+    * dir, then commit it with [[graft.sources.Lake.swapIn]]'s backup
+    * swap (the old delete-then-rename left a window where a crash LOST
+    * the standing dataset outright). A failed rewrite never destroys
+    * the target; a failed swap restores the backup or says exactly
+    * where the data lives. Reruns are idempotent (a stale backup from
+    * a prior crash is cleared first), and a target that does not
+    * exist yet is simply created. The target is briefly ABSENT between
+    * the swap's two renames — single-writer maintenance/ledger loops
+    * (the streaming foreachBatch callers) are the intended
+    * deployment. */
   def overwriteAtomic(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
     val target = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    val bak = new org.apache.hadoop.fs.Path(path + "__bak")
-    val fs = target.getFileSystem(hconf)
     df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(bak, true) // stale backup from a prior crashed swap
-    if (fs.exists(target) && !fs.rename(target, bak))
-      throw new java.io.IOException(s"atomic swap failed: $target -> $bak")
-    if (!fs.rename(tmp, target)) {
-      if (fs.exists(bak) && !fs.rename(bak, target))
-        throw new java.io.IOException(
-          s"atomic swap failed AND restore failed: data is intact " +
-            s"under $bak; rename it back to $target")
-      throw new java.io.IOException(s"atomic swap failed: $tmp -> $target")
-    }
-    fs.delete(bak, true)
+    graft.sources.Lake.swapIn(
+      target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration),
+      tmp, target, new org.apache.hadoop.fs.Path(path + "__bak"),
+      "atomic swap")
   }
 }

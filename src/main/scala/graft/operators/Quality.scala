@@ -13,11 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Quality {
 
-  /** NOT NULL violations per listed column (one combined pass). */
-  def notNullViolations(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.select(cols.map(c =>
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(c)): _*)
-
   /** Primary-key violation count: rows minus distinct keys (0 = unique).
     * Null key components count as violations (SQL PKs forbid null).
     * One aggregation job, one scan: total rows, null-key rows, and the

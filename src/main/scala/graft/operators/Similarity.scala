@@ -1929,17 +1929,14 @@ object Similarity {
       : (Long, Long, Long) = {
     val enc = new org.apache.hadoop.fs.Path(s"$path/encoded")
     val f = enc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var nFiles = 0L
-    val it = f.listFiles(enc, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val nm = st.getPath.getName
-      if (st.isFile && !nm.startsWith("_") && !nm.startsWith("."))
-        nFiles += 1
-    }
-    val nCellDirs = f.listStatus(enc).count(st =>
-      st.isDirectory && st.getPath.getName.startsWith("cell="))
-    (nFiles, f.getContentSummary(enc).getLength, nCellDirs.toLong)
+    val files = graft.sources.Lake.dataFiles(f, enc)
+    // a live cell directory holds at least one data file (the
+    // partitioned write's one-file-per-cell shape), so the cell count
+    // comes from the same listing
+    val nCellDirs = files.map(_.getParent.getName)
+      .filter(_.startsWith("cell=")).distinct.size
+    (files.size.toLong, f.getContentSummary(enc).getLength,
+      nCellDirs.toLong)
   }
 
   /** The when-to-compact DECISION from the measured stats — single
@@ -2082,61 +2079,20 @@ object Similarity {
     * "new"), which its key-deduped merge makes a correct, if full,
     * fold. Lives OUTSIDE the versioned parts for the same reason
     * tombstones do: it is bookkeeping about the ingest ledger's
-    * position, not about the index recipe. A TORN stamp (crash
-    * between overwrite's delete and commit leaves the directory with
-    * no data files) reads as None too — the explicit-schema
-    * discipline tombstonesFromFiles uses; a schema-inferring read
-    * would throw on exactly the crash the None fallback documents. */
+    * position, not about the index recipe. A TORN or unparsable
+    * stamp reads as None too, and a watermark written before the
+    * text stamp (a parquet `hwm LONG` relation) still reads — the
+    * [[graft.sources.VersionedState.readStamp]] contract. */
   def promoteHighWater(spark: SparkSession, outPath: String)
-      : Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(promoteHwmPath(outPath))
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) return None
-    val files = f.listStatus(p).collect {
-      case st if st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".") => st.getPath
-    }
-    // the stamp is a driver-grain text file now (hwm.txt — zero
-    // Spark jobs to write or read, the VersionedState.stampVersion
-    // discipline); parquet stamps from older bundles or a recovery
-    // tool's hand-written relation still read through the old path,
-    // and a torn/unparseable stamp is None (fold everything —
-    // idempotent, never wrong)
-    files.find(_.getName == "hwm.txt") match {
-      case Some(txt) =>
-        try {
-          val in = f.open(txt)
-          val s = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString.trim finally in.close()
-          Some(s.toLong)
-        } catch { case _: Exception => None }
-      case None =>
-        if (files.isEmpty) None
-        else spark.read.schema("hwm LONG")
-          .parquet(files.map(_.toString).toIndexedSeq: _*)
-          .collect().headOption.map(_.getLong(0))
-    }
-  }
+      : Option[Long] =
+    graft.sources.VersionedState.readStamp(spark,
+      promoteHwmPath(outPath), "hwm.txt", "hwm LONG")
+      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
 
   private def stampPromoteHighWater(spark: SparkSession,
-                                    outPath: String, hwm: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(promoteHwmPath(outPath))
-    val f = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a fresh stamp supersedes any older-format one: clear the dir so
-    // the text stamp is the only live file (same overwrite semantics
-    // as the old parquet write)
-    if (f.exists(dir)) f.delete(dir, true)
-    f.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".hwm.txt.tmp")
-    val out = f.create(tmp, true)
-    try out.write(hwm.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(dir, "hwm.txt")
-    if (!f.rename(tmp, dst))
-      throw new java.io.IOException(
-        s"stampPromoteHighWater: could not commit $dst")
-  }
+                                    outPath: String, hwm: Long): Unit =
+    graft.sources.VersionedState.writeStamp(spark,
+      promoteHwmPath(outPath), "hwm.txt", hwm.toString)
 
   /** INCREMENTAL promotion — the maintenance window stops paying for
     * history: [[promoteIngestLedger]] rewrites the whole bundle every
@@ -2235,17 +2191,13 @@ object Similarity {
       .dropDuplicates("cell", "neighbor_id", "sub")
       .repartition(col("cell")) // one task → one file per cell
       .localCheckpoint(true) // materialize BEFORE overwriting source
-    val metaDir = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val f = metaDir
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (f.exists(metaDir)) f.delete(metaDir, true) // invalidate first
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell")
-      .parquet(s"$outPath/encoded")
-    stampPromoteHighWater(spark, outPath, newHwm)
-    graft.sources.VersionedState.stampVersion(spark, outPath,
-      version) // re-stamp LAST
+    graft.sources.VersionedState.commit(spark, outPath, version) {
+      merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell")
+        .parquet(s"$outPath/encoded")
+      stampPromoteHighWater(spark, outPath, newHwm)
+    }
     (newBatches, touched.length.toLong, newHwm)
   }
 
@@ -2304,12 +2256,9 @@ object Similarity {
   private[graft] def tombstoneDataFiles(spark: SparkSession,
                                         path: String): Array[String] = {
     val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) Array.empty
-    else f.listStatus(p).collect {
-      case st if st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".") => st.getPath.toString
-    }.sorted
+    graft.sources.Lake.dataFiles(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .map(_.toString).toArray.sorted
   }
 
   /** Read a tombstone file list back as the distinct (vec_id)
@@ -2630,15 +2579,7 @@ object Similarity {
     tsFiles.foreach(p =>
       f.delete(new org.apache.hadoop.fs.Path(p), false))
     val after = vs.read(spark, path, version, "encoded")
-    var nDataFiles = 0
-    val it = f.listFiles(enc, true) // recursive: cell layout nests
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (st.isFile && !n.startsWith("_") && !n.startsWith("."))
-        nDataFiles += 1
-    }
-    (nBefore, after.count(), nDataFiles)
+    (nBefore, after.count(), graft.sources.Lake.dataFiles(f, enc).size)
   }
 
   /** [[hashBlobLake]]'s RECIPE VERSION — part of any standing-state

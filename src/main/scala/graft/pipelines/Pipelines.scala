@@ -1,9 +1,5 @@
 package graft.pipelines
 
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
 /** Shared pipeline scheduling: wave-parallel execution of a dependency
   * DAG — the execution model the reference gets from Airflow running
   * independent DAG tasks concurrently (SURVEY §3.1), without the
@@ -18,32 +14,30 @@ import scala.concurrent.duration.Duration
   */
 object Pipelines {
 
-  /** Run `materialize` over every node of a DAG in dependency waves.
-    * Throws on cycles and propagates the first build failure. */
+  /** Run `materialize` over every node of a DAG in dependency waves,
+    * each wave on [[graft.Par.run]] with one thread per node (no build
+    * waits for a thread). Throws on cycles; on a build failure the
+    * wave's other builds finish first, then the first failure
+    * propagates and no later wave starts. */
   def runWaves[T](nodes: Seq[T], name: T => String, deps: T => Seq[String],
                   traceTag: String)(materialize: T => Unit): Unit = {
-    val pool = Executors.newFixedThreadPool(math.max(2, nodes.size))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      var remaining = nodes
-      val finished = scala.collection.mutable.Set.empty[String]
-      while (remaining.nonEmpty) {
-        val (ready, blocked) =
-          remaining.partition(t => deps(t).forall(finished))
-        if (ready.isEmpty) throw new IllegalStateException(
-          s"dependency cycle or missing dep among: " +
-            blocked.map(name).mkString(", "))
-        val t0 = System.nanoTime()
-        Await.result(
-          Future.sequence(ready.map(t => Future(materialize(t)))),
-          Duration.Inf)
-        if (sys.env.contains("GRAFT_TRACE"))
-          System.err.println(f"[$traceTag] wave " +
-            s"${ready.map(name).mkString(", ")}: " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-        finished ++= ready.map(name)
-        remaining = blocked
-      }
-    } finally pool.shutdown()
+    var remaining = nodes
+    val finished = scala.collection.mutable.Set.empty[String]
+    while (remaining.nonEmpty) {
+      val (ready, blocked) =
+        remaining.partition(t => deps(t).forall(finished))
+      if (ready.isEmpty) throw new IllegalStateException(
+        s"dependency cycle or missing dep among: " +
+          blocked.map(name).mkString(", "))
+      val t0 = System.nanoTime()
+      graft.Par.run(ready.map(t => () => materialize(t)),
+        maxThreads = ready.size)
+      if (sys.env.contains("GRAFT_TRACE"))
+        System.err.println(f"[$traceTag] wave " +
+          s"${ready.map(name).mkString(", ")}: " +
+          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
+      finished ++= ready.map(name)
+      remaining = blocked
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.IOException
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Filesystem lake — the blob-store lifecycle surface of the reference's
@@ -61,18 +62,7 @@ final class Lake(spark: SparkSession, root: String) {
   /** Count the data files currently under a dataset directory
     * (recursive, excluding _SUCCESS/checksum markers). */
   def dataFileCount(parts: String*): Int = {
-    val p = path(parts: _*); val f = fs(p)
-    if (!f.exists(p)) 0
-    else {
-      val it = f.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) {
-        val s = it.next()
-        if (!s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith(".")) n += 1
-      }
-      n
-    }
+    val p = path(parts: _*); Lake.dataFiles(fs(p), p).size
   }
 
   /** Small-file compaction — THE steady-state lake maintenance op: a
@@ -80,17 +70,12 @@ final class Lake(spark: SparkSession, root: String) {
     * per partition, and every downstream scan then pays one task +
     * one object-store GET per file. Rewrites the dataset into
     * ceil(bytes / targetBytes) files (size-based, so the same call
-    * works at any scale), staged to a temp dir and swapped in by two
-    * renames. A reader never sees a MIX of old and new files, but the
-    * swap is two renames, not one: in the instant between them the
-    * dataset path is absent, so a racing reader can observe
-    * FileNotFound and should retry (single-writer maintenance windows
-    * are the intended deployment; table formats exist precisely to
-    * close this gap with a metadata pointer). If the second rename
-    * FAILS the backup is restored in place; if that restore rename
-    * itself also fails (or the process dies mid-swap), the data
-    * survives under the backup name and the thrown exception carries
-    * that path for manual repair. Returns (filesBefore, filesAfter). */
+    * works at any scale), staged to a temp dir and committed by
+    * [[Lake.swapIn]]. A reader never sees a MIX of old and new files;
+    * the swap's brief absent-path window and its restore-or-name-the-
+    * backup failure handling are described there (table formats exist
+    * precisely to close that window with a metadata pointer). Returns
+    * (filesBefore, filesAfter). */
   def compact(targetBytes: Long, parts: String*): (Int, Int) = {
     val p = path(parts: _*); val f = fs(p)
     require(f.exists(p), s"compact: no dataset at $p")
@@ -102,21 +87,9 @@ final class Lake(spark: SparkSession, root: String) {
     // input splits, which is all compaction needs
     read(parts: _*).coalesce(nOut)
       .write.mode(SaveMode.Overwrite).parquet(path(tmp: _*).toString)
-    val bak = parts.init :+ (".pre-compact." + parts.last)
-    if (!rename(parts, bak))
-      throw new java.io.IOException(s"compact commit failed: $p")
-    if (!rename(tmp, parts)) {
-      // restore the live data before failing — a crash here is the one
-      // window that needs manual repair; a rename FAILURE is not.
-      // The restore's OWN result is checked too: if it also fails, say
-      // exactly where the data lives instead of pretending it is back
-      if (!rename(bak, parts))
-        throw new java.io.IOException(
-          s"compact commit failed AND restore failed: data is intact " +
-            s"under backup path ${path(bak: _*)}; rename it back to $p")
-      throw new java.io.IOException(s"compact commit failed: $p")
-    }
-    delete(bak: _*)
+    Lake.swapIn(f, path(tmp: _*), p,
+      path(parts.init :+ (".pre-compact." + parts.last): _*),
+      "compact commit")
     (before, dataFileCount(parts: _*))
   }
 
@@ -152,5 +125,55 @@ final class Lake(spark: SparkSession, root: String) {
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not in $vs")
     read(dataset, s"v=$v")
+  }
+}
+
+object Lake {
+
+  /** The data files under `dir`, recursively — `_`/`.`-prefixed names
+    * (`_SUCCESS`, checksums, dot-temps, an in-flight writer's
+    * `_temporary` tree) are skipped at every level, so a listing
+    * never counts or folds a file a concurrent write has not
+    * committed. Empty when `dir` does not exist. */
+  private[graft] def dataFiles(f: FileSystem, dir: Path): Seq[Path] = {
+    def visible(st: FileStatus) = {
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    def walk(d: Path): Seq[Path] =
+      f.listStatus(d).toSeq.filter(visible).flatMap(st =>
+        if (st.isDirectory) walk(st.getPath) else Seq(st.getPath))
+    if (f.exists(dir)) walk(dir) else Seq.empty
+  }
+
+  /** The backup swap every stage-then-commit rewrite ends with
+    * ([[Lake.compact]], `Mutations.overwriteAtomic`,
+    * `VersionedState.rewritePart`): rename `live` to `bak`, `staged`
+    * to `live`, drop `bak`. A stale `bak` from an earlier crashed swap
+    * is cleared first; an absent `live` (a first write) skips the
+    * backup. If the second rename fails or throws, the backup is
+    * renamed back before the failure surfaces; if that restore fails
+    * too, the exception names the backup path that still holds the
+    * data. The swap is two renames, not one: between them `live` is
+    * briefly absent, so a racing reader can observe FileNotFound and
+    * should retry (single-writer maintenance windows are the intended
+    * deployment). `label` opens every error message. */
+  private[graft] def swapIn(f: FileSystem, staged: Path, live: Path,
+                            bak: Path, label: String): Unit = {
+    f.delete(bak, true)
+    val hadLive = f.exists(live)
+    if (hadLive && !f.rename(live, bak))
+      throw new IOException(s"$label failed: $live -> $bak")
+    try {
+      if (!f.rename(staged, live))
+        throw new IOException(s"$label failed: $staged -> $live")
+    } catch {
+      case e: IOException =>
+        if (hadLive && !f.rename(bak, live))
+          throw new IOException(s"$label failed AND restore failed: " +
+            s"data is intact under $bak; rename it back to $live", e)
+        throw e
+    }
+    f.delete(bak, true)
   }
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
+import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
@@ -17,6 +19,13 @@ import org.apache.spark.sql.functions.lit
   * the version too — so a recipe change moves the state aside
   * instead of letting a consumer silently score against weights (or
   * encode against merges) trained under different rules.
+  *
+  * This object is the ONE owner of how standing state commits: the
+  * text stamp ([[writeStamp]]/[[readStamp]] — the version stamp here
+  * and the ANN promote watermark in Similarity), the invalidate-first
+  * bracket ([[commit]]) and, through [[Lake.swapIn]], the backup swap
+  * a part rewrite ends with. Callers name parts and versions; none of
+  * them knows the `meta` layout.
   *
   * Write order: INVALIDATE `meta` first, then data parts, then
   * re-stamp `meta` LAST — a reader that finds a valid meta sees
@@ -39,65 +48,85 @@ object VersionedState {
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  // ---- the version stamp as a DRIVER-GRAIN text file --------------------
+  // ---- stamps as DRIVER-GRAIN text files -------------------------------
   //
-  // The stamp was a 1-row parquet relation written with a Spark job
-  // and validated with a Spark collect — ~0.2 s of scheduler overhead
-  // PER STAMP and per validation, paid dozens of times by every
-  // lifecycle query (each bundle write stamps once; each load
-  // validates once). A version stamp is driver-grain metadata, not
-  // data: it is now one `meta/version.txt` file written through the
-  // Hadoop FileSystem (temp + rename, so a concurrent reader never
-  // sees a torn stamp on stores with atomic rename) and read back the
-  // same way — ZERO Spark jobs on either side (guide §1.2: the jobs
-  // existed only to move one string). The crash discipline is
-  // unchanged: invalidate deletes the meta DIR first, the stamp lands
-  // LAST. [[versionProbe]] still reads the stamp LAZILY inside the
-  // poll's one collect (a text-source scan — the rewrite-race
-  // contract Round20Spec pins is execution-time, so the probe must
-  // not snapshot at construction).
+  // The version stamp was a 1-row parquet relation written with a
+  // Spark job and validated with a Spark collect — ~0.2 s of scheduler
+  // overhead PER STAMP and per validation, paid dozens of times by
+  // every lifecycle query. A stamp is driver-grain metadata, not data:
+  // it is one text file written through the Hadoop FileSystem (temp +
+  // rename) and read back the same way — ZERO Spark jobs on either
+  // side (guide §1.2: the jobs existed only to move one string). The
+  // crash discipline is [[commit]]'s: invalidate deletes the meta DIR
+  // first, the stamp lands LAST. [[versionProbe]] still reads the
+  // stamp LAZILY inside the poll's one collect (a text-source scan —
+  // the rewrite-race contract Round20Spec pins is execution-time, so
+  // the probe must not snapshot at construction).
 
-  private def metaFile(path: String): Path =
-    new Path(s"$path/meta/version.txt")
+  private def metaDir(path: String): String = s"$path/meta"
 
-  /** Stamp `version` at `path/meta` — the LAST step of every bundle
-    * write (public so [[graft.operators.Similarity]]'s incremental
-    * promote can re-stamp after its dynamic overwrite). */
-  def stampVersion(spark: SparkSession, path: String,
-                   version: String): Unit = {
-    val dst = metaFile(path)
-    val f = fs(spark, dst)
-    f.mkdirs(dst.getParent)
-    // dot-prefixed temp: invisible to file-source scans mid-write
-    val tmp = new Path(dst.getParent, ".version.txt.tmp")
+  /** Write `value` as the one stamp file `dir/name`: `dir` is cleared
+    * (a fresh stamp supersedes any older-format one), the text goes
+    * to a dot-prefixed temp — invisible to file-source scans
+    * mid-write — and is renamed into place. */
+  private[graft] def writeStamp(spark: SparkSession, dir: String,
+                                name: String, value: String): Unit = {
+    val d = new Path(dir)
+    val f = fs(spark, d)
+    f.delete(d, true)
+    f.mkdirs(d)
+    val tmp = new Path(d, s".$name.tmp")
     val out = f.create(tmp, true)
-    try out.write(version.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(value.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    if (f.exists(dst)) f.delete(dst, false)
-    if (!f.rename(tmp, dst))
+    if (!f.rename(tmp, new Path(d, name)))
       throw new java.io.IOException(
-        s"VersionedState.stampVersion: could not commit $dst")
+        s"VersionedState: could not commit stamp $dir/$name")
   }
 
-  /** The stamped version at `path`, or None when absent/torn. */
-  private def readStamp(spark: SparkSession, path: String)
+  /** The stamp `dir/name`, or None when absent, torn or unreadable.
+    * The text file is opened directly: one filesystem call, no Spark
+    * job. When it is absent, a stamp written before the text format —
+    * a 1-row parquet relation of `legacySchema` in `dir` — is read
+    * instead (one Spark job), so bundles written by older versions
+    * stay readable. */
+  private[graft] def readStamp(spark: SparkSession, dir: String,
+                               name: String, legacySchema: String)
       : Option[String] = {
-    val p = metaFile(path)
-    val f = fs(spark, p)
+    val d = new Path(dir)
+    val f = fs(spark, d)
     try {
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
+      val in = f.open(new Path(d, name))
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+      finally in.close()
+    } catch {
+      case _: java.io.FileNotFoundException =>
         try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](4096)
-          var n = in.read(buf)
-          while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-          Some(bytes.toString("UTF-8"))
-        } finally in.close()
-      }
-    } catch { case _: java.io.IOException => None }
+          val files = Lake.dataFiles(f, d)
+          if (files.isEmpty) None
+          else spark.read.schema(legacySchema)
+            .parquet(files.map(_.toString): _*).collect().headOption
+            .flatMap(r => Option(r.get(0))).map(_.toString)
+        } catch { case NonFatal(_) => None }
+      case _: java.io.IOException => None
+    }
+  }
+
+  private def stampedVersion(spark: SparkSession, path: String)
+      : Option[String] =
+    readStamp(spark, metaDir(path), "version.txt", "version STRING")
+
+  /** The invalidate-first bracket every bundle write runs inside:
+    * delete `path/meta`, run `body`, stamp `version` LAST. From the
+    * delete until the stamp, [[exists]] reads false and [[read]]
+    * fails, so a reader never validates against half-written parts;
+    * a crash or a throwing `body` leaves the bundle unstamped. */
+  private[graft] def commit(spark: SparkSession, path: String,
+                            version: String)(body: => Unit): Unit = {
+    val meta = new Path(metaDir(path))
+    fs(spark, meta).delete(meta, true)
+    body
+    writeStamp(spark, metaDir(path), "version.txt", version)
   }
 
   /** Persist `parts` (name → relation) under `path`, stamping
@@ -126,25 +155,21 @@ object VersionedState {
     require(parts.nonEmpty, "VersionedState.write: no parts")
     require(!parts.exists(_._1 == "meta"),
       "VersionedState.write: 'meta' is reserved for the version stamp")
-    val spark = parts.head._2.sparkSession
-    val metaDir = new Path(s"$path/meta")
-    val f = fs(spark, metaDir)
-    if (f.exists(metaDir)) f.delete(metaDir, true) // invalidate first
     // parts land in DISJOINT directories — overlap the writes (guide
     // §2.6 via graft.Par): each write's driver-side commit window
-    // back-fills the others' idle pool time; the meta discipline is
-    // untouched (invalidated above, stamped below AFTER every part
-    // has committed), so a crash mid-writes still leaves no valid
-    // meta over partial state.
-    graft.Par.run(parts.map { case (name, df) => () =>
-      val cols = partitionColsByPart.getOrElse(name, Seq.empty)
-      if (cols.isEmpty)
-        df.write.mode("overwrite").parquet(s"$path/$name")
-      else
-        df.write.mode("overwrite").partitionBy(cols: _*)
-          .parquet(s"$path/$name")
-    })
-    stampVersion(spark, path, version)
+    // back-fills the others' idle pool time; the stamp still lands
+    // AFTER every part has committed, so a crash mid-writes leaves no
+    // valid meta over partial state.
+    commit(parts.head._2.sparkSession, path, version) {
+      graft.Par.run(parts.map { case (name, df) => () =>
+        val cols = partitionColsByPart.getOrElse(name, Seq.empty)
+        if (cols.isEmpty)
+          df.write.mode("overwrite").parquet(s"$path/$name")
+        else
+          df.write.mode("overwrite").partitionBy(cols: _*)
+            .parquet(s"$path/$name")
+      })
+    }
   }
 
   /** True when a COMPLETE bundle of exactly `version` exists at
@@ -164,7 +189,7 @@ object VersionedState {
     * format's atomic metadata pointer — per Lake.compact's notes. */
   def exists(spark: SparkSession, path: String,
              version: String): Boolean =
-    readStamp(spark, path).contains(version)
+    stampedVersion(spark, path).contains(version)
 
   /** Rewrite ONE part of an existing bundle in place, crash-safe —
     * the ledger-compaction primitive ([[graft.operators.Similarity]]
@@ -177,7 +202,8 @@ object VersionedState {
     *      the accreted form's small-file debt is paid here);
     *   2. INVALIDATE meta — from here until re-stamp, `exists()`
     *      reads false, so a reader can never validate mid-swap;
-    *   3. rename live → `.pre`, staged → live, drop `.pre`;
+    *   3. [[Lake.swapIn]]: live → `.pre-compact`, staged → live,
+    *      drop the backup;
     *   4. re-stamp meta LAST.
     *
     * A crash at any point leaves either the old bundle intact
@@ -214,6 +240,8 @@ object VersionedState {
     require(exists(spark, path, version),
       s"VersionedState.rewritePart: no complete '$version' bundle " +
         s"at $path — nothing to compact")
+    require(f.exists(live),
+      s"VersionedState.rewritePart: no part '$part' at $path")
     val staged = new Path(s"$path/$part.compact")
     if (f.exists(staged)) f.delete(staged, true)
     if (partitionCols.isEmpty)
@@ -224,22 +252,10 @@ object VersionedState {
           .map(org.apache.spark.sql.functions.col): _*)
         .write.mode("overwrite").partitionBy(partitionCols: _*)
         .parquet(staged.toString)
-    val metaDir = new Path(s"$path/meta")
-    if (f.exists(metaDir)) f.delete(metaDir, true) // invalidate first
-    val bak = new Path(s"$path/$part.pre-compact")
-    if (f.exists(bak)) f.delete(bak, true)
-    if (!f.rename(live, bak))
-      throw new java.io.IOException(
-        s"rewritePart: could not stage out live part $live")
-    if (!f.rename(staged, live)) {
-      if (!f.rename(bak, live))
-        throw new java.io.IOException(
-          s"rewritePart: swap AND restore failed — data intact at " +
-            s"$bak; rename it back to $live")
-      throw new java.io.IOException(s"rewritePart: swap failed: $live")
+    commit(spark, path, version) {
+      Lake.swapIn(f, staged, live, new Path(s"$path/$part.pre-compact"),
+        "rewritePart: swap")
     }
-    f.delete(bak, true)
-    stampVersion(spark, path, version)
   }
 
   /** Delete every stale versioned bundle under `root`, keeping only
@@ -261,7 +277,7 @@ object VersionedState {
     if (!f.exists(rootP)) return (0, 0)
     var kept = 0; var deleted = 0
     f.listStatus(rootP).filter(_.isDirectory).foreach { st =>
-      val v = readStamp(spark, st.getPath.toString)
+      val v = stampedVersion(spark, st.getPath.toString)
       if (v.isDefined) {
         if (v.exists(keep.contains)) kept += 1
         else { f.delete(st.getPath, true); deleted += 1 }
@@ -286,7 +302,7 @@ object VersionedState {
     * overhead (guide §1.2: don't compute things you throw away). */
   def readParts(spark: SparkSession, path: String, version: String,
                 parts: String*): Seq[DataFrame] = {
-    val stamped = readStamp(spark, path)
+    val stamped = stampedVersion(spark, path)
     require(stamped.contains(version),
       s"VersionedState: ledger at $path has version " +
         s"'${stamped.getOrElse("<none>")}'" +
@@ -336,11 +352,15 @@ object VersionedState {
     * `ignoreMissingFiles` skips them and the empty scan aggregates
     * to ok=0 via the coalesce. The forced analysis is a driver-side
     * file listing (same cost class as the exists() probe — no Spark
-    * job), so the one-collect poll contract is untouched. */
+    * job), so the one-collect poll contract is untouched. A bundle
+    * whose stamp predates the text format (a parquet `meta`, which
+    * [[readStamp]] still reads) probes ok = 0: fail-safe, its
+    * consumer's require fails instead of validating a mis-read
+    * stamp; rewriting the bundle moves it to the text stamp. */
   def versionProbe(spark: SparkSession, path: String,
                    version: String): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, max, when}
-    val meta = new Path(s"$path/meta")
+    val meta = new Path(metaDir(path))
     val invalid = spark.range(1).select(lit(0L).as("ok"))
     if (!fs(spark, meta).exists(meta)) invalid
     else try {
@@ -353,7 +373,7 @@ object VersionedState {
       val probe = spark.read.schema("version STRING")
         .option("ignoreMissingFiles", "true")
         .option("wholetext", "true")
-        .text(s"$path/meta")
+        .text(metaDir(path))
         .agg(coalesce(max(when(col("version") === lit(version), 1L)
           .otherwise(0L)), lit(0L)).as("ok"))
       probe.queryExecution.analyzed // force the listing NOW

@@ -59,6 +59,25 @@ class LakeSpec extends GraftSuite {
     lake.delete("frag")
   }
 
+  test("swapIn restores the live data when the staged side is " +
+       "missing, and leaves no backup behind") {
+    val lake = new Lake(spark, root)
+    lake.delete("swap")
+    val df = Tables.load(spark, SparkTestBase.sfDir, "region")
+    lake.write(df, overwrite = true, "swap", "live")
+    val live = lake.path("swap", "live")
+    val f = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    intercept[java.io.IOException] {
+      Lake.swapIn(f, lake.path("swap", "no_such_staged"), live,
+        lake.path("swap", "live.bak"), "test swap")
+    }
+    assert(lake.read("swap", "live").exceptAll(df).count() === 0)
+    assert(lake.read("swap", "live").count() === df.count())
+    assert(!lake.exists("swap", "live.bak"),
+      "the backup must be renamed back, not left beside the live data")
+    lake.delete("swap")
+  }
+
   test("date-prefixed layout doubles as a partition column on read") {
     val lake = new Lake(spark, root)
     lake.delete("events")

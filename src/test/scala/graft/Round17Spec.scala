@@ -100,6 +100,45 @@ class Round17Spec extends GraftSuite {
       keep = Set("v2")) === ((1, 0)))
   }
 
+  test("a bundle stamped in the pre-text parquet format stays " +
+       "readable: exists, read and vacuumRoot see its version, and a " +
+       "rewrite moves it to the text stamp") {
+    import spark.implicits._
+    val root = tmp("r17_legacy_stamp")
+    val df = Seq((1L, "x"), (2L, "y")).toDF("id", "tag")
+    def legacyBundle(path: String, v: String): Unit = {
+      VersionedState.write(path, v, "a" -> df)
+      spark.range(1).select(lit(v).as("version"))
+        .write.mode("overwrite").parquet(s"$path/meta")
+    }
+    val path = s"$root/model_v1"
+    legacyBundle(path, "v1")
+    assert(!new java.io.File(s"$path/meta/version.txt").exists())
+    assert(VersionedState.exists(spark, path, "v1"))
+    assert(!VersionedState.exists(spark, path, "v2"))
+    assert(VersionedState.read(spark, path, "v1", "a").count() === 2L)
+    assert(VersionedState.readParts(spark, path, "v1", "a")
+      .head.count() === 2L)
+    intercept[IllegalArgumentException] {
+      VersionedState.read(spark, path, "v2", "a")
+    }
+    // retention: kept when named, deleted otherwise
+    legacyBundle(s"$root/model_v0", "v0")
+    assert(VersionedState.vacuumRoot(spark, root, keep = Set("v1")) ===
+      ((1, 1)))
+    assert(VersionedState.exists(spark, path, "v1"))
+    assert(!new java.io.File(s"$root/model_v0").exists())
+    // a rewrite re-stamps in the text format: version.txt is all
+    // that is left in meta (dot-names are the local filesystem's
+    // checksum sidecars)
+    VersionedState.rewritePart(path, "v1", "a",
+      VersionedState.read(spark, path, "v1", "a")
+        .filter(col("tag") === "x"), nFiles = 1)
+    assert(new java.io.File(s"$path/meta").list().toSeq
+      .filterNot(_.startsWith(".")) === Seq("version.txt"))
+    assert(VersionedState.read(spark, path, "v1", "a").count() === 1L)
+  }
+
   // -------------------------------- tombstones: annForget/liveEncoded
 
   test("annForget appends idempotently (redelivered ids dedup on " +

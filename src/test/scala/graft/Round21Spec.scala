@@ -81,13 +81,37 @@ class Round21Spec extends GraftSuite {
   }
 
   test("Par.run propagates the first failure") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     val e = intercept[IllegalStateException] {
       Par.run[Int](Seq(
         () => 1,
         () => throw new IllegalStateException("boom"),
-        () => 3))
+        () => 3,
+        () => { Thread.sleep(300); siblingDone.set(true); 4 }))
     }
     assert(e.getMessage == "boom")
+    assert(siblingDone.get,
+      "the failure surfaced while a sibling thunk was still running")
+  }
+
+  test("Pipelines.runWaves lets a failing wave's siblings finish, " +
+    "then propagates the failure and starts no later wave") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val laterRan = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val deps = Map("a" -> Seq.empty[String], "b" -> Seq.empty[String],
+      "c" -> Seq("a", "b"))
+    val e = intercept[IllegalStateException] {
+      graft.pipelines.Pipelines.runWaves[String](Seq("a", "b", "c"),
+        identity, deps, "test") {
+        case "a" => throw new IllegalStateException("build a failed")
+        case "b" => Thread.sleep(300); siblingDone.set(true)
+        case _ => laterRan.set(true)
+      }
+    }
+    assert(e.getMessage == "build a failed")
+    assert(siblingDone.get,
+      "the failure surfaced while a sibling build was still running")
+    assert(!laterRan.get)
   }
 
   test("Par.join2/join3 preserve branch typing and values") {
