@@ -353,9 +353,8 @@ object Scratch {
         val np = Similarity.nprobeFor(nl)
         val pool = Similarity.rerankFor(n, nl, np)
         val c = Similarity.refineFor(5)
-        val root = new java.io.File("target/qtmp/scratch_refined_cold")
-        org.apache.commons.io.FileUtils.deleteQuietly(root)
-        val lakePath = new java.io.File(root, "lake").getAbsolutePath
+        val root = graft.sources.ScratchRoot.fresh("scratch_refined_cold")
+        val lakePath = s"$root/lake"
         Similarity.hashBlobLake(spark, n).write.parquet(lakePath)
         val lake = spark.read.parquet(lakePath) // parquet-backed
         val q = Similarity.stratifiedProbes(lake, "vec_id", 16)
@@ -495,9 +494,7 @@ object Scratch {
           val nSh = part.count()
           val nl = Similarity.nlistFor(nSh)
           val v = Similarity.annIndexVersion(nl, 8, 16)
-          val p = s"target/qtmp/fsr_shard$sh"
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(p))
+          val p = graft.sources.ScratchRoot.fresh(s"fsr_shard$sh")
           val t0 = System.nanoTime()
           val (c0, cb0) = Similarity.ivfpqTrain(part, "vec_id",
             "embedding", nl, 8, 16, coarseIters = 1, pqIters = 1)
@@ -535,9 +532,7 @@ object Scratch {
         // single-bundle twin for the overhead contrast
         val unl = Similarity.nlistFor(n)
         val uv = Similarity.annIndexVersion(unl, 8, 16)
-        val up = "target/qtmp/fsr_single"
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(up))
+        val up = graft.sources.ScratchRoot.fresh("fsr_single")
         val t2 = System.nanoTime()
         val (uc, ucb) = Similarity.ivfpqTrain(lake.drop("h4"),
           "vec_id", "embedding", unl, 8, 16,
@@ -663,8 +658,8 @@ object Scratch {
         val lake = Similarity.hashBlobLake(spark, n)
           .localCheckpoint(true)
         val version = Similarity.annIndexVersion(nlist, m, 16)
-        val src = new java.io.File(s"target/qtmp/ann_${version}_" +
-          Similarity.hashBlobLakeKey(n)).getAbsolutePath
+        val src = graft.queries.QuerySupport.annLedgerPath(version,
+          Similarity.hashBlobLakeKey(n))
         if (!Similarity.indexExists(spark, src, version)) {
           val t0 = System.nanoTime()
           val (c, cb) = Similarity.ivfpqTrain(lake, "vec_id",
@@ -674,11 +669,9 @@ object Scratch {
               c, cb, m))
           println(f"build+persist ${(System.nanoTime() - t0) / 1e9}%.1f s")
         }
-        val work = new java.io.File("target/qtmp/compact_rehearsal")
-        org.apache.commons.io.FileUtils.deleteQuietly(work)
+        val path = graft.sources.ScratchRoot.fresh("compact_rehearsal")
         org.apache.commons.io.FileUtils.copyDirectory(
-          new java.io.File(src), work)
-        val path = work.getAbsolutePath
+          new java.io.File(src), new java.io.File(path))
         Similarity.annForget(path, lake
           .filter(pmod(col("vec_id"), lit(100L)) === 0)
           .select(col("vec_id"))) // 2000 ids = 1%

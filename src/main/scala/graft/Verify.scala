@@ -20,7 +20,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // declaration order, not hash order: queries share scratch state
-    // (target/qtmp, catalog tables, the Derby JDBC store), so a run
+    // (the scratch root, catalog tables, the Derby JDBC store), so a run
     // must replay the same sequence every time
     SparkEntry.registry
       .filter(q => only.forall(_.contains(q.name)))

@@ -14,6 +14,7 @@ import graft.operators._
   * rows that follow them in the catalog. */
 private[graft] object AnnQueries {
   import QuerySupport._
+  import graft.sources.ScratchRoot.tmpDir
 
   /** Per-source 5-gram hashes of `documents` — the shared gram grain
     * of the sketch tier (x65's semantics; x74/x74b/x80 all ride it). */
@@ -767,7 +768,7 @@ private[graft] object AnnQueries {
       // stream producer and the pane consumer — independent
       // hardcodings are the silent-mismatch class annIndexVersion
       // exists to kill
-      val (lake, cents, codebook, encoded) =
+      val (lake, cents, codebook, encoded, _, _) =
         graft.streaming.Streams.streamAnnIngest(s, n, nlist, m, ksub,
           splitFiles = 4)
       annIndexPane(lake, cents, codebook, encoded, n, nlist, nprobe,
@@ -1281,9 +1282,7 @@ private[graft] object AnnQueries {
       // still complete, in-flight dir untouched. Rebuilt fresh each
       // run (vacuum MUTATES the root, so a guarded reuse would see
       // last run's already-swept state).
-      val root = new java.io.File("target/qtmp/x122_root")
-      org.apache.commons.io.FileUtils.deleteQuietly(root)
-      val rootPath = root.getAbsolutePath
+      val rootPath = graft.sources.ScratchRoot.fresh("x122_root")
       val w = s.range(3).select(col("id"), (col("id") * 2).as("v"))
       graft.sources.VersionedState.write(
         s"$rootPath/model_v1", "v1", "w" -> w)
@@ -1418,14 +1417,10 @@ private[graft] object AnnQueries {
       // file-pruned) in one oracled pane.
       val n = 2000L; val nlist = 64; val nprobe = 8; val k = 5
       val m = 8; val ksub = 16
-      val (lake, _, _, accreted) = graft.streaming.Streams
-        .streamAnnIngest(s, n, nlist, m, ksub, splitFiles = 4,
-          tag = "x124")
+      val (lake, _, _, accreted, defPath, encPath) =
+        graft.streaming.Streams.streamAnnIngest(s, n, nlist, m, ksub,
+          splitFiles = 4, tag = "x124")
       val version = Similarity.annIndexVersion(nlist, m, ksub)
-      val defPath = new java.io.File(
-        "target/qtmp/x124_def").getAbsolutePath
-      val encPath = new java.io.File(
-        "target/qtmp/x124_encoded").getAbsolutePath
       val outPath = annLedgerPath(version,
         s"${Similarity.hashBlobLakeKey(n)}-promoted")
       Similarity.promoteIngestLedger(s, defPath, version, encPath,
@@ -1525,9 +1520,7 @@ private[graft] object AnnQueries {
       // exact twin over survivors with zero forgotten ids surfacing.
       // Isolated root + fresh build each run: four of the six steps
       // MUTATE state, so a guarded reuse would pin nothing.
-      val root = new java.io.File("target/qtmp/e2e_lifecycle_root")
-      org.apache.commons.io.FileUtils.deleteQuietly(root)
-      val rootPath = root.getAbsolutePath
+      val rootPath = graft.sources.ScratchRoot.fresh("e2e_lifecycle_root")
       val m = 8; val ksub = 16; val k = 5
       val lake0 = Similarity.hashBlobLake(s, 500L)
         .localCheckpoint(true)

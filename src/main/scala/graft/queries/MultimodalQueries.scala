@@ -13,6 +13,7 @@ import graft.operators._
   * learn/curation rows that follow it in the catalog. */
 private[graft] object MultimodalQueries {
   import QuerySupport._
+  import graft.sources.ScratchRoot.tmpDir
 
   val specs: Seq[QuerySpec] = Seq(
     // ---- LLM-pipeline: multimodal plumbing (x12) -----------------------

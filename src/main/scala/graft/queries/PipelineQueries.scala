@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
   * medallion pipeline (§3.1). */
 private[graft] object PipelineQueries {
   import QuerySupport._
+  import graft.sources.ScratchRoot.tmpDir
 
   val specs: Seq[QuerySpec] = Seq(
     // ---- reference pipeline chains (§3.2) ------------------------------

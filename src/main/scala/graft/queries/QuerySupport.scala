@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators._
+import graft.sources.ScratchRoot
 
 /** Helpers shared by more than one query family: table loads, exact
-  * sums, scratch dirs, the row-set and recall contracts, and the
-  * standing ledgers (model, tokenizer, ANN index). */
+  * sums, the row-set and recall contracts, and the standing ledgers
+  * (model, tokenizer, ANN index). Scratch dirs come from
+  * [[graft.sources.ScratchRoot]]. */
 private[graft] object QuerySupport {
 
   def t(s: SparkSession, dir: String, n: String): DataFrame =
@@ -27,13 +29,6 @@ private[graft] object QuerySupport {
         posexplode(col("embedding")).as(Seq("pos", "xf")))
       .select(col("id"), (col("pos") + 1).as("d"),
         col("xf").cast(DoubleType).as("x"))
-
-  def tmpDir(name: String): String = {
-    val d = new java.io.File(s"target/qtmp/$name")
-    org.apache.commons.io.FileUtils.deleteQuietly(d)
-    d.mkdirs()
-    d.getAbsolutePath
-  }
 
   /** Multiset row equality in ONE Spark action: the
     * `a.exceptAll(b).count == 0 && b.exceptAll(a).count == 0` idiom
@@ -93,9 +88,8 @@ private[graft] object QuerySupport {
   def standingQualityModel(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = new java.io.File(
-      s"target/qtmp/model_${Learn.qualityModelVersion()}_$key")
-      .getAbsolutePath
+    val path = ScratchRoot.path(
+      s"model_${Learn.qualityModelVersion()}_$key")
     if (!Learn.modelExists(s, path, Learn.qualityModelVersion())) {
       val (_, _, bias, w) = Learn.qualityClassifier(t(s, dir, "documents"))
       Learn.persistModel(w, bias, path, Learn.qualityModelVersion())
@@ -112,9 +106,7 @@ private[graft] object QuerySupport {
   def standingBpeMerges(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.VersionedState
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = new java.io.File(
-      s"target/qtmp/tok_${Tokenize.bpeModelVersion}_$key")
-      .getAbsolutePath
+    val path = ScratchRoot.path(s"tok_${Tokenize.bpeModelVersion}_$key")
     if (!VersionedState.exists(s, path, Tokenize.bpeModelVersion)) {
       val wf = Tokenize.wordFreq(t(s, dir, "documents"), col("text"))
       VersionedState.write(path, Tokenize.bpeModelVersion,
@@ -130,8 +122,7 @@ private[graft] object QuerySupport {
     * the version contract exists to kill, with the failure mode
     * "tombstones land next to a path nobody reads". */
   def annLedgerPath(version: String, lakeKey: String): String =
-    new java.io.File(
-      s"target/qtmp/ann_${version}_$lakeKey").getAbsolutePath
+    ScratchRoot.path(s"ann_${version}_$lakeKey")
 
   /** The STANDING ANN-index ledger (x113): trained centroids +
     * residual codebook + the encoded corpus persist as version-keyed

@@ -14,6 +14,7 @@ import graft.operators._
   * time buckets. */
 private[graft] object RelationalQueries {
   import QuerySupport._
+  import graft.sources.ScratchRoot.tmpDir
 
   private def qMartFlagship(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")

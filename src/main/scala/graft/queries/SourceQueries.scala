@@ -12,6 +12,7 @@ import graft.operators._
   * round-trips and the §2.2 projection, filter and sampling rows. */
 private[graft] object SourceQueries {
   import QuerySupport._
+  import graft.sources.ScratchRoot.tmpDir
 
   val specs: Seq[QuerySpec] = Seq(
     // ---- scans / sources / sinks (§2.1) --------------------------------

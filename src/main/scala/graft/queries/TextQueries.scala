@@ -13,6 +13,7 @@ import graft.operators._
   * rules and classifiers, tokenizers, PCA and corpus selection. */
 private[graft] object TextQueries {
   import QuerySupport._
+  import graft.sources.ScratchRoot.tmpDir
 
   /** x114's deterministic PII canary (the x26/x111 injection
     * discipline): the synthetic corpus carries no natural PII, so

@@ -1,20 +1,28 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.ScratchRoot
 
 /** Structured Streaming surface. The reference is all `@daily` batch
   * (SURVEY §2.11) — its incremental daily file drops map to file-source
   * streams with `Trigger.AvailableNow`; this module provides that shape
   * plus windowed/watermarked aggregation over the `events` table.
-  */
+  *
+  * Each step has one owner: [[run]] runs a stream to completion (with
+  * [[runToMemory]] and [[runFold]] for the two sink kinds),
+  * [[stageFiles]] + [[fileStream]] stage and read a source, and
+  * [[guardedFold]] folds a micro-batch into a replay-guarded ledger.
+  * Scratch paths come from [[graft.sources.ScratchRoot]]. */
 object Streams {
 
   /** Memory-sink names must be unique per start (a repeated bench pass
     * in one session would otherwise collide on the temp view). */
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def unique(name: String): String = s"${name}_${runSeq.incrementAndGet()}"
 
   /** Run `body` with the shuffle-partition conf scoped down for a
     * stateful stream, restoring it afterwards. A streaming aggregation
@@ -30,13 +38,84 @@ object Streams {
     try body finally spark.conf.set(key, prev)
   }
 
+  /** Run `w` to completion: AvailableNow processes the backlog, then
+    * stops (the batch-parity mode). Returns the finished query. */
+  private def run(w: DataStreamWriter[Row]): StreamingQuery = {
+    val q = w.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
+  /** [[run]] `stream` into an in-memory sink named uniquely for this
+    * start; the result is `spark.table(q.name)`. */
+  private def runToMemory(stream: DataFrame, mode: String,
+                          queryName: String): StreamingQuery =
+    run(stream.writeStream.outputMode(mode).format("memory")
+      .queryName(s"${queryName}_${runSeq.incrementAndGet()}"))
+
+  /** [[run]] `stream` in append mode through `fold` on every
+    * micro-batch (foreachBatch), checkpointed at `checkpointDir` when
+    * the caller must resume across runs. */
+  private def runFold(stream: DataFrame,
+                      checkpointDir: Option[String] = None)
+                     (fold: (DataFrame, Long) => Unit): Unit = {
+    val w = stream.writeStream.outputMode("append")
+    run(checkpointDir.fold(w)(w.option("checkpointLocation", _))
+      .foreachBatch(fold))
+  }
+
+  /** Stage a stream source as the parquet files of a fresh scratch
+    * directory `name`, and return that directory: either a copy of
+    * one parquet file (`Left`, a plain file copy, no Spark job) or
+    * `src` split `splitFiles` ways as `part<i>.parquet` holding the
+    * rows whose `split` is `i` (`Right`). The split writes overlap on
+    * [[graft.Par]] (disjoint targets, guide §2.6), so they finish in
+    * any order; `FileStreamSource` orders files by modification time,
+    * so each part gets a strictly increasing time and micro-batch `i`
+    * reads `part<i>` on every run. */
+  private def stageFiles(name: String,
+                         from: Either[String, (DataFrame, Column, Int)])
+      : String = {
+    val dir = ScratchRoot.tmpDir(name)
+    from match {
+      case Left(file) =>
+        val f = java.nio.file.Paths.get(file)
+        java.nio.file.Files.copy(f,
+          java.nio.file.Paths.get(dir).resolve(f.getFileName))
+      case Right((src, split, splitFiles)) =>
+        val t0 = System.currentTimeMillis() - 1000L * splitFiles
+        graft.Par.run((0 until splitFiles).map { i => () =>
+          // a `_` directory is invisible to the stream's listing; its
+          // one data file (task 0 writes one even when empty) moves up
+          val tmp = new java.io.File(dir, s"_part$i")
+          src.filter(split === i).coalesce(1).write.parquet(tmp.getPath)
+          val data = tmp.listFiles().filter(_.getName.endsWith(".parquet"))
+          val part = new java.io.File(dir, s"part$i.parquet")
+          java.nio.file.Files.move(data.head.toPath, part.toPath)
+          part.setLastModified(t0 + 1000L * i)
+          org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+        })
+    }
+    dir
+  }
+
+  /** The parquet files in `dir` as a stream of one file per trigger
+    * (N files ⇒ N micro-batches, the multi-batch proof the ledger
+    * streams share). `schema` None reads it from the files (one Spark
+    * job). */
+  private def fileStream(spark: SparkSession, dir: String,
+                         schema: Option[StructType] = None): DataFrame =
+    spark.readStream
+      .schema(schema.getOrElse(spark.read.parquet(dir).schema))
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dir)
+
   /** Stream the events parquet as a file source and run an hourly
     * windowed count/sum into an in-memory sink, synchronously
     * (AvailableNow processes the backlog then stops — the batch-parity
     * mode). Returns the materialized result. */
   def hourlyEventRollup(spark: SparkSession, sfDir: String,
                         queryName: String = "graft_stream_out"): DataFrame = {
-    val sink = unique(queryName)
     val stream = eventStream(spark, sfDir, "st1_src", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -45,39 +124,19 @@ object Streams {
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
         col("event_type"), col("n_events"),
         col("sum_value").cast("double").as("sum_value"))
-    withStreamShuffle(spark, 8) {
-      val q = stream.writeStream
-        .outputMode("complete")
-        .format("memory").queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink)
-  }
-
-  /** Stage `<sfDir>/events.parquet` into a directory (file stream
-    * sources need one); returns the stage dir path. */
-  private def stageEvents(spark: SparkSession, sfDir: String,
-                          stageName: String): String = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stage = new java.io.File(s"target/qtmp/$stageName")
-    stage.mkdirs()
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      java.nio.file.Paths.get(stage.getAbsolutePath, "events.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    stage.getAbsolutePath
+    val q = withStreamShuffle(spark, 8)(
+      runToMemory(stream, "complete", queryName))
+    spark.table(q.name)
   }
 
   /** Stage the events table and return a watermarked event-time stream
     * with `ts` as a proper timestamp. */
   private def eventStream(spark: SparkSession, sfDir: String,
                           stageName: String, watermark: String): DataFrame = {
-    val dir = stageEvents(spark, sfDir, stageName)
-    val staged = spark.read.parquet(dir)
-    spark.readStream.schema(staged.schema).parquet(dir)
-      .withColumn("ts", graft.Tables.normalizeTs(staged, "ts"))
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val staged = fileStream(spark,
+      stageFiles(stageName, Left(s"$sfDir/events.parquet")))
+    staged.withColumn("ts", graft.Tables.normalizeTs(staged, "ts"))
       .withWatermark("ts", watermark)
   }
 
@@ -86,20 +145,13 @@ object Streams {
     * mode into a memory sink. */
   def slidingEventCounts(spark: SparkSession, sfDir: String,
                          queryName: String = "graft_stream_sliding"): DataFrame = {
-    val sink = unique(queryName)
     val stream = eventStream(spark, sfDir, "st2_src", "2 hours")
       .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
         col("event_type"), col("n_events"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory").queryName(sink)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    spark.table(runToMemory(stream, "complete", queryName).name)
   }
 
   /** flatMapGroupsWithState input/output rows for [[streamSessionize]]. */
@@ -130,7 +182,6 @@ object Streams {
   def streamSessionize(spark: SparkSession, sfDir: String,
                        queryName: String = "graft_stream_sessions"): DataFrame = {
     import spark.implicits._
-    val sink = unique(queryName)
     val events = eventStream(spark, sfDir, "st4_src", "365 days")
       .select(col("user_id"), col("event_id"),
         unix_timestamp(col("ts")).as("sec"))
@@ -143,7 +194,7 @@ object Streams {
           if (state.exists) throw new IllegalStateException(
             s"streamSessionize: user $uid delivered across micro-batches; " +
               "batch-parity sessionization requires single delivery " +
-              "(AvailableNow over one stage file, no maxFilesPerTrigger)")
+              "(AvailableNow over one stage file)")
           state.update(1L)
           val sorted = it.toIndexedSeq.sortBy(e => (e.sec, e.event_id))
           val out = scala.collection.mutable.ArrayBuffer.empty[SessionRow]
@@ -160,13 +211,7 @@ object Streams {
           flush()
           out.iterator
       }
-    val q = sessions.toDF().writeStream
-      .outputMode("append")
-      .format("memory").queryName(sink)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    spark.table(runToMemory(sessions.toDF(), "append", queryName).name)
       .select(col("user_id"), col("session_id"), col("n_events"),
         date_format(timestamp_seconds(col("start_sec")),
           "yyyy-MM-dd HH:mm:ss").as("session_start"))
@@ -179,7 +224,6 @@ object Streams {
     * state beyond the window aggregation. */
   def streamStaticEnrich(spark: SparkSession, sfDir: String,
                          queryName: String = "graft_stream_enrich"): DataFrame = {
-    val sink = unique(queryName)
     val dim = graft.Tables.load(spark, sfDir, "customer")
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
     val stream = eventStream(spark, sfDir, "st5_src", "1 hour")
@@ -191,13 +235,7 @@ object Streams {
         date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("c_mktsegment"), col("n_events"),
         col("sum_value").cast("double").as("sum_value"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory").queryName(sink)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    spark.table(runToMemory(stream, "complete", queryName).name)
   }
 
   /** foreachBatch incremental upsert: each micro-batch's new user ids
@@ -212,9 +250,7 @@ object Streams {
     * [[incrementalRollupPass]], proven by Round8Spec's kill/restart/
     * replay test. */
   def streamUpsertUsers(spark: SparkSession, sfDir: String): DataFrame = {
-    val target = new java.io.File("target/qtmp/st6_target")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    val path = target.getAbsolutePath
+    val path = ScratchRoot.fresh("st6_target")
     // seed an empty target with the right schema
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -222,19 +258,13 @@ object Streams {
         org.apache.spark.sql.types.StructField("user_id",
           org.apache.spark.sql.types.LongType))))
       .write.mode("overwrite").parquet(path)
-    val q = eventStream(spark, sfDir, "st6_src", "365 days")
-      .select(col("user_id"))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark2 = batch.sparkSession
-        val merged = graft.operators.Mutations.insertMissing(
-          spark2.read.parquet(path), batch.distinct(), Seq("user_id"))
-        graft.operators.Mutations.overwriteAtomic(merged, path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runFold(eventStream(spark, sfDir, "st6_src", "365 days")
+        .select(col("user_id"))) { (batch, _) =>
+      val merged = graft.operators.Mutations.insertMissing(
+        batch.sparkSession.read.parquet(path), batch.distinct(),
+        Seq("user_id"))
+      graft.operators.Mutations.overwriteAtomic(merged, path)
+    }
     spark.read.parquet(path)
   }
 
@@ -248,7 +278,6 @@ object Streams {
     * the materialized result (keeps the stream single-stateful-op). */
   def streamStreamJoin(spark: SparkSession, sfDir: String,
                        queryName: String = "graft_stream_ssj"): DataFrame = {
-    val sink = unique(queryName)
     val views = eventStream(spark, sfDir, "st7_views", "30 days")
       .filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"),
@@ -262,15 +291,9 @@ object Streams {
         col("click_ts") >= col("view_ts") &&
         col("click_ts") <= col("view_ts") + expr("INTERVAL 24 HOURS"))
       .select(col("user_id"), col("view_id"), col("click_id"))
-    withStreamShuffle(spark, 8) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory").queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink)
+    val q = withStreamShuffle(spark, 8)(
+      runToMemory(joined, "append", queryName))
+    spark.table(q.name)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_view_click_pairs"))
   }
@@ -296,49 +319,22 @@ object Streams {
     * compared at Spark's millisecond watermark precision. */
   def streamLateDataDrop(spark: SparkSession, sfDir: String,
                          queryName: String = "graft_stream_late"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val sink = unique(queryName)
-    val stage = new java.io.File("target/qtmp/st8_src")
-    org.apache.commons.io.FileUtils.deleteQuietly(stage)
-    stage.mkdirs()
     val events = graft.Tables.load(spark, sfDir, "events") // ts → micros
       .select(col("ts"), col("event_id"), col("event_type"))
-    def stageFile(df: org.apache.spark.sql.DataFrame, name: String,
-                  modTime: Long): Unit = {
-      val tmp = new java.io.File(s"target/qtmp/st8_tmp_$name")
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      df.coalesce(1).write.parquet(tmp.getAbsolutePath)
-      val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(stage, s"$name.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(modTime)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-    }
-    val t0 = System.currentTimeMillis() - 180000
-    stageFile(events.filter(col("event_id") % 3 === 1), "a_batch", t0)
-    stageFile(events.filter(col("event_id") % 3 === 2), "m_batch", t0 + 60000)
-    stageFile(events.filter(col("event_id") % 3 === 0), "z_batch", t0 + 120000)
-    val schema = spark.read.parquet(stage.getAbsolutePath).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath)
+    // part0 = A (ids ≡ 1), part1 = M (≡ 2), part2 = B (≡ 0)
+    val stream = fileStream(spark, stageFiles("st8_src",
+        Right((events, pmod(col("event_id") - 1, lit(3)), 3))))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
         col("event_type"), col("n_events"))
-    withStreamShuffle(spark, 8) {
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("memory").queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.foreach(p => System.err.println(
-        s"[st8] batch=${p.batchId} in=${p.numInputRows} wm=${p.eventTime.get("watermark")}"))
-    }
-    spark.table(sink)
+    val q = withStreamShuffle(spark, 8)(
+      runToMemory(stream, "append", queryName))
+    q.recentProgress.foreach(p => System.err.println(
+      s"[st8] batch=${p.batchId} in=${p.numInputRows} wm=${p.eventTime.get("watermark")}"))
+    spark.table(q.name)
   }
 
   /** Streaming stateful dedup: first event per user within the watermark
@@ -346,17 +342,10 @@ object Streams {
     * key alone so the result set is order-independent. */
   def streamDistinctUsers(spark: SparkSession, sfDir: String,
                           queryName: String = "graft_stream_users"): DataFrame = {
-    val sink = unique(queryName)
     val stream = eventStream(spark, sfDir, "st3_src", "365 days")
       .dropDuplicates("user_id")
       .select(col("user_id"))
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory").queryName(sink)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    spark.table(runToMemory(stream, "append", queryName).name)
   }
 
   /** Left-OUTER stream-stream join: st7's view→click attribution with
@@ -372,7 +361,6 @@ object Streams {
     * the inner form. */
   def streamStreamLeftJoin(spark: SparkSession, sfDir: String,
                            queryName: String = "graft_stream_sslj"): DataFrame = {
-    val sink = unique(queryName)
     val views = eventStream(spark, sfDir, "st10_views", "1 hour")
       .filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"),
@@ -387,15 +375,9 @@ object Streams {
         col("click_ts") <= col("view_ts") + expr("INTERVAL 24 HOURS"),
       "left_outer")
       .select(col("user_id"), col("view_id"), col("click_id"))
-    withStreamShuffle(spark, 8) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory").queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink)
+    val q = withStreamShuffle(spark, 8)(
+      runToMemory(joined, "append", queryName))
+    spark.table(q.name)
       .groupBy(col("user_id"))
       .agg(count(col("click_id")).as("n_pairs"),
         sum(when(col("click_id").isNull, 1L).otherwise(0L))
@@ -411,13 +393,11 @@ object Streams {
     * stream was batched, which is what the oracle checks (the st6
     * batching-invariance discipline). */
   def streamIncrementalRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val target = new java.io.File("target/qtmp/st11_target")
-    val ckpt = new java.io.File("target/qtmp/st11_ckpt")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
-    incrementalRollupPass(spark, stageEvents(spark, sfDir, "st11_src"),
-      target.getAbsolutePath, ckpt.getAbsolutePath)
-    spark.read.parquet(target.getAbsolutePath)
+    val target = ScratchRoot.fresh("st11_target")
+    incrementalRollupPass(spark,
+      stageFiles("st11_src", Left(s"$sfDir/events.parquet")),
+      target, ScratchRoot.fresh("st11_ckpt"))
+    spark.read.parquet(target)
       .select(col("event_type"), col("n_events"),
         col("sum_value").cast("double").as("sum_value"))
   }
@@ -455,34 +435,62 @@ object Streams {
             org.apache.spark.sql.types.DecimalType(18, 2)),
           org.apache.spark.sql.types.StructField("__last_batch",
             org.apache.spark.sql.types.LongType))))
-    val staged = spark.read.parquet(stageDir)
-    val q = spark.readStream.schema(staged.schema)
-      .option("maxFilesPerTrigger", 1) // file-grain batches, resumable
-      .parquet(stageDir)
-      .select(col("event_type"), col("value"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        val ledger = sp.read.parquet(ledgerPath)
-        val applied = ledger
-          .agg(coalesce(max(col("__last_batch")), lit(-1L)))
-          .head().getLong(0)
-        if (batchId > applied) { // else: replayed batch, already folded
-          val delta = batch.groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n_events"),
-              sum(col("value").cast("decimal(18,2)")).as("sum_value"))
-          val merged = graft.operators.Mutations.upsertAggregate(
-            ledger.drop("__last_batch"), delta,
+    // file-grain batches, resumable from the explicit checkpoint
+    runFold(fileStream(spark, stageDir)
+        .select(col("event_type"), col("value")),
+        Some(checkpointDir)) { (batch, batchId) =>
+      guardedFold(batch, batchId, ledgerPath, "incrementalRollupPass") {
+        ledger =>
+          graft.operators.Mutations.upsertAggregate(ledger,
+            batch.groupBy(col("event_type"))
+              .agg(count(lit(1)).as("n_events"),
+                sum(col("value").cast("decimal(18,2)")).as("sum_value")),
             Seq("event_type"), Seq("n_events", "sum_value"))
-            .withColumn("__last_batch", lit(batchId))
-          graft.operators.Mutations.overwriteAtomic(merged, ledgerPath)
-        }
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
+  }
+
+  /** A ledger's recipe stamp: column `col` holds the `param` value the
+    * ledger was built at. State folded under another value does not
+    * merge with it (`why` says how); `show` renders a value for the
+    * error text. */
+  private final case class Recipe(col: String, param: String,
+                                  value: Any, why: String,
+                                  show: Any => String = _.toString)
+
+  /** The one replay-guarded ledger fold (exactly-once THROUGH the
+    * ledger). Reads the ledger at `path` and, with one `head()`, its
+    * `max(__last_batch)` and recipe stamp. A missing stamp column (a
+    * pre-stamp ledger) or a different stamp fails fast with the
+    * rebuild message — BEFORE the idempotence gate, since even a
+    * replayed batch id signals a caller whose next batch would merge
+    * under the wrong recipe. A batch with `batchId ≤ max(__last_batch)`
+    * is an at-least-once replay and is skipped (the Structured
+    * Streaming docs' "use batchId to deduplicate" discipline);
+    * otherwise `merge` gets the ledger without its bookkeeping columns
+    * and the result is committed with `__last_batch` and the stamp in
+    * ONE atomic swap. */
+  private def guardedFold(batch: DataFrame, batchId: Long, path: String,
+                          fold: String, recipe: Option[Recipe] = None)
+                         (merge: DataFrame => DataFrame): Unit = {
+    val ledger = batch.sparkSession.read.parquet(path)
+    recipe.foreach(r => require(ledger.columns.contains(r.col),
+      s"$fold: ledger at $path carries no ${r.col} recipe stamp " +
+        s"(pre-stamp ledger) — ${r.why}; rebuild the ledger"))
+    val head = ledger.agg(coalesce(max(col("__last_batch")), lit(-1L)),
+      recipe.map(r => max(col(r.col))).toSeq: _*).head()
+    recipe.foreach(r => require(head.isNullAt(1) || head.get(1) == r.value,
+      s"$fold: ledger at $path was built at ${r.param}=" +
+        s"${r.show(head.get(1))} but this fold was called with " +
+        s"${r.param}=${r.show(r.value)} — ${r.why}; rebuild the ledger"))
+    if (batchId > head.getLong(0)) { // else: replayed batch, already folded
+      val merged =
+        merge(ledger.drop("__last_batch" +: recipe.map(_.col).toSeq: _*))
+          .withColumn("__last_batch", lit(batchId))
+      graft.operators.Mutations.overwriteAtomic(
+        recipe.fold(merged)(r => merged.withColumn(r.col, lit(r.value))),
+        path)
+    }
   }
 
   /** Streaming data-quality monitor: every micro-batch runs the same
@@ -498,16 +506,11 @@ object Streams {
     * filter-aggregate subtrees); the ledger append is a few rows. */
   def streamQualityMonitor(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Quality
-    val target = new java.io.File("target/qtmp/st12_target")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    target.mkdirs()
-    val path = target.getAbsolutePath
+    val path = ScratchRoot.tmpDir("st12_target")
     val allowed = Seq("click", "purchase", "signup", "view")
-    val q = eventStream(spark, sfDir, "st12_src", "365 days")
-      .select(col("event_type"), col("value"), col("props"))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    runFold(eventStream(spark, sfDir, "st12_src", "365 days")
+        .select(col("event_type"), col("value"), col("props"))) {
+      (batch, batchId) =>
         Quality.integrityReport(Seq(
           ("check_value_cap_100", "events",
             batch.filter(!coalesce(col("value") <= 100.0d, lit(false)))),
@@ -517,10 +520,7 @@ object Streams {
             batch.filter(col("props").isNull))))
           .withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     spark.read.parquet(path)
       .groupBy(col("check_name"), col("table_name"))
       .agg(sum(col("n_violations")).as("n_violations"))
@@ -551,31 +551,23 @@ object Streams {
     * cannot corrupt the ledger; the non-idempotent additive case is
     * where [[incrementalRollupPass]]'s `__last_batch` guard applies. */
   def streamSketchRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val target = new java.io.File("target/qtmp/st13_target")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    val path = target.getAbsolutePath
+    val path = ScratchRoot.fresh("st13_target")
     graft.operators.Mutations.seedEmptyLedger(spark, path,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("event_type",
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("sk",
           org.apache.spark.sql.types.BinaryType))))
-    val q = eventStream(spark, sfDir, "st13_src", "365 days")
-      .select(col("event_type"), col("user_id"))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = batch.groupBy(col("event_type"))
-          .agg(expr("hll_sketch_agg(user_id)").as("sk"))
-        val merged = batch.sparkSession.read.parquet(path)
-          .unionByName(delta)
-          .groupBy(col("event_type"))
-          .agg(expr("hll_union_agg(sk)").as("sk"))
-        graft.operators.Mutations.overwriteAtomic(merged, path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runFold(eventStream(spark, sfDir, "st13_src", "365 days")
+        .select(col("event_type"), col("user_id"))) { (batch, _) =>
+      val delta = batch.groupBy(col("event_type"))
+        .agg(expr("hll_sketch_agg(user_id)").as("sk"))
+      val merged = batch.sparkSession.read.parquet(path)
+        .unionByName(delta)
+        .groupBy(col("event_type"))
+        .agg(expr("hll_union_agg(sk)").as("sk"))
+      graft.operators.Mutations.overwriteAtomic(merged, path)
+    }
     val est = spark.read.parquet(path)
       .select(col("event_type"), expr("hll_sketch_estimate(sk)").as("est"))
     graft.Tables.load(spark, sfDir, "events") // schema-normalizing read
@@ -599,35 +591,24 @@ object Streams {
     * rescanning history. */
   def streamThetaNovelty(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.SketchFns
-    val target = new java.io.File("target/qtmp/st14_target")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    val path = target.getAbsolutePath
+    val path = ScratchRoot.fresh("st14_target")
     graft.operators.Mutations.seedEmptyLedger(spark, path,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("batch",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("sk",
           org.apache.spark.sql.types.BinaryType))))
-    val stage = new java.io.File("target/qtmp/st14_src")
-    stage.mkdirs()
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
-      java.nio.file.Paths.get(stage.getAbsolutePath, "documents.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val schema = spark.read.parquet(stage.getAbsolutePath).schema
     val toks = split(trim(regexp_replace(lower(col("text")),
       "\\s+", " ")), " ")
-    val q = spark.readStream.schema(schema)
-      .parquet(stage.getAbsolutePath)
+    runFold(fileStream(spark,
+        stageFiles("st14_src", Left(s"$sfDir/documents.parquet")))
       .select((col("doc_id") % 3).as("batch"), toks.as("__t"))
       .filter(size(col("__t")) >= 5)
       .select(col("batch"),
         explode(transform(sequence(lit(1), size(col("__t")) - 4),
           i => graft.functions.ColFns.portableHash60(
-            concat_ws(" ", slice(col("__t"), i, lit(5)))))).as("g"))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+            concat_ws(" ", slice(col("__t"), i, lit(5)))))).as("g"))) {
+      (batch, _) =>
         val delta = batch.groupBy(col("batch"))
           .agg(SketchFns.thetaAgg(col("g"), 14).as("sk"))
         val merged = batch.sparkSession.read.parquet(path)
@@ -635,10 +616,7 @@ object Streams {
           .groupBy(col("batch"))
           .agg(SketchFns.thetaUnionAgg(col("sk"), 14).as("sk"))
         graft.operators.Mutations.overwriteAtomic(merged, path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     // novelty from the LEDGER alone (x75's prior-union + a-not-b)
     val sk = spark.read.parquet(path)
     val prior = sk.as("b").join(sk.as("p"), col("p.batch") < col("b.batch"))
@@ -664,38 +642,21 @@ object Streams {
           col("est"), 0.05).as("est_within_5pct"))
   }
 
-  /** Stage `<sfDir>/<table>.parquet` under `target/qtmp/<stageName>`
-    * as one file (`splitFiles` ≤ 1) or that many modulo-of-`keyCol`
-    * split files, and return the file stream reading it one file per
+  /** Stage `<sfDir>/<table>.parquet` under scratch `stageName` as one
+    * file (`splitFiles` ≤ 1) or that many modulo-of-`keyCol` split
+    * files, and return the file stream reading it one file per
     * trigger — the multi-micro-batch proof pattern the ledger streams
-    * (st15/st16/st17) share: N files ⇒ N micro-batches, so a spec can
+    * (st15…st22) share: N files ⇒ N micro-batches, so a spec can
     * assert ledger state is batching-invariant. */
   private def stagedFileStream(spark: SparkSession, sfDir: String,
                                table: String, keyCol: String,
                                stageName: String,
                                splitFiles: Int): DataFrame = {
-    val stage = new java.io.File(s"target/qtmp/$stageName")
-    org.apache.commons.io.FileUtils.deleteQuietly(stage)
-    stage.mkdirs()
-    if (splitFiles <= 1)
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$sfDir/$table.parquet"),
-        java.nio.file.Paths.get(stage.getAbsolutePath, s"$table.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    else {
-      val src = spark.read.parquet(s"$sfDir/$table.parquet")
-      // disjoint target dirs — overlap the stage writes (guide §2.6)
-      graft.Par.run((0 until splitFiles).map { i => () =>
-        src.filter(col(keyCol) % splitFiles === i).coalesce(1)
-          .write.mode("overwrite")
-          .parquet(new java.io.File(stage, s"part$i").getAbsolutePath)
-      })
-    }
-    val schema = spark.read.parquet(s"$sfDir/$table.parquet").schema
-    val reader = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-    if (splitFiles <= 1) reader.parquet(stage.getAbsolutePath)
-    else reader.parquet(stage.getAbsolutePath + "/part*")
+    val file = s"$sfDir/$table.parquet"
+    fileStream(spark, stageFiles(stageName,
+      if (splitFiles <= 1) Left(file)
+      else Right((spark.read.parquet(file), col(keyCol) % splitFiles,
+        splitFiles))))
   }
 
   /** Streaming m9: per-micro-batch KLL sketches of order totalprice
@@ -717,9 +678,7 @@ object Streams {
   def streamKllLedger(spark: SparkSession, sfDir: String,
                       splitFiles: Int = 1): DataFrame = {
     import graft.functions.SketchFns
-    val target = new java.io.File("target/qtmp/st15_target")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    val path = target.getAbsolutePath
+    val path = ScratchRoot.fresh("st15_target")
     graft.operators.Mutations.seedEmptyLedger(spark, path,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("d",
@@ -729,24 +688,18 @@ object Streams {
     // splitFiles > 1: the spec's multi-micro-batch proof that ledger
     // state is batching-invariant (KLL merge associativity), not an
     // artifact of single-batch AvailableNow delivery
-    val q = stagedFileStream(spark, sfDir, "orders", "o_orderkey",
+    runFold(stagedFileStream(spark, sfDir, "orders", "o_orderkey",
         "st15_src", splitFiles)
       .select(col("o_orderdate").cast("date").as("d"),
-        col("o_totalprice").cast("double").as("v"))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = batch.groupBy(col("d"))
-          .agg(SketchFns.kllAgg(col("v"), 400).as("sk"))
-        val merged = batch.sparkSession.read.parquet(path)
-          .unionByName(delta)
-          .groupBy(col("d"))
-          .agg(SketchFns.kllMergeAgg(col("sk"), 400).as("sk"))
-        graft.operators.Mutations.overwriteAtomic(merged, path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        col("o_totalprice").cast("double").as("v"))) { (batch, _) =>
+      val delta = batch.groupBy(col("d"))
+        .agg(SketchFns.kllAgg(col("v"), 400).as("sk"))
+      val merged = batch.sparkSession.read.parquet(path)
+        .unionByName(delta)
+        .groupBy(col("d"))
+        .agg(SketchFns.kllMergeAgg(col("sk"), 400).as("sk"))
+      graft.operators.Mutations.overwriteAtomic(merged, path)
+    }
     // m9's rank contract, answered FROM the ledger
     val merged = spark.read.parquet(path).agg(
       SketchFns.kllMergeAgg(col("sk"), 400).as("sk"),
@@ -795,29 +748,21 @@ object Streams {
       (-col("o_orderkey")).as("neg_key"), col("o_orderkey"))
     val ledgerCols = Seq(col("o_custkey"), col("o_totalprice"),
       col("o_orderkey"))
-    val target = new java.io.File("target/qtmp/st16_target")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    val path = target.getAbsolutePath
+    val path = ScratchRoot.fresh("st16_target")
     graft.operators.Mutations.seedEmptyLedger(spark, path,
       spark.read.parquet(s"$sfDir/orders.parquet")
         .select(ledgerCols: _*).schema)
-    val q = stagedFileStream(spark, sfDir, "orders", "o_orderkey",
-        "st16_src", splitFiles)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = batch.sparkSession.read.parquet(path)
-          .unionByName(batch.select(ledgerCols: _*))
-          .groupBy(col("o_custkey"))
-          .agg(TopKAgg.topK(heapStruct, 3).as("top"))
-          .select(col("o_custkey"), explode(col("top")).as("e"))
-          .select(col("o_custkey"), col("e.o_totalprice"),
-            col("e.o_orderkey"))
-        graft.operators.Mutations.overwriteAtomic(merged, path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runFold(stagedFileStream(spark, sfDir, "orders", "o_orderkey",
+        "st16_src", splitFiles)) { (batch, _) =>
+      val merged = batch.sparkSession.read.parquet(path)
+        .unionByName(batch.select(ledgerCols: _*))
+        .groupBy(col("o_custkey"))
+        .agg(TopKAgg.topK(heapStruct, 3).as("top"))
+        .select(col("o_custkey"), explode(col("top")).as("e"))
+        .select(col("o_custkey"), col("e.o_totalprice"),
+          col("e.o_orderkey"))
+      graft.operators.Mutations.overwriteAtomic(merged, path)
+    }
     // ranks FROM the ledger alone (≤ k rows per group; the re-agg just
     // orders each group's k survivors)
     spark.read.parquet(path)
@@ -871,61 +816,26 @@ object Streams {
       org.apache.spark.sql.types.StructField("__cap",
         org.apache.spark.sql.types.LongType)))
 
-  /** One batchId-keyed IDEMPOTENT fold of a (source, tok) micro-batch
-    * into the frequent-items ledger at `path` — st11's
-    * exactly-once-through-the-ledger discipline applied to SKETCH
-    * state, which (unlike st16's top-k) is not replay-idempotent by
-    * algebra: merging the same delta twice double-counts its stream
-    * weight, enough to push the sketch's lower bound above the true
-    * single-delivery count and fail the bounds contract. Every ledger
-    * row carries `__last_batch` committed in the same atomic swap as
-    * the sketches; an arriving batch with `batchId ≤ max(__last_batch)`
-    * is an at-least-once replay and is skipped (the Structured
-    * Streaming docs' "use batchId to deduplicate" discipline). Named —
-    * rather than an inline foreachBatch closure — so Round12Spec can
-    * redeliver a batch directly and assert ledger bytes and contract
-    * flags unchanged. The `applied` probe is a 1-row scalar read of
-    * ledger metadata, not a data scan at stream grain. */
+  /** One batchId-keyed idempotent fold ([[guardedFold]]) of a
+    * (source, tok) micro-batch into the frequent-items ledger at
+    * `path`. Sketch state, unlike st16's top-k, is not
+    * replay-idempotent by algebra: merging the same delta twice
+    * double-counts its stream weight, enough to push the sketch's
+    * lower bound above the true single-delivery count and fail the
+    * bounds contract. Named — rather than an inline foreachBatch
+    * closure — so Round12Spec can redeliver a batch directly and
+    * assert ledger bytes and contract flags unchanged. */
   def freqLedgerFold(batch: DataFrame, batchId: Long, path: String,
                      maxMapSize: Int = 1024): Unit = {
     import graft.functions.FreqFns
-    val sp = batch.sparkSession
-    val ledger = sp.read.parquet(path)
-    // a pre-__cap ledger (built before the capacity stamp existed)
-    // must fail with the same "rebuild the ledger" message as a
-    // capacity mismatch — without this, the agg below dies with an
-    // unresolved-column AnalysisException that says nothing about
-    // WHY the ledger is unusable (ADVICE r9)
-    require(ledger.columns.contains("__cap"),
-      s"freqLedgerFold: ledger at $path carries no __cap capacity " +
-        "stamp (pre-stamp ledger) — sketch bounds are only " +
-        "meaningful within one stamped capacity; rebuild the ledger")
-    val head = ledger
-      .agg(coalesce(max(col("__last_batch")), lit(-1L)),
-        max(col("__cap")))
-      .head()
-    val applied = head.getLong(0)
-    // recipe gate BEFORE the idempotence gate (dsirLedgerFold's
-    // order): even a replayed batch id signals a caller whose next
-    // batch would merge sketches under a different capacity — whose
-    // published error bound (≈ n/maxMapSize) the contract consumers
-    // check no longer describes the merged state
-    require(head.isNullAt(1) || head.getLong(1) == maxMapSize.toLong,
-      s"freqLedgerFold: ledger at $path was built at maxMapSize=" +
-        s"${if (head.isNullAt(1)) "?" else head.getLong(1)} but " +
-        s"this fold was called with maxMapSize=$maxMapSize — sketch " +
-        "bounds are only meaningful within one capacity; rebuild " +
-        "the ledger")
-    if (batchId > applied) { // else: replayed batch, already folded
-      val delta = batch.groupBy(col("source"))
-        .agg(FreqFns.freqAgg(col("tok"), maxMapSize).as("sk"))
-      val merged = ledger.drop("__last_batch", "__cap")
-        .unionByName(delta)
-        .groupBy(col("source"))
-        .agg(FreqFns.freqMergeAgg(col("sk"), maxMapSize).as("sk"))
-        .withColumn("__last_batch", lit(batchId))
-        .withColumn("__cap", lit(maxMapSize.toLong))
-      graft.operators.Mutations.overwriteAtomic(merged, path)
+    guardedFold(batch, batchId, path, "freqLedgerFold",
+      Some(Recipe("__cap", "maxMapSize", maxMapSize.toLong,
+        "sketch bounds are only meaningful within one capacity"))) {
+      ledger =>
+        ledger.unionByName(batch.groupBy(col("source"))
+            .agg(FreqFns.freqAgg(col("tok"), maxMapSize).as("sk")))
+          .groupBy(col("source"))
+          .agg(FreqFns.freqMergeAgg(col("sk"), maxMapSize).as("sk"))
     }
   }
 
@@ -935,23 +845,13 @@ object Streams {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val toks = split(trim(regexp_replace(lower(col("text")),
       "\\s+", " ")), " ")
-    val target = new java.io.File("target/qtmp/st17_target")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    val path = target.getAbsolutePath
+    val path = ScratchRoot.fresh("st17_target")
     graft.operators.Mutations.seedEmptyLedger(spark, path,
       freqLedgerSchema)
-    val q = stagedFileStream(spark, sfDir, "documents", "doc_id",
+    runFold(stagedFileStream(spark, sfDir, "documents", "doc_id",
         "st17_src", splitFiles)
       .select(col("source"), explode(toks).as("tok"))
-      .filter(length(col("tok")) > 0)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        freqLedgerFold(batch, batchId, path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .filter(length(col("tok")) > 0))(freqLedgerFold(_, _, path))
     // x89's contract, answered FROM the ledger — the SAME
     // TextOps.freqBoundsContract tail as the batch twin, so tokenizer,
     // tie-break, and flag definition can never silently diverge.
@@ -1015,32 +915,15 @@ object Streams {
   def dsirLedgerFold(batch: DataFrame, batchId: Long, path: String,
                      nBuckets: Int = 4096): Unit = {
     import graft.operators.{Mutations, TextOps}
-    val sp = batch.sparkSession
-    val ledger = sp.read.parquet(path)
-    val head = ledger
-      .agg(coalesce(max(col("__last_batch")), lit(-1L)),
-        max(col("__nb")))
-      .head()
-    val applied = head.getLong(0)
-    // recipe gate BEFORE the idempotence gate: a mismatched fold must
-    // fail fast even when it would be skipped as a replay — the
-    // caller's recipe is wrong either way, and its NEXT (non-replay)
-    // batch would corrupt the bucket space
-    require(head.isNullAt(1) || head.getLong(1) == nBuckets.toLong,
-      s"dsirLedgerFold: ledger at $path was built at nBuckets=" +
-        s"${head.getLong(1)} but this fold was called with " +
-        s"nBuckets=$nBuckets — hashed-ngram counts are only additive " +
-        "within one bucket space; rebuild the ledger (derive its " +
-        "path from the recipe to make this unreachable)")
-    if (batchId > applied) { // else: replayed batch, already folded
-      val delta = TextOps.dsirCounts(TextOps.dsirFeatures(batch,
-        col("doc_id"), col("text"), col("lang") === "en", nBuckets))
-      val merged = Mutations.upsertAggregate(
-        ledger.drop("__last_batch", "__nb"), delta,
-        Seq("b"), Seq("ct", "cq"))
-        .withColumn("__last_batch", lit(batchId))
-        .withColumn("__nb", lit(nBuckets.toLong))
-      Mutations.overwriteAtomic(merged, path)
+    guardedFold(batch, batchId, path, "dsirLedgerFold",
+      Some(Recipe("__nb", "nBuckets", nBuckets.toLong,
+        "hashed-ngram counts are only additive within one bucket " +
+          "space (derive the ledger path from the recipe)"))) {
+      ledger =>
+        Mutations.upsertAggregate(ledger,
+          TextOps.dsirCounts(TextOps.dsirFeatures(batch, col("doc_id"),
+            col("text"), col("lang") === "en", nBuckets)),
+          Seq("b"), Seq("ct", "cq"))
     }
   }
 
@@ -1218,21 +1101,11 @@ object Streams {
                         nBuckets: Int = 4096): DataFrame = {
     import graft.operators.TextOps
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val target = new java.io.File("target/qtmp/st18_target")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    val path = target.getAbsolutePath
+    val path = ScratchRoot.fresh("st18_target")
     graft.operators.Mutations.seedEmptyLedger(spark, path,
       dsirLedgerSchema)
-    val q = stagedFileStream(spark, sfDir, "documents", "doc_id",
-        "st18_src", splitFiles)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dsirLedgerFold(batch, batchId, path, nBuckets)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runFold(stagedFileStream(spark, sfDir, "documents", "doc_id",
+      "st18_src", splitFiles))(dsirLedgerFold(_, _, path, nBuckets))
     val docs = graft.Tables.load(spark, sfDir, "documents")
     val counts = spark.read.parquet(path)
       .select(col("b"), col("ct"), col("cq"))
@@ -1294,24 +1167,13 @@ object Streams {
     // persisted via Learn.persistModel, the SAME versioned-ledger
     // form x97b/x98b consume (st19's freeze was the prototype)
     val (_, _, bias, w) = Learn.qualityClassifier(docs, nBuckets)
-    val modelDir = new java.io.File("target/qtmp/st19_model")
-    org.apache.commons.io.FileUtils.deleteQuietly(modelDir)
-    val modelPath = modelDir.getAbsolutePath
+    val modelPath = ScratchRoot.fresh("st19_model")
     Learn.persistModel(w, bias, modelPath,
       Learn.qualityModelVersion(nBuckets))
-    val scoredDir = new java.io.File("target/qtmp/st19_scores")
-    org.apache.commons.io.FileUtils.deleteQuietly(scoredDir)
-    val scoredPath = scoredDir.getAbsolutePath
-    val q = stagedFileStream(spark, sfDir, "documents", "doc_id",
-        "st19_src", splitFiles)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        classifierScoreFold(b, bid, modelPath, scoredPath, nBuckets)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val scoredPath = ScratchRoot.fresh("st19_scores")
+    runFold(stagedFileStream(spark, sfDir, "documents", "doc_id",
+      "st19_src", splitFiles))(
+      classifierScoreFold(_, _, modelPath, scoredPath, nBuckets))
     spark.read.parquet(scoredPath).select(col("id"), col("score"))
   }
 
@@ -1367,21 +1229,11 @@ object Streams {
   /** One batchId-keyed idempotent fold of an embeddings micro-batch
     * into the PCA moment ledger. */
   def pcaLedgerFold(batch: DataFrame, batchId: Long,
-                    path: String): Unit = {
-    import graft.operators.Mutations
-    val sp = batch.sparkSession
-    val ledger = sp.read.parquet(path)
-    val applied = ledger
-      .agg(coalesce(max(col("__last_batch")), lit(-1L)))
-      .head().getLong(0)
-    if (batchId > applied) { // else: replayed batch, already folded
-      val merged = Mutations.upsertAggregate(
-        ledger.drop("__last_batch"), pcaMomentDelta(batch),
-        Seq("d1", "d2"), Seq("val"))
-        .withColumn("__last_batch", lit(batchId))
-      Mutations.overwriteAtomic(merged, path)
+                    path: String): Unit =
+    guardedFold(batch, batchId, path, "pcaLedgerFold") { ledger =>
+      graft.operators.Mutations.upsertAggregate(ledger,
+        pcaMomentDelta(batch), Seq("d1", "d2"), Seq("val"))
     }
-  }
 
   /** Reconstruct the CENTERED gram matrix from the raw-moment
     * ledger via the exact integer identity
@@ -1436,21 +1288,11 @@ object Streams {
                     splitFiles: Int = 2, dims: Int = 64,
                     iters: Int = 8): DataFrame = {
     import graft.operators.Learn
-    val target = new java.io.File("target/qtmp/st20_ledger")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    val path = target.getAbsolutePath
+    val path = ScratchRoot.fresh("st20_ledger")
     graft.operators.Mutations.seedEmptyLedger(spark, path,
       pcaLedgerSchema)
-    val q = stagedFileStream(spark, sfDir, "embeddings", "vec_id",
-        "st20_src", splitFiles)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        pcaLedgerFold(batch, batchId, path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runFold(stagedFileStream(spark, sfDir, "embeddings", "vec_id",
+      "st20_src", splitFiles))(pcaLedgerFold(_, _, path))
     val (gram, n) = pcaLedgerGram(spark, path)
     val w = Learn.gramPowerIteration(gram, dims, iters, n)
     w.crossJoin(broadcast(Learn.gramVariancePane(gram, w, n)))
@@ -1479,22 +1321,12 @@ object Streams {
   /** One batchId-keyed idempotent fold of a documents micro-batch
     * into the word-frequency ledger. */
   def bpeLedgerFold(batch: DataFrame, batchId: Long,
-                    path: String): Unit = {
-    import graft.operators.{Mutations, Tokenize}
-    val sp = batch.sparkSession
-    val ledger = sp.read.parquet(path)
-    val applied = ledger
-      .agg(coalesce(max(col("__last_batch")), lit(-1L)))
-      .head().getLong(0)
-    if (batchId > applied) { // else: replayed batch, already folded
-      val merged = Mutations.upsertAggregate(
-        ledger.drop("__last_batch"),
-        Tokenize.wordFreq(batch, col("text")),
+                    path: String): Unit =
+    guardedFold(batch, batchId, path, "bpeLedgerFold") { ledger =>
+      graft.operators.Mutations.upsertAggregate(ledger,
+        graft.operators.Tokenize.wordFreq(batch, col("text")),
         Seq("word"), Seq("freq"))
-        .withColumn("__last_batch", lit(batchId))
-      Mutations.overwriteAtomic(merged, path)
     }
-  }
 
   /** Streaming BPE training (x101's twin): word counts fold into the
     * standing ledger as documents stream in; the tokenizer retrains
@@ -1510,21 +1342,11 @@ object Streams {
                      merges: Int = 12): DataFrame = {
     import graft.operators.Tokenize
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val target = new java.io.File("target/qtmp/st21_ledger")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    val path = target.getAbsolutePath
+    val path = ScratchRoot.fresh("st21_ledger")
     graft.operators.Mutations.seedEmptyLedger(spark, path,
       bpeLedgerSchema)
-    val q = stagedFileStream(spark, sfDir, "documents", "doc_id",
-        "st21_src", splitFiles)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bpeLedgerFold(batch, batchId, path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runFold(stagedFileStream(spark, sfDir, "documents", "doc_id",
+      "st21_src", splitFiles))(bpeLedgerFold(_, _, path))
     Tokenize.bpeTrain(
       spark.read.parquet(path).select(col("word"), col("freq")),
       merges)
@@ -1580,11 +1402,13 @@ object Streams {
     * batches), so search results — and st23's pane — are
     * bit-identical to x113's and the oracle is shared verbatim (the
     * batching-invariance proof, index tier). Returns
-    * (lake, cents, codebook, assembled encoded). */
+    * (lake, cents, codebook, assembled encoded, defPath, encodedPath);
+    * the encoded ledger at `encodedPath` keeps micro-batch `i` under
+    * `__bid=i`. */
   def streamAnnIngest(spark: SparkSession, n: Long, nlist: Int,
                       m: Int = 8, ksub: Int = 16,
                       splitFiles: Int = 4, tag: String = "st23")
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame, DataFrame, String, String) = {
     import graft.operators.Similarity
     val lake = Similarity.hashBlobLake(spark, n).localCheckpoint(true)
     val (cents0, codebook0) = Similarity.ivfpqTrain(lake, "vec_id",
@@ -1598,39 +1422,25 @@ object Streams {
     // independent hardcodings are the silent-mismatch class the
     // version contract exists to kill.
     val version = Similarity.annIndexVersion(nlist, m, ksub)
-    val defDir = new java.io.File(s"target/qtmp/${tag}_def")
-    org.apache.commons.io.FileUtils.deleteQuietly(defDir)
-    val defPath = defDir.getAbsolutePath
+    val defPath = ScratchRoot.fresh(s"${tag}_def")
     Similarity.persistIndexDef(defPath, version, cents0, codebook0)
     val (cents, codebook) =
       Similarity.loadIndexDef(spark, defPath, version)
-    val stage = new java.io.File(s"target/qtmp/${tag}_src")
-    org.apache.commons.io.FileUtils.deleteQuietly(stage)
-    stage.mkdirs()
-    // disjoint target dirs — overlap the stage writes (guide §2.6)
-    graft.Par.run((0 until splitFiles).map { i => () =>
-      lake.filter(col("vec_id") % splitFiles === i).coalesce(1)
-        .write.mode("overwrite")
-        .parquet(new java.io.File(stage, s"part$i").getAbsolutePath)
-    })
-    val encodedDir = new java.io.File(s"target/qtmp/${tag}_encoded")
-    org.apache.commons.io.FileUtils.deleteQuietly(encodedDir)
-    val encodedPath = encodedDir.getAbsolutePath
-    val q = spark.readStream.schema(lake.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath + "/part*")
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        annIngestFold(b, bid, defPath, version, encodedPath, m)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val stream = splitLake(spark, lake, tag, splitFiles)
+    val encodedPath = ScratchRoot.fresh(s"${tag}_encoded")
+    runFold(stream)(annIngestFold(_, _, defPath, version, encodedPath, m))
     val encoded = spark.read.parquet(encodedPath)
       .select(col("cell"), col("neighbor_id"), col("sub"), col("code"))
-    (lake, cents, codebook, encoded)
+    (lake, cents, codebook, encoded, defPath, encodedPath)
   }
+
+  /** The ANN lake staged as `vec_id % splitFiles` parts under scratch
+    * `<tag>_src`, streamed one part per micro-batch. */
+  private def splitLake(spark: SparkSession, lake: DataFrame, tag: String,
+                        splitFiles: Int): DataFrame =
+    fileStream(spark, stageFiles(s"${tag}_src",
+      Right((lake, col("vec_id") % splitFiles, splitFiles))),
+      Some(lake.schema))
 
   /** st25: the MAINTENANCE CADENCE rides the stream — ingest folds
     * accrete the write-optimized `__bid` ledger all day, and every
@@ -1653,45 +1463,23 @@ object Streams {
     import graft.operators.Similarity
     val lake = Similarity.hashBlobLake(spark, n).localCheckpoint(true)
     val version = Similarity.annIndexVersion(nlist, m, ksub)
-    val defDir = new java.io.File(s"target/qtmp/${tag}_def")
-    org.apache.commons.io.FileUtils.deleteQuietly(defDir)
-    val defPath = defDir.getAbsolutePath
+    val defPath = ScratchRoot.fresh(s"${tag}_def")
     val (cents0, codebook0) = Similarity.ivfpqTrain(lake, "vec_id",
       "embedding", nlist = nlist, m = m, ksub = ksub,
       coarseIters = 1, pqIters = 1)
     Similarity.persistIndexDef(defPath, version, cents0, codebook0)
-    val stage = new java.io.File(s"target/qtmp/${tag}_src")
-    org.apache.commons.io.FileUtils.deleteQuietly(stage)
-    stage.mkdirs()
-    // disjoint target dirs — overlap the stage writes (guide §2.6)
-    graft.Par.run((0 until splitFiles).map { i => () =>
-      lake.filter(col("vec_id") % splitFiles === i).coalesce(1)
-        .write.mode("overwrite")
-        .parquet(new java.io.File(stage, s"part$i").getAbsolutePath)
-    })
-    val encodedDir = new java.io.File(s"target/qtmp/${tag}_encoded")
-    org.apache.commons.io.FileUtils.deleteQuietly(encodedDir)
-    val encodedPath = encodedDir.getAbsolutePath
-    val bundleDir = new java.io.File(s"target/qtmp/${tag}_bundle")
-    org.apache.commons.io.FileUtils.deleteQuietly(bundleDir)
-    val bundlePath = bundleDir.getAbsolutePath
+    val stream = splitLake(spark, lake, tag, splitFiles)
+    val encodedPath = ScratchRoot.fresh(s"${tag}_encoded")
+    val bundlePath = ScratchRoot.fresh(s"${tag}_bundle")
     var nPromotes = 0
-    val q = spark.readStream.schema(lake.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath + "/part*")
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        annIngestFold(b, bid, defPath, version, encodedPath, m)
-        if ((bid + 1) % promoteEvery == 0) {
-          Similarity.promoteIngestLedgerIncremental(spark, defPath,
-            version, encodedPath, bundlePath)
-          nPromotes += 1
-        }
+    runFold(stream) { (b, bid) =>
+      annIngestFold(b, bid, defPath, version, encodedPath, m)
+      if ((bid + 1) % promoteEvery == 0) {
+        Similarity.promoteIngestLedgerIncremental(spark, defPath,
+          version, encodedPath, bundlePath)
+        nPromotes += 1
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     (lake, defPath, version, encodedPath, bundlePath, nPromotes)
   }
 
@@ -1743,57 +1531,34 @@ object Streams {
       val part = lake.filter(shardKey === sh.toLong)
       val nl = Similarity.nlistFor(part.count())
       val v = Similarity.annIndexVersion(nl, m, ksub)
-      val defDir = new java.io.File(s"target/qtmp/${tag}_def$sh")
-      org.apache.commons.io.FileUtils.deleteQuietly(defDir)
-      val defPath = defDir.getAbsolutePath
+      val defPath = ScratchRoot.fresh(s"${tag}_def$sh")
       val (c0, cb0) = Similarity.ivfpqTrain(part, "vec_id",
         "embedding", nl, m, ksub, coarseIters = 1, pqIters = 1)
       Similarity.persistIndexDef(defPath, v, c0, cb0)
-      val ledgerDir = new java.io.File(s"target/qtmp/${tag}_led$sh")
-      org.apache.commons.io.FileUtils.deleteQuietly(ledgerDir)
-      val bundleDir = new java.io.File(s"target/qtmp/${tag}_bun$sh")
-      org.apache.commons.io.FileUtils.deleteQuietly(bundleDir)
-      (defPath, v, ledgerDir.getAbsolutePath,
-        bundleDir.getAbsolutePath)
-    })
-    val stage = new java.io.File(s"target/qtmp/${tag}_src")
-    org.apache.commons.io.FileUtils.deleteQuietly(stage)
-    stage.mkdirs()
-    // disjoint target dirs — overlap the stage writes (guide §2.6)
-    graft.Par.run((0 until splitFiles).map { i => () =>
-      lake.filter(col("vec_id") % splitFiles === i).coalesce(1)
-        .write.mode("overwrite")
-        .parquet(new java.io.File(stage, s"part$i").getAbsolutePath)
+      (defPath, v, ScratchRoot.fresh(s"${tag}_led$sh"),
+        ScratchRoot.fresh(s"${tag}_bun$sh"))
     })
     var nPromotes = 0
-    val q = spark.readStream.schema(lake.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath + "/part*")
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        val batch = b.localCheckpoint(true) // one eval, |shards| slices
-        // per-shard folds/promotes land in per-shard paths — run them
-        // as the parallel maintenance jobs the at-scale stance above
-        // describes (graft.Par; AvailableNow used to run them in-line
-        // single-threaded, which was the same work serialized)
-        graft.Par.run(state.zipWithIndex.map {
-          case ((defPath, v, ledgerPath, _), sh) => () =>
-            annIngestFold(batch.filter(shardKey === sh.toLong), bid,
-              defPath, v, ledgerPath, m)
+    runFold(splitLake(spark, lake, tag, splitFiles)) { (b, bid) =>
+      val batch = b.localCheckpoint(true) // one eval, |shards| slices
+      // per-shard folds/promotes land in per-shard paths — run them
+      // as the parallel maintenance jobs the at-scale stance above
+      // describes (graft.Par; AvailableNow used to run them in-line
+      // single-threaded, which was the same work serialized)
+      graft.Par.run(state.zipWithIndex.map {
+        case ((defPath, v, ledgerPath, _), sh) => () =>
+          annIngestFold(batch.filter(shardKey === sh.toLong), bid,
+            defPath, v, ledgerPath, m)
+      })
+      if ((bid + 1) % promoteEvery == 0) {
+        graft.Par.run(state.map {
+          case (defPath, v, ledgerPath, bundlePath) => () =>
+            Similarity.promoteIngestLedgerIncremental(spark, defPath,
+              v, ledgerPath, bundlePath)
         })
-        if ((bid + 1) % promoteEvery == 0) {
-          graft.Par.run(state.map {
-            case (defPath, v, ledgerPath, bundlePath) => () =>
-              Similarity.promoteIngestLedgerIncremental(spark, defPath,
-                v, ledgerPath, bundlePath)
-          })
-          nPromotes += 1
-        }
+        nPromotes += 1
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     (lake, state, nPromotes)
   }
 
@@ -1814,28 +1579,13 @@ object Streams {
   def streamForget(spark: SparkSession, ids: DataFrame,
                    bundlePath: String, splitFiles: Int = 2,
                    tag: String = "st24"): Unit = {
-    val stage = new java.io.File(s"target/qtmp/${tag}_src")
-    org.apache.commons.io.FileUtils.deleteQuietly(stage)
-    stage.mkdirs()
     val idsC = ids.select(col(ids.columns.head).cast("long")
       .as("vec_id")).localCheckpoint(true)
-    // disjoint target dirs — overlap the stage writes (guide §2.6)
-    graft.Par.run((0 until splitFiles).map { i => () =>
-      idsC.filter(pmod(col("vec_id"), lit(splitFiles.toLong)) === i)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new java.io.File(stage, s"part$i").getAbsolutePath)
-    })
-    val q = spark.readStream.schema(idsC.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath + "/part*")
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        graft.operators.Similarity.annForget(bundlePath, b)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runFold(fileStream(spark, stageFiles(s"${tag}_src",
+        Right((idsC, pmod(col("vec_id"), lit(splitFiles.toLong)),
+          splitFiles))), Some(idsC.schema))) { (b, _) =>
+      graft.operators.Similarity.annForget(bundlePath, b)
+    }
   }
 
   /** st22's ledger schema: segment-hash document frequencies as
@@ -1863,38 +1613,20 @@ object Streams {
     * different sep would merge docfreqs of different segmentations,
     * so it fails fast instead. */
   def boilerplateLedgerFold(batch: DataFrame, batchId: Long,
-                            path: String, sep: String = "\n"): Unit = {
-    import graft.operators.Mutations
-    val sp = batch.sparkSession
-    val ledger = sp.read.parquet(path)
-    val head = ledger
-      .agg(coalesce(max(col("__last_batch")), lit(-1L)),
-        max(col("__sep")))
-      .head()
-    val applied = head.getLong(0)
-    // recipe gate before the idempotence gate (see dsirLedgerFold)
-    require(head.isNullAt(1) || head.getString(1) == sep,
-      s"boilerplateLedgerFold: ledger at $path was built with sep=" +
-        s"${if (head.isNullAt(1)) "?" else head.getString(1).map(c => f"\\u${c.toInt}%04x").mkString} " +
-        s"but this fold was called with sep=" +
-        s"${sep.map(c => f"\\u${c.toInt}%04x").mkString} — segment " +
-        "hashes are only additive within one segmentation; rebuild " +
-        "the ledger")
-    if (batchId > applied) { // else: replayed batch, already folded
+                            path: String, sep: String = "\n"): Unit =
+    guardedFold(batch, batchId, path, "boilerplateLedgerFold",
+      Some(Recipe("__sep", "sep", sep,
+        "segment hashes are only additive within one segmentation",
+        _.toString.map(c => f"\\u${c.toInt}%04x").mkString))) { ledger =>
       val counts = batch.select(col("doc_id"),
           explode(split(col("text"),
             java.util.regex.Pattern.quote(sep))).as("seg"))
         .select(col("doc_id"), xxhash64(trim(col("seg"))).as("h"))
         .distinct() // one vote per (doc, segment) — docfreq semantics
         .groupBy(col("h")).agg(count(lit(1)).as("docfreq"))
-      val merged = Mutations.upsertAggregate(
-        ledger.drop("__last_batch", "__sep"), counts,
+      graft.operators.Mutations.upsertAggregate(ledger, counts,
         Seq("h"), Seq("docfreq"))
-        .withColumn("__last_batch", lit(batchId))
-        .withColumn("__sep", lit(sep))
-      Mutations.overwriteAtomic(merged, path)
     }
-  }
 
   /** Boilerplate-ledger CONTENT-DRIFT advisor — the x116 discipline
     * on the segment-docfreq tier (VERDICT r9 #8): st22's ledger
@@ -2050,21 +1782,13 @@ object Streams {
                              maxDocs: Long = 10): DataFrame = {
     import graft.operators.TextOps
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val target = new java.io.File("target/qtmp/st22_ledger")
-    org.apache.commons.io.FileUtils.deleteQuietly(target)
-    val path = target.getAbsolutePath
+    val path = ScratchRoot.fresh("st22_ledger")
     graft.operators.Mutations.seedEmptyLedger(spark, path,
       boilerplateLedgerSchema)
-    val q = stagedFileStream(spark, sfDir, "documents", "doc_id",
-        "st22_src", splitFiles)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        boilerplateLedgerFold(inject(b), bid, path, sep)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runFold(stagedFileStream(spark, sfDir, "documents", "doc_id",
+        "st22_src", splitFiles)) { (b, bid) =>
+      boilerplateLedgerFold(inject(b), bid, path, sep)
+    }
     val blacklist = spark.read.parquet(path)
       .filter(col("docfreq") > maxDocs).select(col("h"))
     TextOps.boilerplateStripAgainst(
@@ -2105,18 +1829,10 @@ object Streams {
                          maxHamming: Int = 3,
                          queryName: String = "graft_stream_admit"): DataFrame = {
     import spark.implicits._
-    val sink = unique(queryName)
-    val stage = new java.io.File("target/qtmp/st9_src")
-    stage.mkdirs()
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
-      java.nio.file.Paths.get(stage.getAbsolutePath, "documents.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val schema = spark.read.parquet(stage.getAbsolutePath).schema
     // simhash60 already coalesces null text to the all-ones fingerprint
     val fp = graft.operators.Dedup.simhash60(col("text"))
-    val banded = spark.readStream.schema(schema)
-      .parquet(stage.getAbsolutePath)
+    val banded = fileStream(spark,
+        stageFiles("st9_src", Left(s"$sfDir/documents.parquet")))
       .select(col("doc_id"), fp.as("fp"),
         explode(sequence(lit(0), lit(3))).as("band"))
       .select(col("band").cast("int").as("band"),
@@ -2141,15 +1857,9 @@ object Streams {
           state.update(seen)
           out.iterator
       }
-    withStreamShuffle(spark, 8) {
-      val q = flags.toDF().writeStream
-        .outputMode("append")
-        .format("memory").queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink)
+    val q = withStreamShuffle(spark, 8)(
+      runToMemory(flags.toDF(), "append", queryName))
+    spark.table(q.name)
       .groupBy(col("doc_id"))
       .agg(max(when(col("hit"), 1).otherwise(0)).as("__anyhit"))
       .select(col("doc_id"),

@@ -274,6 +274,21 @@ class Round15Spec extends GraftSuite {
 
   // ------------------------------ st19: version contract mid-stream
 
+  test("streamAnnIngest maps split i to micro-batch i on every run: " +
+       "each __bid=i partition of the encoded ledger holds only " +
+       "neighbor_id % 4 == i, however the parallel stage writes finish") {
+    val (_, _, _, _, _, encPath) = graft.streaming.Streams
+      .streamAnnIngest(spark, 400L, 8, splitFiles = 4,
+        tag = "r15_split_order")
+    val enc = spark.read.parquet(encPath)
+    assert(enc.count() === 400L * 8, "vacuous: not every vector encoded")
+    assert(enc.select(col("__bid")).distinct().count() === 4L)
+    val misplaced =
+      enc.filter(col("neighbor_id") % 4 =!= col("__bid")).count()
+    assert(misplaced === 0L,
+      s"$misplaced encoded rows sit under another split's __bid")
+  }
+
   test("st19's per-batch fold FAILS FAST when the standing model was " +
        "stamped under a different recipe — a stream can never " +
        "silently score against stale weights") {

@@ -176,6 +176,25 @@ class Round18Spec extends GraftSuite {
       Streams.freqLedgerFold(batch, 1L, freqPath)
     }
     assert(e1.getMessage.contains("rebuild the ledger"))
+    // pre-__nb DSIR and pre-__sep boilerplate ledgers: the same
+    // rebuild message, not an unresolved-column AnalysisException
+    val dsirPre = tmp("r18_prestamp_dsir")
+    Seq((1L, 2L, 3L, 0L)).toDF("b", "ct", "cq", "__last_batch")
+      .write.parquet(dsirPre)
+    val docs = Seq((1L, "the quick brown fox", "en"))
+      .toDF("doc_id", "text", "lang")
+    val e4 = intercept[IllegalArgumentException] {
+      Streams.dsirLedgerFold(docs, 1L, dsirPre)
+    }
+    assert(e4.getMessage.contains("rebuild the ledger"))
+    val bpPre = tmp("r18_prestamp_bp")
+    Seq((1L, 2L, 0L)).toDF("h", "docfreq", "__last_batch")
+      .write.parquet(bpPre)
+    val e5 = intercept[IllegalArgumentException] {
+      Streams.boilerplateLedgerFold(docs.select("doc_id", "text"), 1L,
+        bpPre)
+    }
+    assert(e5.getMessage.contains("rebuild the ledger"))
     // never-folded advisors: explicit message, not an NPE
     val dsirPath = tmp("r18_empty_dsir")
     graft.operators.Mutations.seedEmptyLedger(spark, dsirPath,
