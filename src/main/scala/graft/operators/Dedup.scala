@@ -469,6 +469,13 @@ object Dedup {
         .as(Seq("band", "band_key")))
   }
 
+  /** Null text coalesces to the all-ones fingerprint — the same value
+    * an EMPTY token list produces (zero votes ⇒ every tie-bit set), so
+    * null ≡ empty on both this side and the DuckDB-style oracle
+    * formulation (where a doc with no token rows falls out of the
+    * aggregation and is COALESCEd back in). */
+  val simhashAllOnes60: Long = (1L << 60) - 1
+
   /** Portable 60-bit SimHash: same vote construction as [[simhash64]]
     * but token hashes are md5-derived ([[graft.functions.ColFns.portableHash60]]
     * per token), so the fingerprint reproduces bit-for-bit in any
@@ -479,13 +486,6 @@ object Dedup {
     * Evaluates via the native [[graft.functions.SimHash60Expr]] (one
     * primitive loop, codegen'd); [[simhash60Composed]] keeps the
     * pure-built-in formulation and the spec proves them bit-identical. */
-  /** Null text coalesces to the all-ones fingerprint — the same value
-    * an EMPTY token list produces (zero votes ⇒ every tie-bit set), so
-    * null ≡ empty on both this side and the DuckDB-style oracle
-    * formulation (where a doc with no token rows falls out of the
-    * aggregation and is COALESCEd back in). */
-  val simhashAllOnes60: Long = (1L << 60) - 1
-
   def simhash60(text: Column): Column =
     coalesce(
       graft.functions.SimHash60Expr.simhash60(

@@ -219,6 +219,22 @@ object Similarity {
       struct(s.as("sub"), slice(qvec, st + 1, en - st).as("sv"))
     })
 
+  /** `rows` with the fixed-point vector `qvec` split into its `m`
+    * [[subvecs]], one row per subspace: (keep…, sub, `svAs`). */
+  private def splitSub(rows: DataFrame, keep: Seq[String], qvec: Column,
+                       m: Int, svAs: String = "sv"): DataFrame =
+    rows.select(keep.map(col) :+ explode(subvecs(qvec, m)).as("s"): _*)
+      .select(keep.map(col) ++ Seq(col("s.sub").as("sub"),
+        col("s.sv").as(svAs)): _*)
+
+  /** The `n` rows with the smallest xxhash64(neighbor_id), ties broken
+    * by id — the deterministic seed sample every quantizer here starts
+    * from (no driver-side randomness). `__h` stays aboard, so a caller
+    * can number the seeds in draw order. */
+  private def seedDraw(rows: DataFrame, n: Int): DataFrame =
+    rows.withColumn("__h", xxhash64(col("neighbor_id")))
+      .orderBy(col("__h"), col("neighbor_id")).limit(n)
+
   /** Exact integer L2² between two equal-length long vectors. */
   private def intL2(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
@@ -256,58 +272,30 @@ object Similarity {
     * against a DuckDB brute-force oracle (x53b, the x15b pattern) —
     * pinning encode/table/ADC machinery independent of training.
     * The approximate operating point is gated on a recall contract vs
-    * exact L2 top-k (x53, the x7/x15 pattern). */
+    * exact L2 top-k (x53, the x7/x15 pattern).
+    *
+    * It is the one-cell case of [[ivfpqTopK]]: cell 0 holds every
+    * vector and a residual is the quantized vector itself, so it
+    * trains, encodes and scores through the IVFPQ steps. */
   def pqTopK(queries: DataFrame, corpus: DataFrame,
              idCol: String, vecCol: String, k: Int,
              m: Int = 8, ksub: Int = 16,
              trainIters: Int = 0, rerank: Int = 0): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      quantize1e7(col(vecCol)).as("__qv"))
-    // --- codebooks: (sub, code, cbv) ---------------------------------
-    val seedW = Window.orderBy(col("__h"), col("neighbor_id"))
-    val seeds = c.withColumn("__h", xxhash64(col("neighbor_id")))
-      .orderBy(col("__h"), col("neighbor_id")).limit(ksub)
-      // global window is fine: ≤ ksub rows survive the limit
-      .withColumn("code", row_number().over(seedW) - 1)
-      .select(col("code"), explode(subvecs(col("__qv"), m)).as("s"))
-      .select(col("s.sub").as("sub"), col("code"), col("s.sv").as("cbv"))
-    val corpusSub0 = c
-      .select(col("neighbor_id"), explode(subvecs(col("__qv"), m)).as("s"))
-      .select(col("neighbor_id"), col("s.sub").as("sub"),
-        col("s.sv").as("sv"))
-    // trained paths consume the exploded subvectors trainIters+1 times
-    // (each Lloyd assignment + the final encode) — truncate the
-    // lineage once so quantize+explode runs once (the winnowing/
-    // star-CC input discipline); untrained single-consumer path skips
-    // the materialization
-    val corpusSub =
-      if (trainIters > 0) corpusSub0.localCheckpoint(true) else corpusSub0
-    // m·ksub KB-grain rows with TWO broadcast consumers (the encode
-    // and the query dtable) — materialize once so the seed draw (a
-    // corpus orderBy+limit) and the Lloyd refine don't re-run per
-    // consumer (the ivfpqTrainCore codebook note, applied to the
-    // raw-vector PQ path)
-    val codebook = pqRefine(corpusSub, seeds, trainIters)
-      .localCheckpoint(true)
-    // --- encode: (neighbor_id, sub, code) ----------------------------
-    val encoded = corpusSub.join(broadcast(codebook), Seq("sub"))
-      .groupBy(col("neighbor_id"), col("sub"))
-      .agg(min(struct(intL2(col("sv"), col("cbv")).as("d2"), col("code")))
-        .getField("code").as("code"))
-    // --- per-query ADC distance tables: (query_id, sub, code, d2) ----
-    val qSub = queries
-      .select(col(idCol).as("query_id"),
-        explode(subvecs(quantize1e7(col(vecCol)), m)).as("s"))
-      .select(col("query_id"), col("s.sub").as("sub"), col("s.sv").as("qsv"))
-    val dtable = qSub.join(broadcast(codebook), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("code"),
-        intL2(col("qsv"), col("cbv")).as("d2"))
-    // --- ADC scoring: one sum-aggregation over table-lookup partials -
-    val adc = encoded.join(broadcast(dtable), Seq("sub", "code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("d2")).as("approx_d2"))
-    rankAndRerank(adc, queries, idCol, vecCol, k, rerank, Some(corpus))
+    // the one-cell IVFPQ: every vector sits in cell 0 and there is no
+    // centroid to subtract, so a residual is the quantized vector
+    def oneCell(df: DataFrame, idAs: String): DataFrame =
+      df.select(lit(0L).as("cell"), col(idCol).as(idAs),
+        quantize1e7(col(vecCol)).as("__rv"))
+    // trained paths read the residuals trainIters+1 times (each Lloyd
+    // step and the encode) — materialize them once; quantizing is
+    // cheap, so the untrained path reads them twice unmaterialized
+    val resid0 = oneCell(corpus, "neighbor_id")
+    val resid =
+      if (trainIters > 0) resid0.localCheckpoint(true) else resid0
+    val codebook = pqTrain(resid, m, ksub, trainIters)
+    rankAndRerank(adcScan(oneCell(queries, "query_id"), col("__rv"),
+        encodeResiduals(resid, codebook, m), codebook, m),
+      queries, idCol, vecCol, k, rerank, Some(corpus))
   }
 
   /** Shared tail of [[pqTopK]] and [[ivfpqSearchEncoded]]: rank
@@ -326,20 +314,31 @@ object Similarity {
     else {
       val src = rerankSource.getOrElse(throw new IllegalArgumentException(
         "rerank > 0 needs rerankSource (the original vectors)"))
-      val c = src.select(col(idCol).as("neighbor_id"),
-        quantize1e7(col(vecCol)).as("__qv"))
-      val qv = queries.select(col(idCol).as("query_id"),
-        quantize1e7(col(vecCol)).as("__rqv"))
-      l2TopK(l2TopK(adc0, "approx_d2", rerank)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(c, Seq("neighbor_id"))
-        .join(broadcast(qv), Seq("query_id"))
-        // slim before the window: the sort must not carry the two
-        // quantized vectors (the scoreAndRank note)
-        .select(col("query_id"), col("neighbor_id"),
-          intL2(col("__rqv"), col("__qv")).as("exact_d2")),
-        "exact_d2", k)
+      exactL2TopK(Some(l2TopK(adc0, "approx_d2", rerank)
+          .select(col("query_id"), col("neighbor_id"))),
+        queries, src, idCol, vecCol, k)
     }
+  }
+
+  /** Exact ×1e7 fixed-point L2² top-k of `queries` against `corpus`,
+    * over the candidate pairs `cand` (query_id, neighbor_id) when
+    * given, else over every pair but the self pair — the one exact
+    * scorer behind [[bruteTopKL2]] and every rerank tail. Queries
+    * broadcast; the corpus is scanned once. */
+  private def exactL2TopK(cand: Option[DataFrame], queries: DataFrame,
+                          corpus: DataFrame, idCol: String,
+                          vecCol: String, k: Int): DataFrame = {
+    val q = queries.select(col(idCol).as("query_id"),
+      quantize1e7(col(vecCol)).as("qv"))
+    val c = corpus.select(col(idCol).as("neighbor_id"),
+      quantize1e7(col(vecCol)).as("cv"))
+    val pairs = cand.fold(
+      c.join(broadcast(q), col("query_id") =!= col("neighbor_id")))(
+      _.join(c, Seq("neighbor_id")).join(broadcast(q), Seq("query_id")))
+    // slim before the window (the scoreAndRank note): the sort carries
+    // 24 B rows, not the two quantized vectors
+    l2TopK(pairs.select(col("query_id"), col("neighbor_id"),
+      intL2(col("qv"), col("cv")).as("approx_d2")), "approx_d2", k)
   }
 
   /** Per-query top-k by ascending `dCol` (ties → ascending
@@ -354,31 +353,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col(dCol).as("approx_d2"))
   }
-
-  /** `iters` Lloyd refinement steps of a PQ codebook over exploded
-    * subvectors (neighbor_id, sub, sv): assign every (row, sub) to its
-    * nearest codeword, then integer mean per (sub, code, dim); empty
-    * codewords drop (fewer, denser cells — fine for a quantizer, same
-    * stance as ivfTopK training). Shared by [[pqTopK]] (raw vectors)
-    * and [[ivfpqTopK]] (cell residuals). */
-  private def pqRefine(corpusSub: DataFrame, seeds: DataFrame,
-                       iters: Int): DataFrame =
-    (1 to iters).foldLeft(seeds) { (cb, _) =>
-      corpusSub.join(broadcast(cb), Seq("sub"))
-        .groupBy(col("neighbor_id"), col("sub"))
-        .agg(min(struct(intL2(col("sv"), col("cbv")).as("d2"),
-            col("code"), col("sv"))).as("best"))
-        .select(col("sub"), col("best.code").as("code"),
-          posexplode(col("best.sv")).as(Seq("dim", "v")))
-        .groupBy(col("sub"), col("code"), col("dim"))
-        .agg(floor(sum(col("v")).cast(DoubleType) / count(lit(1)) + 0.5d)
-          .cast(LongType).as("mv"))
-        .groupBy(col("sub"), col("code"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("mv"))))
-          .as("dm"))
-        .select(col("sub"), col("code"),
-          transform(col("dm"), e => e.getField("mv")).as("cbv"))
-    }
 
   /** IVF+PQ composed — the index structure 100 TB vector stores
     * actually deploy (Jégou et al., TPAMI 2011 §IV; FAISS `IVFPQ`):
@@ -482,23 +456,46 @@ object Similarity {
     val resid0 = ivfpqResiduals(corpus, idCol, vecCol, cents)
     val resid = if (pqIters > 0 || keepResid)
       resid0.localCheckpoint(true) else resid0
-    val residSub = resid
-      .select(col("neighbor_id"), explode(subvecs(col("__rv"), m)).as("s"))
-      .select(col("neighbor_id"), col("s.sub").as("sub"),
-        col("s.sv").as("sv"))
-    val seedW = Window.orderBy(col("__h"), col("neighbor_id"))
-    val seeds = resid.withColumn("__h", xxhash64(col("neighbor_id")))
-      .orderBy(col("__h"), col("neighbor_id")).limit(ksub)
-      .withColumn("code", row_number().over(seedW) - 1)
-      .select(col("code"), explode(subvecs(col("__rv"), m)).as("s"))
-      .select(col("s.sub").as("sub"), col("code"), col("s.sv").as("cbv"))
-    // the codebook is m·ksub KB-grain rows consumed repeatedly (the
-    // encode's broadcast, every search batch's dtable broadcast, the
-    // persist write) — materialize once at the definition grain so
-    // consumers stop re-running the seed draw + refine iterations
-    // (the ivfTrain checkpoint note, at the PQ tier)
-    (cents, pqRefine(residSub, seeds, pqIters).localCheckpoint(true),
-      resid)
+    (cents, pqTrain(resid, m, ksub, pqIters), resid)
+  }
+
+  /** The PQ codebook (sub, code, cbv) of residual rows (cell,
+    * neighbor_id, __rv), shared by [[pqTopK]] (raw vectors) and
+    * [[ivfpqTopK]] (cell residuals). The `ksub` [[seedDraw]] rows,
+    * numbered in draw order, are the seed codewords; each of `iters`
+    * Lloyd steps assigns every (row, sub) to its nearest codeword,
+    * then takes the integer mean per (sub, code, dim); empty codewords
+    * drop (fewer, denser cells — fine for a quantizer, same stance as
+    * ivfTopK training). The codebook is m·ksub KB-grain rows consumed
+    * repeatedly (the encode's broadcast, every search batch's dtable
+    * broadcast, the persist write) — materialized once at the
+    * definition grain so consumers stop re-running the seed draw +
+    * refine iterations (the ivfTrain checkpoint note, at the PQ
+    * tier). */
+  private def pqTrain(resid: DataFrame, m: Int, ksub: Int,
+                      iters: Int): DataFrame = {
+    val residSub = splitSub(resid, Seq("neighbor_id"), col("__rv"), m)
+    // global window is fine: ≤ ksub rows survive the limit
+    val seeds = splitSub(seedDraw(resid, ksub).withColumn("code",
+        row_number().over(Window.orderBy("__h", "neighbor_id")) - 1),
+      Seq("code"), col("__rv"), m, "cbv")
+      .select(col("sub"), col("code"), col("cbv"))
+    (1 to iters).foldLeft(seeds) { (cb, _) =>
+      residSub.join(broadcast(cb), Seq("sub"))
+        .groupBy(col("neighbor_id"), col("sub"))
+        .agg(min(struct(intL2(col("sv"), col("cbv")).as("d2"),
+            col("code"), col("sv"))).as("best"))
+        .select(col("sub"), col("best.code").as("code"),
+          posexplode(col("best.sv")).as(Seq("dim", "v")))
+        .groupBy(col("sub"), col("code"), col("dim"))
+        .agg(floor(sum(col("v")).cast(DoubleType) / count(lit(1)) + 0.5d)
+          .cast(LongType).as("mv"))
+        .groupBy(col("sub"), col("code"))
+        .agg(array_sort(collect_list(struct(col("dim"), col("mv"))))
+          .as("dm"))
+        .select(col("sub"), col("code"),
+          transform(col("dm"), e => e.getField("mv")).as("cbv"))
+    }.localCheckpoint(true)
   }
 
   /** Encode a batch against a FIXED index definition — the
@@ -519,11 +516,7 @@ object Similarity {
     * materialized residuals instead of re-running the assign pass. */
   private def encodeResiduals(resid: DataFrame, codebook: DataFrame,
                               m: Int): DataFrame =
-    resid
-      .select(col("cell"), col("neighbor_id"),
-        explode(subvecs(col("__rv"), m)).as("s"))
-      .select(col("cell"), col("neighbor_id"), col("s.sub").as("sub"),
-        col("s.sv").as("sv"))
+    splitSub(resid, Seq("cell", "neighbor_id"), col("__rv"), m)
       .join(broadcast(codebook), Seq("sub"))
       .groupBy(col("cell"), col("neighbor_id"), col("sub"))
       .agg(min(struct(intL2(col("sv"), col("cbv")).as("d2"), col("code")))
@@ -575,14 +568,22 @@ object Similarity {
                        nprobe: Int, m: Int): DataFrame = {
     val centQ = cents.select(col("cent_id").as("cell"),
       quantize1e7(col("cent_v")).as("cent_q"))
-    val probes = probeAssign(queries, idCol, vecCol, cents, nprobe)
-    // per-(query, cell) residual ADC tables
-    val dtable = probes.join(broadcast(centQ), Seq("cell"))
-      .select(col("query_id"), col("cell"),
-        explode(subvecs(zip_with(quantize1e7(col("qv")), col("cent_q"),
-          (a, b) => a - b), m)).as("s"))
-      .select(col("query_id"), col("cell"), col("s.sub").as("sub"),
-        col("s.sv").as("qsv"))
+    adcScan(probeAssign(queries, idCol, vecCol, cents, nprobe)
+        .join(broadcast(centQ), Seq("cell")),
+      zip_with(quantize1e7(col("qv")), col("cent_q"), (a, b) => a - b),
+      encoded, codebook, m)
+  }
+
+  /** The ADC scan every PQ search scores with: per-(query, cell)
+    * distance tables from each `qRows` row's residual `qresid`
+    * against that cell — (query_id, cell, sub, code, d2), |q|·cells·
+    * m·ksub rows, broadcast — hash-joined to the encoded state on
+    * (cell, sub, code), then one (query, neighbor) sum-aggregation:
+    * (query_id, neighbor_id, approx_d2). */
+  private def adcScan(qRows: DataFrame, qresid: Column,
+                      encoded: DataFrame, codebook: DataFrame,
+                      m: Int): DataFrame = {
+    val dtable = splitSub(qRows, Seq("query_id", "cell"), qresid, m, "qsv")
       .join(broadcast(codebook), Seq("sub"))
       .select(col("query_id"), col("cell"), col("sub"), col("code"),
         intL2(col("qsv"), col("cbv")).as("d2"))
@@ -591,6 +592,17 @@ object Similarity {
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("d2")).as("approx_d2"))
   }
+
+  /** Int8 codes for a corpus — the persistable REFINE-STAGE state
+    * ([[ivfpqSearchRefined]]'s middle stage): one row per vector,
+    * (neighbor_id, c8: struct(q array<int>, scale double)). In a
+    * standing ledger these live as a fourth part next to the PQ
+    * codes (1 byte/dim vs 4 — the refine stage then never touches
+    * original vectors; only the final exact top-refineFor(k) does). */
+  def sq8Encode(corpus: DataFrame, idCol: String,
+                vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("neighbor_id"),
+      quantizeInt8(col(vecCol)).as("c8"))
 
   /** TWO-STAGE refined search over the standing index — the
     * sub-linear-rerank frontier probe: [[ivfpqSearchEncoded]]'s exact
@@ -612,17 +624,6 @@ object Similarity {
     * degenerates to [[ivfpqSearchEncoded]]'s reranked form exactly
     * (the x15b/x53b degenerate-config gate, spec-pinned). Measured
     * sweep: SCALE.md round-9 two-stage table (20k and 200k lakes). */
-  /** Int8 codes for a corpus — the persistable REFINE-STAGE state
-    * ([[ivfpqSearchRefined]]'s middle stage): one row per vector,
-    * (neighbor_id, c8: struct(q array<int>, scale double)). In a
-    * standing ledger these live as a fourth part next to the PQ
-    * codes (1 byte/dim vs 4 — the refine stage then never touches
-    * original vectors; only the final exact top-refineFor(k) does). */
-  def sq8Encode(corpus: DataFrame, idCol: String,
-                vecCol: String): DataFrame =
-    corpus.select(col(idCol).as("neighbor_id"),
-      quantizeInt8(col(vecCol)).as("c8"))
-
   def ivfpqSearchRefined(queries: DataFrame, idCol: String,
                          vecCol: String, encoded: DataFrame,
                          cents: DataFrame, codebook: DataFrame,
@@ -659,31 +660,15 @@ object Similarity {
         lit(0.0d), (acc, v) => acc + v).as("sq8_d2")), "sq8_d2", refineTo)
       .select(col("query_id"), col("neighbor_id"))
     // exact fixed-point re-score of ONLY the refined survivors
-    val cQ = corpus.select(col(idCol).as("neighbor_id"),
-      quantize1e7(col(vecCol)).as("__cq"))
-    val qQ = queries.select(col(idCol).as("query_id"),
-      quantize1e7(col(vecCol)).as("__qq"))
-    l2TopK(refined.join(cQ, Seq("neighbor_id"))
-      .join(broadcast(qQ), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), // slim, as above
-        intL2(col("__qq"), col("__cq")).as("exact_d2")), "exact_d2", k)
+    exactL2TopK(Some(refined), queries, corpus, idCol, vecCol, k)
   }
 
   /** Exact fixed-point L2² top-k (ascending distance, ties → ascending
     * id) — the ground truth PQ approximates; same broadcast-queries ×
     * one-corpus-scan shape as [[bruteTopK]]. */
   def bruteTopKL2(queries: DataFrame, corpus: DataFrame,
-                  idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      quantize1e7(col(vecCol)).as("qv"))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      quantize1e7(col(vecCol)).as("cv"))
-    l2TopK(c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      // slim before the window (the scoreAndRank note): n·|q| rows
-      // sort at 24 B, not with two quantized vectors aboard
-      .select(col("query_id"), col("neighbor_id"),
-        intL2(col("qv"), col("cv")).as("approx_d2")), "approx_d2", k)
-  }
+                  idCol: String, vecCol: String, k: Int): DataFrame =
+    exactL2TopK(None, queries, corpus, idCol, vecCol, k)
 
   /** SQ8 (scalar-quantized int8) ANN — the third compression point on
     * the ANN ladder, between full-precision brute force and PQ codes
@@ -800,9 +785,7 @@ object Similarity {
   def ivfTrain(corpus: DataFrame, idCol: String, vecCol: String,
                nlist: Int = 16, trainIters: Int = 0): DataFrame = {
     val c = corpusPrep(corpus, idCol, vecCol)
-    val seeds = c
-      .withColumn("__h", xxhash64(col("neighbor_id")))
-      .orderBy(col("__h"), col("neighbor_id")).limit(nlist)
+    val seeds = seedDraw(c, nlist)
       .select(col("neighbor_id").as("cent_id"), col("cv").as("cent_v"),
         col("cn").as("cent_n"))
     // the trained centroids are ≤ nlist KB-grain rows consumed MANY
@@ -815,26 +798,12 @@ object Similarity {
     // pins the float centroid means to a single fold instead of one
     // per consumer.
     (1 to trainIters).foldLeft(seeds) { (cur, _) =>
-      // argmax over SLIM rows: the n×nlist join output projects to
-      // (id, cos, cent_id) ~24 B BEFORE the aggregation, and the
-      // vector payload joins back by id afterwards — carrying cv
-      // through the agg (the round-9 form's first(cv)) made the
-      // struct-max sort-aggregate spill n×nlist×|vec| bytes
-      // (~240 GB at 200k×2048; measured disk-full on this box, and
-      // the same fat shuffle at 100 TB)
-      val cells = c.join(broadcast(cur))
-        .select(col("neighbor_id"), struct(
-          (VectorExprs.dot(col("cv"), col("cent_v")) /
-            (col("cn") * col("cent_n"))).as("cos"),
-          col("cent_id")).as("sc"))
-        .groupBy(col("neighbor_id"))
-        .agg(max(col("sc")).getField("cent_id").as("cell"))
-      val assigned = c.select(col("neighbor_id"), col("cv"))
-        .join(cells, Seq("neighbor_id"))
-      // elementwise mean per cell: explode to (cell, pos, v), average,
-      // reassemble position-sorted — empty cells drop (fewer, denser
-      // cells is fine for a coarse quantizer)
-      assigned
+      // one Lloyd step: every vector joins its nearest centroid's id,
+      // then the elementwise mean per cell: explode to (cell, pos, v),
+      // average, reassemble position-sorted — empty cells drop (fewer,
+      // denser cells is fine for a coarse quantizer)
+      c.select(col("neighbor_id"), col("cv"))
+        .join(nearestCell(c, cur), Seq("neighbor_id"))
         .select(col("cell"), posexplode(col("cv")).as(Seq("pos", "v")))
         .groupBy(col("cell"), col("pos"))
         .agg(avg(col("v")).as("m"))
@@ -856,22 +825,25 @@ object Similarity {
   def ivfAssign(batch: DataFrame, idCol: String, vecCol: String,
                 cents: DataFrame): DataFrame = {
     val prep = corpusPrep(batch, idCol, vecCol)
-    // argmax over SLIM rows, payload joined back by id (see the
-    // ivfTrain Lloyd-step note): the n×nlist agg input must be
-    // (id, cos, cent_id) ~24 B, not first(cv)-dragged vectors —
-    // the fat form spilled n×nlist×|vec| bytes through the
-    // struct-max sort-aggregate (disk-full at 200k×2048 here;
-    // the same fattened shuffle at 100 TB). Results identical:
-    // same argmax, same tie-break, one extra id-equi-join.
-    val cells = prep.join(broadcast(cents))
+    prep.join(nearestCell(prep, cents), Seq("neighbor_id"))
+      .select(col("cell"), col("neighbor_id"), col("cv"), col("cn"))
+  }
+
+  /** The nearest centroid of each prep row (neighbor_id, cv, cn) by
+    * cosine, ties to the larger cent_id: (neighbor_id, cell). The
+    * argmax runs over SLIM rows — the n×nlist join output projects to
+    * (id, cos, cent_id) ~24 B BEFORE the aggregation, and callers join
+    * the vector payload back by id. Carrying cv through the agg (a
+    * first(cv) form) made the struct-max sort-aggregate spill
+    * n×nlist×|vec| bytes (~240 GB at 200k×2048, measured disk-full,
+    * and the same fat shuffle at 100 TB). */
+  private def nearestCell(prep: DataFrame, cents: DataFrame): DataFrame =
+    prep.join(broadcast(cents))
       .select(col("neighbor_id"),
         struct(centCos(col("cv"), col("cn")).as("cos"),
           col("cent_id")).as("sc"))
       .groupBy(col("neighbor_id"))
       .agg(max(col("sc")).getField("cent_id").as("cell"))
-    prep.join(cells, Seq("neighbor_id"))
-      .select(col("cell"), col("neighbor_id"), col("cv"), col("cn"))
-  }
 
   /** Probe-and-score over a pre-assigned corpus (the standing index
     * table). Split from [[ivfTopK]] so assignment state persists and
@@ -886,39 +858,6 @@ object Similarity {
     scoreAndRank(scored, k)
   }
 
-  /** ANN-difficulty PREFLIGHT — per-query relative contrast RC_k
-    * (He, Kumar, Niyogi, Chang, "On the Difficulty of Nearest
-    * Neighbor Search", ICML 2012): E[d(q, X)] over the corpus divided
-    * by the mean distance to q's k nearest neighbors. RC ≈ 1 means
-    * distances CONCENTRATE: a query's true neighbors are barely
-    * closer than arbitrary points, so they scatter across any
-    * coarse-quantizer partition and NO cell/bucket index (IVF, LSH)
-    * can prune aggressively without losing recall — the regime the
-    * round-6 sf1 sweep measured on the shifted-copy synthetic lake
-    * (RC ≈ 1.3; IVFPQ recall 0.44 at 12.5% probed, 0.90 even probing
-    * every cell). RC ≫ 1 (clustered corpora — the common case for
-    * real embedding models) is where the IVF scale path holds. This
-    * probe is the go/no-go a pipeline runs BEFORE paying for an index
-    * build: prunable=false routes to the exact scan (x6/sq8) or a
-    * higher nprobe, the same decide-from-a-measurement discipline as
-    * SketchFns.lgkFor and Dedup.bandsFor.
-    *
-    * Contract (same as [[bitextMarginMining]]'s): `queries` and
-    * `corpus` draw ids from ONE namespace — the self-pair exclusion
-    * is `query_id =!= neighbor_id`, so a query whose id happens to
-    * equal an UNRELATED corpus row's id would silently lose that one
-    * legitimate neighbor (skewing mean_nn_dist and RC). Probing with
-    * corpus rows themselves (x93's shape) satisfies this by
-    * construction; independently-keyed query sets must be re-keyed
-    * (offset or tag) into the corpus's namespace first.
-    *
-    * Shape: |Q| probe queries broadcast against ONE corpus scan; the
-    * all-points mean is a decimal sum and the kNN mean rides the same
-    * aggregation through the bounded-heap [[graft.functions.TopKAgg]]
-    * (KB state, map-side combine) — no corpus sort, no data-grain
-    * window. Distances live on the ×1e7 integer grid (exact sums,
-    * IEEE sqrt, round-to-6dp before decimal aggregation) so both
-    * engines hash-match. */
   /** The [[annDifficulty]] verdict as one conservative scalar: true
     * only when EVERY probe query measures prunable — a single
     * concentrated probe downgrades the route to exact. The collect is
@@ -2635,6 +2574,39 @@ object Similarity {
       .filter(col("__rn") === 1).drop("__bk", "__rn")
   }
 
+  /** ANN-difficulty PREFLIGHT — per-query relative contrast RC_k
+    * (He, Kumar, Niyogi, Chang, "On the Difficulty of Nearest
+    * Neighbor Search", ICML 2012): E[d(q, X)] over the corpus divided
+    * by the mean distance to q's k nearest neighbors. RC ≈ 1 means
+    * distances CONCENTRATE: a query's true neighbors are barely
+    * closer than arbitrary points, so they scatter across any
+    * coarse-quantizer partition and NO cell/bucket index (IVF, LSH)
+    * can prune aggressively without losing recall — the regime the
+    * round-6 sf1 sweep measured on the shifted-copy synthetic lake
+    * (RC ≈ 1.3; IVFPQ recall 0.44 at 12.5% probed, 0.90 even probing
+    * every cell). RC ≫ 1 (clustered corpora — the common case for
+    * real embedding models) is where the IVF scale path holds. This
+    * probe is the go/no-go a pipeline runs BEFORE paying for an index
+    * build: prunable=false routes to the exact scan (x6/sq8) or a
+    * higher nprobe, the same decide-from-a-measurement discipline as
+    * SketchFns.lgkFor and Dedup.bandsFor.
+    *
+    * Contract (same as [[bitextMarginMining]]'s): `queries` and
+    * `corpus` draw ids from ONE namespace — the self-pair exclusion
+    * is `query_id =!= neighbor_id`, so a query whose id happens to
+    * equal an UNRELATED corpus row's id would silently lose that one
+    * legitimate neighbor (skewing mean_nn_dist and RC). Probing with
+    * corpus rows themselves (x93's shape) satisfies this by
+    * construction; independently-keyed query sets must be re-keyed
+    * (offset or tag) into the corpus's namespace first.
+    *
+    * Shape: |Q| probe queries broadcast against ONE corpus scan; the
+    * all-points mean is a decimal sum and the kNN mean rides the same
+    * aggregation through the bounded-heap [[graft.functions.TopKAgg]]
+    * (KB state, map-side combine) — no corpus sort, no data-grain
+    * window. Distances live on the ×1e7 integer grid (exact sums,
+    * IEEE sqrt, round-to-6dp before decimal aggregation) so both
+    * engines hash-match. */
   def annDifficulty(corpus: DataFrame, queries: DataFrame,
                     idCol: String, vecCol: String, k: Int = 5,
                     prunableAt: Double = 2.0): DataFrame = {

@@ -47,11 +47,22 @@ object Streams {
   }
 
   /** [[run]] `stream` into an in-memory sink named uniquely for this
-    * start; the result is `spark.table(q.name)`. */
+    * start, and return the sink's rows. The sink's temp view is
+    * dropped once resolved: the returned DataFrame holds the sink
+    * itself, so no run's result stays registered in the session after
+    * its caller lets go. `onDone` sees the finished query. */
   private def runToMemory(stream: DataFrame, mode: String,
-                          queryName: String): StreamingQuery =
-    run(stream.writeStream.outputMode(mode).format("memory")
+                          queryName: String,
+                          onDone: StreamingQuery => Unit = _ => ())
+      : DataFrame = {
+    val q = run(stream.writeStream.outputMode(mode).format("memory")
       .queryName(s"${queryName}_${runSeq.incrementAndGet()}"))
+    onDone(q)
+    val spark = stream.sparkSession
+    val out = spark.table(q.name)
+    spark.catalog.dropTempView(q.name)
+    out
+  }
 
   /** [[run]] `stream` in append mode through `fold` on every
     * micro-batch (foreachBatch), checkpointed at `checkpointDir` when
@@ -124,9 +135,8 @@ object Streams {
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
         col("event_type"), col("n_events"),
         col("sum_value").cast("double").as("sum_value"))
-    val q = withStreamShuffle(spark, 8)(
+    withStreamShuffle(spark, 8)(
       runToMemory(stream, "complete", queryName))
-    spark.table(q.name)
   }
 
   /** Stage the events table and return a watermarked event-time stream
@@ -151,7 +161,7 @@ object Streams {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
         col("event_type"), col("n_events"))
-    spark.table(runToMemory(stream, "complete", queryName).name)
+    runToMemory(stream, "complete", queryName)
   }
 
   /** flatMapGroupsWithState input/output rows for [[streamSessionize]]. */
@@ -211,7 +221,7 @@ object Streams {
           flush()
           out.iterator
       }
-    spark.table(runToMemory(sessions.toDF(), "append", queryName).name)
+    runToMemory(sessions.toDF(), "append", queryName)
       .select(col("user_id"), col("session_id"), col("n_events"),
         date_format(timestamp_seconds(col("start_sec")),
           "yyyy-MM-dd HH:mm:ss").as("session_start"))
@@ -235,7 +245,7 @@ object Streams {
         date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("c_mktsegment"), col("n_events"),
         col("sum_value").cast("double").as("sum_value"))
-    spark.table(runToMemory(stream, "complete", queryName).name)
+    runToMemory(stream, "complete", queryName)
   }
 
   /** foreachBatch incremental upsert: each micro-batch's new user ids
@@ -291,9 +301,8 @@ object Streams {
         col("click_ts") >= col("view_ts") &&
         col("click_ts") <= col("view_ts") + expr("INTERVAL 24 HOURS"))
       .select(col("user_id"), col("view_id"), col("click_id"))
-    val q = withStreamShuffle(spark, 8)(
+    withStreamShuffle(spark, 8)(
       runToMemory(joined, "append", queryName))
-    spark.table(q.name)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_view_click_pairs"))
   }
@@ -330,11 +339,10 @@ object Streams {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
         col("event_type"), col("n_events"))
-    val q = withStreamShuffle(spark, 8)(
-      runToMemory(stream, "append", queryName))
-    q.recentProgress.foreach(p => System.err.println(
-      s"[st8] batch=${p.batchId} in=${p.numInputRows} wm=${p.eventTime.get("watermark")}"))
-    spark.table(q.name)
+    withStreamShuffle(spark, 8)(
+      runToMemory(stream, "append", queryName, _.recentProgress.foreach(p =>
+        System.err.println(s"[st8] batch=${p.batchId} in=${p.numInputRows} " +
+          s"wm=${p.eventTime.get("watermark")}"))))
   }
 
   /** Streaming stateful dedup: first event per user within the watermark
@@ -345,7 +353,7 @@ object Streams {
     val stream = eventStream(spark, sfDir, "st3_src", "365 days")
       .dropDuplicates("user_id")
       .select(col("user_id"))
-    spark.table(runToMemory(stream, "append", queryName).name)
+    runToMemory(stream, "append", queryName)
   }
 
   /** Left-OUTER stream-stream join: st7's view→click attribution with
@@ -375,9 +383,8 @@ object Streams {
         col("click_ts") <= col("view_ts") + expr("INTERVAL 24 HOURS"),
       "left_outer")
       .select(col("user_id"), col("view_id"), col("click_id"))
-    val q = withStreamShuffle(spark, 8)(
+    withStreamShuffle(spark, 8)(
       runToMemory(joined, "append", queryName))
-    spark.table(q.name)
       .groupBy(col("user_id"))
       .agg(count(col("click_id")).as("n_pairs"),
         sum(when(col("click_id").isNull, 1L).otherwise(0L))
@@ -1857,9 +1864,8 @@ object Streams {
           state.update(seen)
           out.iterator
       }
-    val q = withStreamShuffle(spark, 8)(
+    withStreamShuffle(spark, 8)(
       runToMemory(flags.toDF(), "append", queryName))
-    spark.table(q.name)
       .groupBy(col("doc_id"))
       .agg(max(when(col("hit"), 1).otherwise(0)).as("__anyhit"))
       .select(col("doc_id"),

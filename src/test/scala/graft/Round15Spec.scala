@@ -162,9 +162,16 @@ class Round15Spec extends GraftSuite {
     // parts the failed rewrite half-replaced
     val poison = spark.range(1)
       .select(expr("assert_true(id > 0)").as("x")) // null => throws
-    intercept[Throwable] {
+    // the poisoned tasks fail on purpose: silence Spark's task-failure
+    // ERROR stacks for this write only, so the test log carries none
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.config.Configurator
+    val sparkLog = "org.apache.spark"
+    val level = LogManager.getLogger(sparkLog).getLevel
+    Configurator.setLevel(sparkLog, Level.OFF)
+    try intercept[Throwable] {
       VersionedState.write(path, "v1", "part" -> poison)
-    }
+    } finally Configurator.setLevel(sparkLog, level)
     assert(!VersionedState.exists(spark, path, "v1"),
       "a valid meta survived a failed rewrite — the reader-safety " +
         "window the invalidate-first order exists to close")
@@ -287,6 +294,22 @@ class Round15Spec extends GraftSuite {
       enc.filter(col("neighbor_id") % 4 =!= col("__bid")).count()
     assert(misplaced === 0L,
       s"$misplaced encoded rows sit under another split's __bid")
+  }
+
+  test("a memory-sink stream leaves no temp view behind: two runs " +
+       "of one query register none of their views and return equal " +
+       "results") {
+    def run() = graft.streaming.Streams
+      .streamDistinctUsers(spark, dir, "r15_sink_views")
+    val a = run()
+    val b = run()
+    val views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("r15_sink_views"))
+    assert(views.isEmpty,
+      s"memory-sink views still registered: ${views.mkString(", ")}")
+    val ra = a.collect().map(_.get(0).toString).sorted.toSeq
+    assert(ra.nonEmpty, "vacuous: the stream returned no rows")
+    assert(ra === b.collect().map(_.get(0).toString).sorted.toSeq)
   }
 
   test("st19's per-batch fold FAILS FAST when the standing model was " +

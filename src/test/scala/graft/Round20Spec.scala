@@ -23,6 +23,24 @@ class Round20Spec extends GraftSuite {
   private def rowsEqual(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
+  /** `body`'s result and the Spark jobs it fired. AQE is off so one
+    * action is one job plus its broadcasts (the console-poll pattern);
+    * counted per job group. */
+  private def jobsOf[T](group: String)(body: => T): (T, Int) = {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val out = try {
+      spark.sparkContext.setJobGroup(group, group,
+        interruptOnCancel = false)
+      body
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+    (out, spark.sparkContext.statusTracker
+      .getJobIdsForGroup(group).length)
+  }
+
   /** One cell-layout bundle of the n-row blob lake, fresh at `tag`. */
   private def bundleOf(n: Long, nlist: Int, m: Int, ksub: Int,
                        tag: String): (DataFrame, String, String) = {
@@ -165,22 +183,6 @@ class Round20Spec extends GraftSuite {
       Similarity.loadIndexCellLayout(spark, p, v)
     val q = Similarity.stratifiedProbes(lake, "vec_id", 4)
       .drop("h4").localCheckpoint(true)
-    // AQE off so one action is one job plus its broadcasts (the
-    // console-poll pattern); counted per job group
-    def jobsOf[T](group: String)(body: => T): (T, Int) = {
-      val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val out = try {
-        spark.sparkContext.setJobGroup(group, group,
-          interruptOnCancel = false)
-        body
-      } finally {
-        spark.sparkContext.clearJobGroup()
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      }
-      (out, spark.sparkContext.statusTracker
-        .getJobIdsForGroup(group).length)
-    }
     val (routed, routeJobs) = jobsOf("r20_jobs_route") {
       Similarity.annTopKFilteredRouted(q, lake, "vec_id", "embedding",
         col("h4") < 2, k, enc, cents, codebook, nlist, m,
@@ -205,6 +207,45 @@ class Round20Spec extends GraftSuite {
     assert(routeCollectJobs <= 8, s"router result: $got")
     assert(prunedJobs <= 2, s"pruned construction: $got")
     assert(prunedCollectJobs <= 5, s"pruned result: $got")
+  }
+
+  test("the PQ family fires no more Spark jobs than its pinned " +
+       "counts: pqTopK untrained and trained with rerank, ivfpqTopK " +
+       "with rerank, ivfpqTrainEncode and ivfpqSearchRefined") {
+    val k = 5; val m = 8; val ksub = 16
+    val lake = Similarity.hashBlobLake(spark, 1000L).localCheckpoint(true)
+    val q = lake.filter(col("vec_id") % 97 === 3).localCheckpoint(true)
+    // (construction jobs, result-collect jobs) per case
+    def pinned(tag: String)(build: => DataFrame): (Int, Int) = {
+      val (df, built) = jobsOf(s"r20_pq_$tag")(build)
+      val (_, collected) = jobsOf(s"r20_pq_${tag}_collect")(df.collect())
+      (built, collected)
+    }
+    val pq0 = pinned("pq0")(Similarity.pqTopK(q, lake, "vec_id",
+      "embedding", k, m, ksub))
+    val pq1 = pinned("pq1")(Similarity.pqTopK(q, lake, "vec_id",
+      "embedding", k, m, ksub, trainIters = 1, rerank = 20))
+    val ivfpq = pinned("ivfpq")(Similarity.ivfpqTopK(q, lake, "vec_id",
+      "embedding", k, 16, 4, m, ksub, coarseIters = 1, pqIters = 1,
+      rerank = 20))
+    val ((cents, codebook, enc), trainJobs) = jobsOf("r20_pq_train") {
+      Similarity.ivfpqTrainEncode(lake, "vec_id", "embedding", 16, m,
+        ksub, coarseIters = 1, pqIters = 1)
+    }
+    val (_, encJobs) = jobsOf("r20_pq_train_collect")(enc.collect())
+    val refined = pinned("refined")(Similarity.ivfpqSearchRefined(q,
+      "vec_id", "embedding", enc, cents, codebook, k, 4, m, pool = 30,
+      refineTo = 10, corpus = lake))
+    val got = s"pq0=$pq0 pq1=$pq1 ivfpq=$ivfpq " +
+      s"trainEncode=($trainJobs,$encJobs) refined=$refined"
+    // ceilings: the counts measured while pqTopK still had its own
+    // seed draw, encode, ADC and rerank code
+    assert(pq0._1 <= 1 && pq0._2 <= 3, s"pqTopK untrained: $got")
+    assert(pq1._1 <= 3 && pq1._2 <= 6, s"pqTopK trained+rerank: $got")
+    assert(ivfpq._1 <= 9 && ivfpq._2 <= 8, s"ivfpqTopK+rerank: $got")
+    assert(trainJobs <= 9 && encJobs <= 2, s"ivfpqTrainEncode: $got")
+    assert(refined._1 <= 0 && refined._2 <= 10,
+      s"ivfpqSearchRefined: $got")
   }
 
   // --------------------------------------- estate re-shard lifecycle
