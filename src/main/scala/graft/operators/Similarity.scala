@@ -1360,10 +1360,8 @@ object Similarity {
     // cents row count (ground truth, not a re-parse of the version
     // stamp), tombstones are the shard's own
     def loadShards = shardPaths.zip(versions).map { case (p, v) =>
-      val (cents, codebook, enc0) = loadIndexCellLayout(spark, p, v)
-      val nl = cents.count().toInt
-      ShardIndex(cents, codebook,
-        liveEncoded(enc0, annTombstones(spark, p)), nl)
+      val (cents, codebook, live) = loadLiveIndex(spark, p, v)
+      ShardIndex(cents, codebook, live, cents.count().toInt)
     }
     val (r, np) = filteredRouteCore("annTopKFilteredRoutedSharded",
       queries, corpus, idCol, vecCol, pred, k, loadShards, m,
@@ -1581,6 +1579,19 @@ object Similarity {
     val (cents, codebook, encoded) = loadIndex(spark, path, version)
     (cents, codebook,
       encoded.withColumn("cell", col("cell").cast(LongType)))
+  }
+
+  /** The tombstone-aware read of a standing bundle in either layout:
+    * [[loadIndexCellLayout]], then [[liveEncoded]] against the
+    * bundle's own [[annTombstones]] — what every search consumer of
+    * standing state reads (the x119 contract). On a flat bundle `cell`
+    * is already LONG, so the optimizer drops the cast and the plan is
+    * the flat [[loadIndex]] read's. */
+  def loadLiveIndex(spark: SparkSession, path: String, version: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val (cents, codebook, encoded) =
+      loadIndexCellLayout(spark, path, version)
+    (cents, codebook, liveEncoded(encoded, annTombstones(spark, path)))
   }
 
   /** [[ivfpqSearchEncoded]] over a cell-layout ledger with the probe

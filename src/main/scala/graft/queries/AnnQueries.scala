@@ -127,11 +127,7 @@ private[graft] object AnnQueries {
     // unnoticed — the x106/x61 drift-gate discipline on the index tier
     val drift = Similarity.indexGeometryDrift(encoded, nlist)
       .select(col("sized_nlist_now"), col("rebuild_recommended"))
-    exact.as("b").join(got.as("l"),
-        col("b.query_id") === col("l.query_id") &&
-          col("b.neighbor_id") === col("l.neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        count(col("l.neighbor_id")).as("n_hit"))
+    recallTally(exact, got)
       .join(nEnc, lit(true), "left") // 1-row pane join idiom
       .join(drift, lit(true), "left")
       .select(
@@ -172,20 +168,14 @@ private[graft] object AnnQueries {
       // deterministic function of the deterministic lake.
       val n = 2000L; val nlist = 64; val nprobe = 8; val k = 5
       val lake = Similarity.hashBlobLake(s, n).localCheckpoint(true)
-      val version = Similarity.annIndexVersion(nlist, 8, 16)
-      val path = annLedgerPath(version,
-        s"${Similarity.hashBlobLakeKey(n)}$keySuffix")
-      // RAW load, deliberately not standingAnnIndex: that helper is
-      // tombstone-aware (the x119 contract applied engine-wide), but
-      // THIS query is the before/after contrast itself — its "pre"
-      // phase must see the unfiltered state even on a warm rerun
-      // where last run's tombstones already exist
-      if (!Similarity.indexExists(s, path, version)) {
-        val (c0, cb0, e0) = Similarity.ivfpqTrainEncode(lake,
-          "vec_id", "embedding", nlist, 8, 16,
-          coarseIters = 1, pqIters = 1)
-        Similarity.persistIndex(path, version, c0, cb0, e0)
-      }
+      // the shared guarded build, then the RAW read (loadIndex, not
+      // the tombstone-aware loadLiveIndex every other consumer reads
+      // through): THIS query is the before/after contrast itself —
+      // its "pre" phase must see the unfiltered state even on a warm
+      // rerun where last run's tombstones already exist
+      val (path, version) = standingAnnBundle(s,
+        s"${Similarity.hashBlobLakeKey(n)}$keySuffix", lake, nlist,
+        m = 8, ksub = 16)
       val (cents, codebook, encoded) =
         Similarity.loadIndex(s, path, version)
       val q = Similarity.stratifiedProbes(lake, "vec_id", 16)
@@ -214,11 +204,7 @@ private[graft] object AnnQueries {
       val postHit = post.join(tsv, Seq("neighbor_id"), "left_semi")
         .agg(count(lit(1)).as("n_post_results_forgotten"))
       val nTs = ts.agg(count(lit(1)).as("n_forgotten"))
-      postExact.as("b").join(post.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(postExact, post)
         .join(nTs, lit(true), "left") // 1-row pane join idiom
         .join(preHit, lit(true), "left")
         .join(postHit, lit(true), "left")
@@ -356,7 +342,8 @@ private[graft] object AnnQueries {
       val q = emb.filter(col("vec_id") < 10)
       val lsh = Similarity.lshTopK(q, emb, "vec_id", "embedding",
         k = 5, planes = 4, tables = 8)
-      annRecallContract(lsh, q, emb, bound = 0.6, flag = "recall_ge_06")
+      val exact = Similarity.bruteTopK(q, emb, "vec_id", "embedding", 5)
+      annRecallContract(lsh, exact, bound = 0.6, flag = "recall_ge_06")
     }, """
       SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS recall_ge_06
       FROM embeddings WHERE vec_id < 10"""),
@@ -371,7 +358,8 @@ private[graft] object AnnQueries {
       val q = emb.filter(col("vec_id") < 10)
       val ivf = Similarity.ivfTopK(q, emb, "vec_id", "embedding",
         k = 5, nlist = 16, nprobe = 4)
-      annRecallContract(ivf, q, emb, bound = 0.4, flag = "recall_ge_04")
+      val exact = Similarity.bruteTopK(q, emb, "vec_id", "embedding", 5)
+      annRecallContract(ivf, exact, bound = 0.4, flag = "recall_ge_04")
     }, """
       SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS recall_ge_04
       FROM embeddings WHERE vec_id < 10"""),
@@ -397,7 +385,8 @@ private[graft] object AnnQueries {
       val q = emb.filter(col("vec_id") < 10)
       val ivf = Similarity.ivfSearchAssigned(q, "vec_id", "embedding",
         index, cents, k = 5, nprobe = 4)
-      annRecallContract(ivf, q, emb, bound = 0.4, flag = "recall_ge_04")
+      val exact = Similarity.bruteTopK(q, emb, "vec_id", "embedding", 5)
+      annRecallContract(ivf, exact, bound = 0.4, flag = "recall_ge_04")
     }, """
       SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS recall_ge_04
       FROM embeddings WHERE vec_id < 10"""),
@@ -449,14 +438,7 @@ private[graft] object AnnQueries {
       val pq = Similarity.pqTopK(q, emb, "vec_id", "embedding",
         k = 5, m = 8, ksub = 16, trainIters = 2, rerank = 200)
       val exact = Similarity.bruteTopKL2(q, emb, "vec_id", "embedding", 5)
-      exact.as("b").join(pq.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .groupBy(col("b.query_id"))
-        .agg((count(col("l.neighbor_id")).cast("double") / lit(5.0d))
-          .as("recall"))
-        .agg(count(lit(1)).as("n_queries"),
-          (avg(col("recall")) >= lit(0.8d)).as("recall_ge_08"))
+      annRecallContract(pq, exact, bound = 0.8, flag = "recall_ge_08")
     }, """
       SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS recall_ge_08
       FROM embeddings WHERE vec_id < 10"""),
@@ -509,14 +491,7 @@ private[graft] object AnnQueries {
         k = 5, nlist = 16, nprobe = 12, m = 8, ksub = 16,
         coarseIters = 1, pqIters = 1, rerank = 200)
       val exact = Similarity.bruteTopKL2(q, emb, "vec_id", "embedding", 5)
-      exact.as("b").join(ann.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .groupBy(col("b.query_id"))
-        .agg((count(col("l.neighbor_id")).cast("double") / lit(5.0d))
-          .as("recall"))
-        .agg(count(lit(1)).as("n_queries"),
-          (avg(col("recall")) >= lit(0.8d)).as("recall_ge_08"))
+      annRecallContract(ann, exact, bound = 0.8, flag = "recall_ge_08")
     }, """
       SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS recall_ge_08
       FROM embeddings WHERE vec_id < 10"""),
@@ -544,14 +519,7 @@ private[graft] object AnnQueries {
         index, cents, cb, k = 5, nprobe = 12, rerank = 200,
         rerankSource = Some(emb))
       val exact = Similarity.bruteTopKL2(q, emb, "vec_id", "embedding", 5)
-      exact.as("b").join(ann.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .groupBy(col("b.query_id"))
-        .agg((count(col("l.neighbor_id")).cast("double") / lit(5.0d))
-          .as("recall"))
-        .agg(count(lit(1)).as("n_queries"),
-          (avg(col("recall")) >= lit(0.8d)).as("recall_ge_08"))
+      annRecallContract(ann, exact, bound = 0.8, flag = "recall_ge_08")
     }, """
       SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS recall_ge_08
       FROM embeddings WHERE vec_id < 10"""),
@@ -652,11 +620,7 @@ private[graft] object AnnQueries {
         "vec_id", "embedding", k, nlist = nlist, nprobe = nprobe)
       val exact = Similarity.bruteTopKL2(q, lake, "vec_id",
         "embedding", k)
-      exact.as("b").join(r.result.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, r.result)
         .select(lit(r.route).as("route"), lit(n).as("n_corpus"),
           col("n_exact"),
           round(col("n_hit").cast(DoubleType) / col("n_exact"), 4)
@@ -700,11 +664,7 @@ private[graft] object AnnQueries {
       val (route, routed) = (r.route, r.result)
       val exact = Similarity.bruteTopKL2(q, lake, "vec_id",
         "embedding", k)
-      exact.as("b").join(routed.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, routed)
         .select(lit(route).as("route"), col("n_exact"),
           round(col("n_hit").cast(DoubleType) / col("n_exact"), 4)
             .as("recall"),
@@ -870,11 +830,7 @@ private[graft] object AnnQueries {
       val merged = Similarity.ivfpqMergeTopK(per, k)
       val exact = Similarity.bruteTopKL2(q, lake, "vec_id",
         "embedding", k)
-      exact.as("b").join(merged.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, merged)
         .select(lit(shards.toLong).as("n_shards"),
           lit(parts(0)._3).as("n_shard0"),
           lit(parts(1)._3).as("n_shard1"),
@@ -944,11 +900,7 @@ private[graft] object AnnQueries {
         rerankSource = Some(lakeNow))
       val exact = Similarity.bruteTopKL2(q, lakeNow, "vec_id",
         "embedding", 5)
-      exact.as("b").join(got.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, got)
         .join(after, lit(true), "left") // 1-row pane join idiom
         .select(lit(nl0.toLong).as("stale_trained_nlist"),
           lit(sized.toLong).as("sized_nlist_now"),
@@ -1116,11 +1068,7 @@ private[graft] object AnnQueries {
         .agg(count(lit(1)).as("n_post_results_forgotten"))
       val tsAfter = Similarity.annTombstones(s, path)
         .agg(count(lit(1)).as("n_tombstones_after"))
-      postExact.as("b").join(post.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(postExact, post)
         .join(tsAfter, lit(true), "left") // 1-row pane join idiom
         .join(postHit, lit(true), "left")
         .select(lit(version).as("version"),
@@ -1202,11 +1150,7 @@ private[graft] object AnnQueries {
           lake.filter(!pred).select(col("vec_id").as("neighbor_id")),
           Seq("neighbor_id"), "left_semi")
           .agg(count(lit(1)).as("n_off_pred"))
-        exact.as("b").join(r.result.as("l"),
-            col("b.query_id") === col("l.query_id") &&
-              col("b.neighbor_id") === col("l.neighbor_id"), "left")
-          .agg(count(lit(1)).as("n_exact"),
-            count(col("l.neighbor_id")).as("n_hit"))
+        recallTally(exact, r.result)
           .join(offPred, lit(true), "left") // 1-row pane join idiom
           .select(lit(name).as("branch"), lit(r.route).as("route"),
             lit(r.nSurvivors).as("n_survivors"),
@@ -1337,18 +1281,9 @@ private[graft] object AnnQueries {
       val m = 8
       val lake = Similarity.hashBlobLake(s, n).localCheckpoint(true)
       val version = Similarity.annIndexVersion(nlist, m, 16)
-      val path = annLedgerPath(version,
-        s"${Similarity.hashBlobLakeKey(n)}-celllayout")
-      if (!Similarity.indexExists(s, path, version)) {
-        val (c0, cb0, e0) = Similarity.ivfpqTrainEncode(lake,
-          "vec_id", "embedding", nlist, m, 16,
-          coarseIters = 1, pqIters = 1)
-        Similarity.persistIndexCellLayout(path, version, c0, cb0, e0)
-      }
-      val (cents, codebook, enc0) =
-        Similarity.loadIndexCellLayout(s, path, version)
-      val encoded = Similarity.liveEncoded(enc0,
-        Similarity.annTombstones(s, path)) // the x119 contract
+      val (cents, codebook, encoded) = standingAnnIndex(s,
+        s"${Similarity.hashBlobLakeKey(n)}-celllayout", lake, nlist, m,
+        ksub = 16, cellLayout = true)
       val q = Similarity.stratifiedProbes(lake, "vec_id", 16)
         .localCheckpoint(true)
       val rr = Similarity.rerankFor(n, nlist, nprobe)
@@ -1360,23 +1295,17 @@ private[graft] object AnnQueries {
         rerank = rr, rerankSource = Some(lake))
       val prunedC = pruned.localCheckpoint(true)
       val equal = rowSetEqual(prunedC, full)
-      val filesRead = encoded
-        .filter(col("cell").isInCollection(cells.toSeq))
-        .select(input_file_name()).distinct().count()
+      val nFilesRead = filesRead(encoded, cells)
       val filesTotal = encoded
         .select(input_file_name()).distinct().count()
       val exact = Similarity.bruteTopKL2(q, lake, "vec_id",
         "embedding", k)
-      exact.as("b").join(prunedC.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, prunedC)
         .select(lit(version).as("version"),
           lit(nlist.toLong).as("n_cells_total"),
           lit(cells.length.toLong).as("n_cells_probed"),
           lit(filesTotal).as("n_files_total"),
-          lit(filesRead).as("n_files_read"),
+          lit(nFilesRead).as("n_files_read"),
           lit(equal).as("pruned_equals_full"),
           col("n_exact"),
           round(col("n_hit").cast(DoubleType) / col("n_exact"), 4)
@@ -1425,10 +1354,8 @@ private[graft] object AnnQueries {
         s"${Similarity.hashBlobLakeKey(n)}-promoted")
       Similarity.promoteIngestLedger(s, defPath, version, encPath,
         outPath)
-      val (cents, codebook, prom0) =
-        Similarity.loadIndexCellLayout(s, outPath, version)
-      val promoted = Similarity.liveEncoded(prom0,
-        Similarity.annTombstones(s, outPath)) // the x119 contract
+      val (cents, codebook, promoted) =
+        Similarity.loadLiveIndex(s, outPath, version)
       // row equality needs one column ORDER: the bundle read appends
       // the partition column last, the accreted read carries it first
       val cols = Seq("cell", "neighbor_id", "sub", "code")
@@ -1463,18 +1390,11 @@ private[graft] object AnnQueries {
             // contract, now holding on stream-accreted content) —
             // the accreted __bid layout cannot prune by cell at all,
             // whatever its file count
-            val fr = promoted
-              .filter(col("cell").isInCollection(cells0.toSeq))
-              .select(input_file_name()).distinct().count()
-            (cells0, got0, fr)
+            (cells0, got0, filesRead(promoted, cells0))
           })
       val exact = Similarity.bruteTopKL2(q, lake, "vec_id",
         "embedding", k)
-      exact.as("b").join(got.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, got)
         .select(lit(version).as("version"),
           lit(nBatches).as("n_batches"),
           lit(contentEqual).as("promoted_equals_accreted"),
@@ -1585,10 +1505,8 @@ private[graft] object AnnQueries {
         Similarity.indexExists(s, s"$rootPath/ann_$v1", v1)
       // (6) search what remains — through the tombstone-aware read
       // (empty set post-compact; the x119 contract)
-      val (cents, codebook, enc1) =
-        Similarity.loadIndex(s, s"$rootPath/ann_$v1", v1)
-      val encoded = Similarity.liveEncoded(enc1,
-        Similarity.annTombstones(s, s"$rootPath/ann_$v1"))
+      val (cents, codebook, encoded) =
+        Similarity.loadLiveIndex(s, s"$rootPath/ann_$v1", v1)
       val np = Similarity.nprobeFor(sized)
       val got = Similarity.ivfpqSearchEncoded(q, "vec_id",
         "embedding", encoded, cents, codebook, k, np, m,
@@ -1600,11 +1518,7 @@ private[graft] object AnnQueries {
         "embedding", k)
       val gotHitTs = got.join(tsIds, Seq("neighbor_id"), "left_semi")
         .agg(count(lit(1)).as("n_results_forgotten"))
-      exact.as("b").join(got.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, got)
         .join(gotHitTs, lit(true), "left") // 1-row pane join idiom
         .select(
           lit(fired).as("drift_fired"),
@@ -1714,11 +1628,8 @@ private[graft] object AnnQueries {
       // invariants).
       val n = 2000L; val nlist = 64; val m = 8; val ksub = 16
       val lake = Similarity.hashBlobLake(s, n).localCheckpoint(true)
-      val version = Similarity.annIndexVersion(nlist, m, ksub)
-      val healthyPath = annLedgerPath(version,
-        Similarity.hashBlobLakeKey(n))
-      standingAnnIndex(s, Similarity.hashBlobLakeKey(n), lake,
-        nlist, m, ksub) // exists-guard: ensure the shared bundle
+      val (healthyPath, version) = standingAnnBundle(s,
+        Similarity.hashBlobLakeKey(n), lake, nlist, m, ksub)
       val (cents, codebook, enc) =
         Similarity.loadIndex(s, healthyPath, version)
       val poisonPath = annLedgerPath(version,
@@ -1866,19 +1777,9 @@ private[graft] object AnnQueries {
       val lake = Similarity.hashBlobLake(s, n)
         .withColumn("h4", pmod(xxhash64(col("vec_id")), lit(4L)))
         .localCheckpoint(true)
-      val version = Similarity.annIndexVersion(nlist, m, 16)
-      val path = annLedgerPath(version,
-        s"${Similarity.hashBlobLakeKey(n)}-celllayout")
-      if (!Similarity.indexExists(s, path, version)) {
-        val (c0, cb0, e0) = Similarity.ivfpqTrainEncode(
-          lake.drop("h4"), "vec_id", "embedding", nlist, m, 16,
-          coarseIters = 1, pqIters = 1)
-        Similarity.persistIndexCellLayout(path, version, c0, cb0, e0)
-      }
-      val (cents, codebook, enc0) =
-        Similarity.loadIndexCellLayout(s, path, version)
-      val encoded = Similarity.liveEncoded(enc0,
-        Similarity.annTombstones(s, path)) // the x119 contract
+      val (cents, codebook, encoded) = standingAnnIndex(s,
+        s"${Similarity.hashBlobLakeKey(n)}-celllayout", lake.drop("h4"),
+        nlist, m, ksub = 16, cellLayout = true)
       // 4 probe queries and a 50% filter: the widened nprobe is
       // min(64, 8/0.5) = 16, so the BATCH's probed-cell union stays
       // a strict subset of the 64 cells — the pruning the pane
@@ -1891,20 +1792,14 @@ private[graft] object AnnQueries {
         "embedding", pred, k, encoded, cents, codebook, nlist, m,
         bruteCutoff = 0L, pruneCells = true)
       val cells = r.probedCells.getOrElse(Array.empty[Long])
-      val filesRead = encoded
-        .filter(col("cell").isInCollection(cells.toSeq))
-        .select(input_file_name()).distinct().count()
+      val nFilesRead = filesRead(encoded, cells)
       val exact = Similarity.bruteTopKL2(q, lake.filter(pred),
         "vec_id", "embedding", k)
       val offPred = r.result.join(
         lake.filter(!pred).select(col("vec_id").as("neighbor_id")),
         Seq("neighbor_id"), "left_semi")
         .agg(count(lit(1)).as("n_off_pred"))
-      exact.as("b").join(r.result.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, r.result)
         .join(offPred, lit(true), "left") // 1-row pane join idiom
         .select(lit(r.route).as("route"),
           lit(r.nSurvivors).as("n_survivors"),
@@ -1913,8 +1808,8 @@ private[graft] object AnnQueries {
           lit(math.rint(r.recallPreflight * 10000) / 10000)
             .as("recall_preflight"),
           lit(cells.length.toLong).as("n_cells_probed"),
-          lit(filesRead).as("n_files_read"),
-          lit(filesRead == cells.length.toLong).as("files_eq_cells"),
+          lit(nFilesRead).as("n_files_read"),
+          lit(nFilesRead == cells.length.toLong).as("files_eq_cells"),
           col("n_off_pred"), col("n_exact"),
           round(col("n_hit").cast(DoubleType) / col("n_exact"), 4)
             .as("recall_filtered"),
@@ -2027,10 +1922,8 @@ private[graft] object AnnQueries {
         })
       val equal = rowSetEqual(inc, fullP)
       val (grown, nGrown) = grownBits
-      val (cents, codebook, prom0) =
-        Similarity.loadIndexCellLayout(s, outPath, version)
-      val promoted = Similarity.liveEncoded(prom0,
-        Similarity.annTombstones(s, outPath))
+      val (cents, codebook, promoted) =
+        Similarity.loadLiveIndex(s, outPath, version)
       val q = Similarity.stratifiedProbes(grown, "vec_id", 16)
         .localCheckpoint(true)
       val np = Similarity.nprobeFor(nlist)
@@ -2040,11 +1933,7 @@ private[graft] object AnnQueries {
         rerankSource = Some(grown))
       val exact = Similarity.bruteTopKL2(q, grown, "vec_id",
         "embedding", k)
-      exact.as("b").join(got.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, got)
         .select(lit(b0).as("n_batches_full"),
           lit(hwm0).as("hwm_after_full"),
           lit(b1).as("n_new_batches"),
@@ -2135,10 +2024,8 @@ private[graft] object AnnQueries {
             .select(col("compact_recommended")).head().getBoolean(0)
           val (nb, na, _) =
             Similarity.annCompact(s, shardPaths(sh), v, 1)
-          val (cents, codebook, enc) =
-            Similarity.loadIndex(s, shardPaths(sh), v)
-          val live = Similarity.liveEncoded(enc,
-            Similarity.annTombstones(s, shardPaths(sh)))
+          val (cents, codebook, live) =
+            Similarity.loadLiveIndex(s, shardPaths(sh), v)
           val np = Similarity.nprobeFor(nl)
           (ts, fired, nb - na,
             Similarity.ivfpqSearchEncoded(q, "vec_id", "embedding",
@@ -2158,11 +2045,7 @@ private[graft] object AnnQueries {
         "embedding", k)
       val forgotten = merged.join(tsIds, Seq("neighbor_id"),
         "left_semi").agg(count(lit(1)).as("n_results_forgotten"))
-      exact.as("b").join(merged.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, merged)
         .join(forgotten, lit(true), "left") // 1-row pane join idiom
         .select(lit(shards.toLong).as("n_shards"),
           lit(tsCounts(0)).as("n_ts_shard0"),
@@ -2523,7 +2406,7 @@ private[graft] object AnnQueries {
       // the full-promote equality twin and the search chain read
       // disjoint state (a fresh outFull bundle vs the streamed
       // bundle) — overlap them (graft.Par, guide §2.6)
-      val (equal, (cells, got, filesRead)) = graft.Par.join2(
+      val (equal, (cells, got, nFilesRead)) = graft.Par.join2(
         {
           val outFull = tmpDir("st25_full")
           Similarity.promoteIngestLedger(s, defPath, version,
@@ -2537,33 +2420,24 @@ private[graft] object AnnQueries {
           rowSetEqual(streamed, full)
         },
         {
-          val (cents, codebook, enc0) =
-            Similarity.loadIndexCellLayout(s, bundlePath, version)
-          val live = Similarity.liveEncoded(enc0,
-            Similarity.annTombstones(s, bundlePath)) // x119 contract
+          val (cents, codebook, live) =
+            Similarity.loadLiveIndex(s, bundlePath, version)
           val np = Similarity.nprobeFor(nlist)
           val (cells0, got0) = Similarity.ivfpqSearchPruned(q,
             "vec_id", "embedding", live, cents, codebook, k, np, m,
             rerank = Similarity.rerankFor(n, nlist, np),
             rerankSource = Some(lake))
-          val fr = live
-            .filter(col("cell").isInCollection(cells0.toSeq))
-            .select(input_file_name()).distinct().count()
-          (cells0, got0, fr)
+          (cells0, got0, filesRead(live, cells0))
         })
       val exact = Similarity.bruteTopKL2(q, lake, "vec_id",
         "embedding", k)
-      exact.as("b").join(got.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, got)
         .select(lit(nBatches).as("n_batches"),
           lit(nProm.toLong).as("n_promotes"),
           lit(equal).as("bundle_equals_full_promote"),
           lit(cells.length.toLong).as("n_cells_probed"),
-          lit(filesRead).as("n_files_read"),
-          lit(filesRead == cells.length.toLong).as("files_eq_cells"),
+          lit(nFilesRead).as("n_files_read"),
+          lit(nFilesRead == cells.length.toLong).as("files_eq_cells"),
           col("n_exact"),
           round(col("n_hit").cast(DoubleType) / col("n_exact"), 4)
             .as("recall"),
@@ -2606,17 +2480,9 @@ private[graft] object AnnQueries {
       val built = graft.Par.run((0 until shards).map { sh => () =>
         val part = lake.drop("h4").filter(shardKey === sh.toLong)
           .localCheckpoint(true)
-        val nl = Similarity.nlistFor(part.count())
-        val v = Similarity.annIndexVersion(nl, m, ksub)
-        val path = annLedgerPath(v,
-          s"${Similarity.hashBlobLakeKey(n)}-sh$sh-of$shards-cells")
-        if (!Similarity.indexExists(s, path, v)) {
-          val (c0, cb0, e0) = Similarity.ivfpqTrainEncode(part,
-            "vec_id", "embedding", nl, m, ksub,
-            coarseIters = 1, pqIters = 1)
-          Similarity.persistIndexCellLayout(path, v, c0, cb0, e0)
-        }
-        (path, v)
+        standingAnnBundle(s,
+          s"${Similarity.hashBlobLakeKey(n)}-sh$sh-of$shards-cells", part,
+          Similarity.nlistFor(part.count()), m, ksub, cellLayout = true)
       })
       val q = Similarity.stratifiedProbes(lake, "vec_id", 4)
         .drop("h4").localCheckpoint(true)
@@ -2630,12 +2496,8 @@ private[graft] object AnnQueries {
       // (round-11 review)
       val filesEqCells = r.shardCells.length == built.length &&
         built.zipWithIndex.forall { case ((p, v), sh) =>
-          val enc = Similarity.liveEncoded(
-            Similarity.loadIndexCellLayout(s, p, v)._3,
-            Similarity.annTombstones(s, p))
           val cells = r.shardCells(sh)
-          enc.filter(col("cell").isInCollection(cells.toSeq))
-            .select(input_file_name()).distinct().count() ==
+          filesRead(Similarity.loadLiveIndex(s, p, v)._3, cells) ==
             cells.length.toLong
         }
       val exact = Similarity.bruteTopKL2(q, lake.filter(pred),
@@ -2644,11 +2506,7 @@ private[graft] object AnnQueries {
         lake.filter(!pred).select(col("vec_id").as("neighbor_id")),
         Seq("neighbor_id"), "left_semi")
         .agg(count(lit(1)).as("n_off_pred"))
-      exact.as("b").join(r.result.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, r.result)
         .join(offPred, lit(true), "left") // 1-row pane join idiom
         .select(lit(r.route).as("route"),
           lit(shards.toLong).as("n_shards"),
@@ -3062,21 +2920,15 @@ private[graft] object AnnQueries {
             .promoteIngestLedgerIncremental(s, defP, v, ledgerP,
               bundleP)
           val noop = nb2 == 0L && cells2 == 0L
-          val (cents, codebook, enc0) =
-            Similarity.loadIndexCellLayout(s, bundleP, v)
-          val live = Similarity.liveEncoded(enc0,
-            Similarity.annTombstones(s, bundleP))
+          val (cents, codebook, live) =
+            Similarity.loadLiveIndex(s, bundleP, v)
           val nl = cents.count().toInt
           val np = Similarity.nprobeFor(nl)
           val (cells, got) = Similarity.ivfpqSearchPruned(q, "vec_id",
             "embedding", live, cents, codebook, k, np, m,
             rerank = Similarity.rerankFor(n / 2, nl, np),
             rerankSource = Some(lake))
-          val fEq = live
-            .filter(col("cell").isInCollection(cells.toSeq))
-            .select(input_file_name()).distinct().count() ==
-            cells.length.toLong
-          (eq, noop, fEq, got)
+          (eq, noop, filesRead(live, cells) == cells.length.toLong, got)
         })
       val equalAll = shardRes.forall(_._1)
       val noopAll = shardRes.forall(_._2)
@@ -3085,11 +2937,7 @@ private[graft] object AnnQueries {
       val merged = Similarity.ivfpqMergeTopK(perShard, k)
       val exact = Similarity.bruteTopKL2(q, lake, "vec_id",
         "embedding", k)
-      exact.as("b").join(merged.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, merged)
         .select(lit(2L).as("n_shards"),
           lit(nProm.toLong).as("n_promotes"),
           lit(equalAll).as("bundles_equal_full_promote"),
@@ -3138,19 +2986,9 @@ private[graft] object AnnQueries {
       val n = 2000L; val nlist = 64; val nprobe = 8; val k = 5
       val m = 8; val budget = 16
       val lake = Similarity.hashBlobLake(s, n).localCheckpoint(true)
-      val version = Similarity.annIndexVersion(nlist, m, 16)
-      val path = annLedgerPath(version,
-        s"${Similarity.hashBlobLakeKey(n)}-celllayout")
-      if (!Similarity.indexExists(s, path, version)) {
-        val (c0, cb0, e0) = Similarity.ivfpqTrainEncode(lake,
-          "vec_id", "embedding", nlist, m, 16,
-          coarseIters = 1, pqIters = 1)
-        Similarity.persistIndexCellLayout(path, version, c0, cb0, e0)
-      }
-      val (cents, codebook, enc0) =
-        Similarity.loadIndexCellLayout(s, path, version)
-      val encoded = Similarity.liveEncoded(enc0,
-        Similarity.annTombstones(s, path)) // the x119 contract
+      val (cents, codebook, encoded) = standingAnnIndex(s,
+        s"${Similarity.hashBlobLakeKey(n)}-celllayout", lake, nlist, m,
+        ksub = 16, cellLayout = true)
       // 48 queries, 4 per cluster from 12 clusters (cluster = id
       // mod 64 by the lake recipe): broad enough to saturate the
       // single union, local enough that packing beats one-query
@@ -3178,17 +3016,11 @@ private[graft] object AnnQueries {
       val (equal, filesEq) = graft.Par.join2(
         rowSetEqual(batched, unbatched),
         graft.Par.run(subCells.map { cells => () =>
-          encoded.filter(col("cell").isInCollection(cells.toSeq))
-            .select(input_file_name()).distinct().count() ==
-            cells.length.toLong
+          filesRead(encoded, cells) == cells.length.toLong
         }).forall(identity))
       val exact = Similarity.bruteTopKL2(q, lake, "vec_id",
         "embedding", k)
-      exact.as("b").join(batched.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, batched)
         .select(lit(48L).as("n_queries"),
           lit(nlist.toLong).as("n_cells_total"),
           lit(cellsU.length.toLong).as("n_cells_unbatched"),
@@ -3284,9 +3116,7 @@ private[graft] object AnnQueries {
       // below is the same computation as the serial form
       val newEnc = graft.Par.run(
         est.shardPaths.zip(est.versions).map { case (p, v) => () =>
-          val (_, _, e) = Similarity.loadIndexCellLayout(s, p, v)
-          Similarity.liveEncoded(e, Similarity.annTombstones(s, p))
-            .localCheckpoint(true)
+          Similarity.loadLiveIndex(s, p, v)._3.localCheckpoint(true)
         })
       val fTag = forgotten.withColumnRenamed("vec_id", "neighbor_id")
       val liveLake = lake.join(forgotten, Seq("vec_id"), "left_anti")
@@ -3348,10 +3178,8 @@ private[graft] object AnnQueries {
         .localCheckpoint(true)
       val perShard = graft.Par.run(
         est.shardPaths.zip(est.versions).map { case (p, v) => () =>
-          val (cents, codebook, e0) =
-            Similarity.loadIndexCellLayout(s, p, v)
-          val live = Similarity.liveEncoded(e0,
-            Similarity.annTombstones(s, p))
+          val (cents, codebook, live) =
+            Similarity.loadLiveIndex(s, p, v)
           val nl = cents.count().toInt
           val np = Similarity.nprobeFor(nl)
           Similarity.ivfpqSearchPruned(q, "vec_id", "embedding",
@@ -3366,11 +3194,7 @@ private[graft] object AnnQueries {
       val b = loop.before.head()
       val act = loop.actions.head()
       val af = loop.after.head()
-      exact.as("b").join(merged.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, merged)
         .select(lit(b.getBoolean(3)).as("fired_before"),
           lit(b.getString(4)).as("reason_before"),
           lit(act.getBoolean(3)).as("executed"),
@@ -3438,15 +3262,9 @@ private[graft] object AnnQueries {
       import graft.streaming.Streams
       val m = 8; val ksub = 16; val nlist = 64; val n = 2000L
       val lake = Similarity.hashBlobLake(s, n).localCheckpoint(true)
-      val version = Similarity.annIndexVersion(nlist, m, ksub)
-      val path = annLedgerPath(version,
-        s"${Similarity.hashBlobLakeKey(n)}-celllayout")
-      if (!Similarity.indexExists(s, path, version)) {
-        val (c0, cb0, e0) = Similarity.ivfpqTrainEncode(lake,
-          "vec_id", "embedding", nlist, m, ksub,
-          coarseIters = 1, pqIters = 1)
-        Similarity.persistIndexCellLayout(path, version, c0, cb0, e0)
-      }
+      val (path, version) = standingAnnBundle(s,
+        s"${Similarity.hashBlobLakeKey(n)}-celllayout", lake, nlist, m,
+        ksub, cellLayout = true)
       val light = s.range(20).select(col("id").as("doc_id"),
         concat(lit("alpha beta w"), col("id")).as("text"),
         lit("en").as("lang"))
@@ -3534,19 +3352,9 @@ private[graft] object AnnQueries {
       val lake = Similarity.hashBlobLake(s, n)
         .withColumn("h4", pmod(xxhash64(col("vec_id")), lit(4L)))
         .localCheckpoint(true)
-      val version = Similarity.annIndexVersion(nlist, m, 16)
-      val path = annLedgerPath(version,
-        s"${Similarity.hashBlobLakeKey(n)}-celllayout")
-      if (!Similarity.indexExists(s, path, version)) {
-        val (c0, cb0, e0) = Similarity.ivfpqTrainEncode(
-          lake.drop("h4"), "vec_id", "embedding", nlist, m, 16,
-          coarseIters = 1, pqIters = 1)
-        Similarity.persistIndexCellLayout(path, version, c0, cb0, e0)
-      }
-      val (cents, codebook, enc0) =
-        Similarity.loadIndexCellLayout(s, path, version)
-      val encoded = Similarity.liveEncoded(enc0,
-        Similarity.annTombstones(s, path)) // the x119 contract
+      val (cents, codebook, encoded) = standingAnnIndex(s,
+        s"${Similarity.hashBlobLakeKey(n)}-celllayout", lake.drop("h4"),
+        nlist, m, ksub = 16, cellLayout = true)
       // the BROAD batch (x139's shape): 4 queries per cluster from
       // 12 clusters — with the 50% filter widening nprobe 8 -> 16,
       // the single union saturates
@@ -3576,11 +3384,7 @@ private[graft] object AnnQueries {
         lake.filter(!pred).select(col("vec_id").as("neighbor_id")),
         Seq("neighbor_id"), "left_semi")
         .agg(count(lit(1)).as("n_off_pred"))
-      exact.as("b").join(resB.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("l.neighbor_id")).as("n_hit"))
+      recallTally(exact, resB)
         .join(offPred, lit(true), "left") // 1-row pane join idiom
         .select(lit(r0.route).as("route_unbatched"),
           lit(rb.route).as("route_batched"),
@@ -4475,14 +4279,7 @@ private[graft] object AnnQueries {
       val sq = Similarity.sq8TopK(q, emb, "vec_id", "embedding",
         k = 5, shortlist = 20)
       val exact = Similarity.bruteTopK(q, emb, "vec_id", "embedding", 5)
-      exact.as("b").join(sq.as("l"),
-          col("b.query_id") === col("l.query_id") &&
-            col("b.neighbor_id") === col("l.neighbor_id"), "left")
-        .groupBy(col("b.query_id"))
-        .agg((count(col("l.neighbor_id")).cast("double") / lit(5.0d))
-          .as("recall"))
-        .agg(count(lit(1)).as("n_queries"),
-          (avg(col("recall")) >= lit(0.9d)).as("recall_ge_09"))
+      annRecallContract(sq, exact, bound = 0.9, flag = "recall_ge_09")
     }, """
       SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS recall_ge_09
       FROM embeddings WHERE vec_id < 10"""),
@@ -5014,12 +4811,8 @@ private[graft] object AnnQueries {
       val points = Seq(1, 2, 4, 8, 16).map { np =>
         val r = Similarity.ivfSearchAssigned(q, "vec_id", "embedding",
           assigned, cents, k = 5, nprobe = np)
-        brute.as("b").join(r.as("l"),
-            col("b.query_id") === col("l.query_id") &&
-              col("b.neighbor_id") === col("l.neighbor_id"), "left")
-          .agg((count(col("l.neighbor_id")).cast(DoubleType) /
-            count(lit(1))).as("recall"))
-          .select(lit(np).as("nprobe"), col("recall"))
+        recallTally(brute, r).select(lit(np).as("nprobe"),
+          (col("n_hit").cast(DoubleType) / col("n_exact")).as("recall"))
       }.reduce(_ unionByName _)
       val w = Window.orderBy(col("nprobe")) // 5 rows — explicitly tiny
       points

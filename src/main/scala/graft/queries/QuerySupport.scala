@@ -10,8 +10,12 @@ import graft.sources.ScratchRoot
 
 /** Helpers shared by more than one query family: table loads, exact
   * sums, the row-set and recall contracts, and the standing ledgers
-  * (model, tokenizer, ANN index). Scratch dirs come from
-  * [[graft.sources.ScratchRoot]]. */
+  * (model, tokenizer, ANN index). The ANN query side rests on three
+  * of them: [[standingAnnBundle]] guards and builds a bundle in
+  * either layout, `Similarity.loadLiveIndex` is its tombstone-aware
+  * read ([[standingAnnIndex]] is the two together), and
+  * [[recallTally]] counts how much of the exact twin a search
+  * returned. Scratch dirs come from [[graft.sources.ScratchRoot]]. */
 private[graft] object QuerySupport {
 
   def t(s: SparkSession, dir: String, n: String): DataFrame =
@@ -41,25 +45,43 @@ private[graft] object QuerySupport {
   def rowSetEqual(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).unionAll(b.exceptAll(a)).isEmpty
 
+  /** The exact twin left-joined to an approximate result on
+    * (query_id, neighbor_id), as `b` and `l`: a `b` row whose
+    * `l.neighbor_id` is null is an exact neighbor the search missed. */
+  private def twinJoin(exact: DataFrame, got: DataFrame): DataFrame =
+    exact.as("b").join(got.as("l"),
+      col("b.query_id") === col("l.query_id") &&
+        col("b.neighbor_id") === col("l.neighbor_id"), "left")
+
+  /** One row (n_exact, n_hit): the exact twin's (query, neighbor)
+    * pairs, and how many of them the approximate result `got` also
+    * returned. Callers derive their own recall columns from it. */
+  def recallTally(exact: DataFrame, got: DataFrame): DataFrame =
+    twinJoin(exact, got).agg(count(lit(1)).as("n_exact"),
+      count(col("l.neighbor_id")).as("n_hit"))
+
   /** Quality-contract row for an approximate ANN result: macro-average
-    * recall@5 vs the exact brute-force top-k, reduced to a boolean
-    * bound the SQL oracle can assert (the a4/a8b pattern for operators
-    * whose internals aren't SQL-expressible). One row:
-    * (n_queries, <flag> = avg recall ≥ bound). */
-  def annRecallContract(approx: DataFrame, queries: DataFrame,
-                        corpus: DataFrame, bound: Double,
-                        flag: String): DataFrame = {
-    val brute = graft.operators.Similarity.bruteTopK(
-      queries, corpus, "vec_id", "embedding", k = 5)
-    brute.as("b").join(approx.as("l"),
-        col("b.query_id") === col("l.query_id") &&
-          col("b.neighbor_id") === col("l.neighbor_id"), "left")
+    * recall@5 vs the exact top-k twin `exact` (cosine `bruteTopK` or
+    * fixed-point `bruteTopKL2`, whichever metric the search ranks
+    * by), reduced to a boolean bound the SQL oracle can assert (the
+    * a4/a8b pattern for operators whose internals aren't
+    * SQL-expressible). One row: (n_queries, <flag> = avg recall ≥
+    * bound). */
+  def annRecallContract(approx: DataFrame, exact: DataFrame,
+                        bound: Double, flag: String): DataFrame =
+    twinJoin(exact, approx)
       .groupBy(col("b.query_id"))
       .agg((count(col("l.neighbor_id")).cast("double") / lit(5.0d))
         .as("recall"))
       .agg(count(lit(1)).as("n_queries"),
         (avg(col("recall")) >= lit(bound)).as(flag))
-  }
+
+  /** Data files a read of `encoded` restricted to `cells` opens: on a
+    * cell-layout bundle, the witness that the probe filter prunes
+    * files (callers compare it with the probed-cell count). */
+  def filesRead(encoded: DataFrame, cells: Array[Long]): Long =
+    encoded.filter(col("cell").isInCollection(cells.toSeq))
+      .select(input_file_name()).distinct().count()
 
   /** Shared x111/st22 footer-canary injection: the synthetic corpus
     * has no newline structure, so one deterministic web-furniture
@@ -128,35 +150,47 @@ private[graft] object QuerySupport {
     * residual codebook + the encoded corpus persist as version-keyed
     * parquet ([[graft.sources.VersionedState]] — the same form the
     * classifier and tokenizer ledgers use), S10 exists-guarded, first
-    * caller builds. Completes the amortization trio: every trained
+    * caller builds with the fixed recipe (one coarse and one PQ
+    * iteration). Completes the amortization trio: every trained
     * artifact in the engine (model, tokenizer, index) now has a
     * standing form whose consumers pay only the read + search, never
     * the build. `lakeKey` names the corpus INCLUDING its recipe
     * version (the ledger is per (lake recipe, quantizer recipe) —
     * either changing must move the path, or a stale index of an old
     * corpus/quantizer would silently serve; the model ledger's
-    * (dir, recipe) discipline). */
-  def standingAnnIndex(s: SparkSession, lakeKey: String,
-                               lake: DataFrame, nlist: Int, m: Int,
-                               ksub: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
+    * (dir, recipe) discipline). `cellLayout` persists the encoded
+    * part one directory per cell (`persistIndexCellLayout`, the
+    * probe-prunable form); callers give such bundles their own key.
+    * Returns (path, version) and reads nothing back. */
+  def standingAnnBundle(s: SparkSession, lakeKey: String,
+                        lake: DataFrame, nlist: Int, m: Int, ksub: Int,
+                        cellLayout: Boolean = false): (String, String) = {
     val version = Similarity.annIndexVersion(nlist, m, ksub)
     val path = annLedgerPath(version, lakeKey)
     if (!Similarity.indexExists(s, path, version)) {
       val (cents, codebook, encoded) = Similarity.ivfpqTrainEncode(
         lake, "vec_id", "embedding", nlist, m, ksub,
         coarseIters = 1, pqIters = 1)
-      Similarity.persistIndex(path, version, cents, codebook, encoded)
+      if (cellLayout)
+        Similarity.persistIndexCellLayout(path, version, cents,
+          codebook, encoded)
+      else Similarity.persistIndex(path, version, cents, codebook,
+        encoded)
     }
-    val (cents, codebook, encoded) = Similarity.loadIndex(s, path,
-      version)
-    // EVERY standing-index consumer is tombstone-aware: forgotten
-    // ids must stop surfacing from any search path, not just the
-    // one that deleted them (the x119 contract, enforced at the one
-    // place all guarded consumers read through). A never-forgotten
-    // bundle anti-joins an empty broadcast set — plan noise, zero
-    // rows moved.
-    (cents, codebook,
-      Similarity.liveEncoded(encoded, Similarity.annTombstones(s, path)))
+    (path, version)
+  }
+
+  /** [[standingAnnBundle]] read back through `Similarity.loadLiveIndex`:
+    * EVERY guarded consumer is tombstone-aware, so forgotten ids stop
+    * surfacing from any search path, not just the one that deleted
+    * them (the x119 contract). A never-forgotten bundle anti-joins an
+    * empty broadcast set — plan noise, zero rows moved. */
+  def standingAnnIndex(s: SparkSession, lakeKey: String,
+                       lake: DataFrame, nlist: Int, m: Int, ksub: Int,
+                       cellLayout: Boolean = false)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val (path, version) = standingAnnBundle(s, lakeKey, lake, nlist, m,
+      ksub, cellLayout)
+    Similarity.loadLiveIndex(s, path, version)
   }
 }

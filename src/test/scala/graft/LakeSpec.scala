@@ -8,7 +8,7 @@ import graft.sources.Lake
   * list+sort, delete, rename/archive-move, idempotent write modes. */
 class LakeSpec extends GraftSuite {
 
-  private val root = "/root/repo/target/qtmp/test_lake"
+  private val root = graft.sources.ScratchRoot.path("test_lake")
 
   test("lake lifecycle: write, exists, list sorted, rename, delete") {
     val lake = new Lake(spark, root)

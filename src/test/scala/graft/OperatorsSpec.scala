@@ -88,7 +88,7 @@ class OperatorsSpec extends GraftSuite {
   }
 
   test("Mutations.overwriteAtomic swaps and is rerunnable") {
-    val p = "/root/repo/target/qtmp/test_atomic"
+    val p = graft.sources.ScratchRoot.path("test_atomic")
     val df = Seq((1, "a"), (2, "b")).toDF("id", "s")
     Mutations.overwriteAtomic(df, p)
     Mutations.overwriteAtomic(df.filter($"id" === 1), p)
@@ -155,7 +155,8 @@ class OperatorsSpec extends GraftSuite {
   }
 
   test("Lake: exists / list-sorted / write-ignore / rename / delete") {
-    val lake = new graft.sources.Lake(spark, "/root/repo/target/qtmp/test_lake")
+    val lake = new graft.sources.Lake(spark,
+      graft.sources.ScratchRoot.path("test_lake"))
     lake.delete("raw")
     val df = Seq((1, "a"), (2, "b")).toDF("id", "s")
     lake.write(df, overwrite = true, "raw", "t1", "2024-01-01")
@@ -274,7 +275,7 @@ class OperatorsSpec extends GraftSuite {
   }
 
   test("Bucketing: colocated join matches plain join and plans no exchange") {
-    val dir = "/root/repo/target/qtmp/test_bucketing"
+    val dir = graft.sources.ScratchRoot.path("test_bucketing")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     val o = Tables.load(spark, SparkTestBase.sfDir, "orders")
       .select($"o_orderkey", $"o_custkey")

@@ -6,7 +6,7 @@ import graft.pipelines.Medallion
 class PipelineSpec extends GraftSuite {
 
   test("medallion chain builds all layers and the mart; rerun is idempotent") {
-    val lake = "/root/repo/target/qtmp/test_medallion"
+    val lake = graft.sources.ScratchRoot.path("test_medallion")
     val mart = Medallion.run(spark, SparkTestBase.sfDir, lake)
     assert(mart.count() > 0)
     // every layer materialized
@@ -28,7 +28,7 @@ class PipelineSpec extends GraftSuite {
   }
 
   test("mart equals the collapsed single-plan equivalent") {
-    val lake = "/root/repo/target/qtmp/test_medallion2"
+    val lake = graft.sources.ScratchRoot.path("test_medallion2")
     val mart = Medallion.run(spark, SparkTestBase.sfDir, lake)
     val o = Tables.load(spark, SparkTestBase.sfDir, "orders")
     val c = Tables.load(spark, SparkTestBase.sfDir, "customer")

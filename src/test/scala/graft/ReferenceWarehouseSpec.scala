@@ -45,7 +45,7 @@ class ReferenceWarehouseSpec extends GraftSuite {
   }
 
   test("§1.4 inventory: every table builds, keyed and non-empty") {
-    val lake = "/root/repo/target/qtmp/test_refwh"
+    val lake = graft.sources.ScratchRoot.path("test_refwh")
     val mart = ReferenceWarehouse.run(spark, sources, lake)
     val ctx = new ReferenceWarehouse.Ctx(spark, Map.empty, lake)
 

@@ -353,7 +353,8 @@ class Round11Spec extends GraftSuite {
       nlist = 4, m = 4, ksub = 8, pqIters = 1)
     val encoded = Similarity.ivfpqEncode(emb, "vec_id", "embedding",
       cents, cb, m = 4)
-    val dir = new java.io.File("target/qtmp/r11_ivfpq_state")
+    val dir = new java.io.File(
+      graft.sources.ScratchRoot.path("r11_ivfpq_state"))
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
     cents.write.parquet(s"$dir/cents")
     cb.write.parquet(s"$dir/cb")

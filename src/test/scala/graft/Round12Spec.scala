@@ -17,7 +17,7 @@ class Round12Spec extends GraftSuite {
     import graft.streaming.Streams
     val dir = SparkTestBase.sfDir
     val path =
-      new java.io.File("target/qtmp/r12_freq_ledger").getAbsolutePath
+      graft.sources.ScratchRoot.path("r12_freq_ledger")
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))
     Mutations.seedEmptyLedger(spark, path, Streams.freqLedgerSchema)
@@ -190,7 +190,7 @@ class Round12Spec extends GraftSuite {
     import graft.streaming.Streams
     val dir = SparkTestBase.sfDir
     val path =
-      new java.io.File("target/qtmp/r12_dsir_ledger").getAbsolutePath
+      graft.sources.ScratchRoot.path("r12_dsir_ledger")
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))
     Mutations.seedEmptyLedger(spark, path, Streams.dsirLedgerSchema)
@@ -460,9 +460,9 @@ class Round12Spec extends GraftSuite {
     import spark.implicits._
     val dir = SparkTestBase.sfDir
     val model =
-      new java.io.File("target/qtmp/r12_st19_model").getAbsolutePath
+      graft.sources.ScratchRoot.path("r12_st19_model")
     val scores =
-      new java.io.File("target/qtmp/r12_st19_scores").getAbsolutePath
+      graft.sources.ScratchRoot.path("r12_st19_scores")
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(model))
     org.apache.commons.io.FileUtils

@@ -118,7 +118,7 @@ class Round13Spec extends GraftSuite {
     import graft.operators.Mutations
     val dir = SparkTestBase.sfDir
     val path =
-      new java.io.File("target/qtmp/r13_pca_ledger").getAbsolutePath
+      graft.sources.ScratchRoot.path("r13_pca_ledger")
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))
     Mutations.seedEmptyLedger(spark, path, Streams.pcaLedgerSchema)
@@ -225,7 +225,7 @@ class Round13Spec extends GraftSuite {
     import graft.operators.{Mutations, Tokenize}
     val dir = SparkTestBase.sfDir
     val path =
-      new java.io.File("target/qtmp/r13_bpe_ledger").getAbsolutePath
+      graft.sources.ScratchRoot.path("r13_bpe_ledger")
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))
     Mutations.seedEmptyLedger(spark, path, Streams.bpeLedgerSchema)
@@ -253,7 +253,7 @@ class Round13Spec extends GraftSuite {
     import graft.streaming.Streams
     import graft.operators.Mutations
     import spark.implicits._
-    val path = new java.io.File("target/qtmp/r13_bp_ledger")
+    val path = new java.io.File(graft.sources.ScratchRoot.path("r13_bp_ledger"))
       .getAbsolutePath
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))

@@ -22,7 +22,7 @@ class Round14Spec extends GraftSuite {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val (feat, _, bias, w) = Learn.qualityClassifier(docs)
     val path =
-      new java.io.File("target/qtmp/r14_model").getAbsolutePath
+      graft.sources.ScratchRoot.path("r14_model")
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))
     assert(!Learn.modelExists(spark, path, Learn.qualityModelVersion()),
@@ -70,7 +70,7 @@ class Round14Spec extends GraftSuite {
     import graft.sources.VersionedState
     import spark.implicits._
     val path =
-      new java.io.File("target/qtmp/r14_vstate").getAbsolutePath
+      graft.sources.ScratchRoot.path("r14_vstate")
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))
     intercept[IllegalArgumentException] {
@@ -166,7 +166,7 @@ class Round14Spec extends GraftSuite {
     val df = spark.range(20000)
       .select(col("id"), lpad(lit("x"), 100, "y").as("pad"))
     val out =
-      new java.io.File("target/qtmp/r14_advised").getAbsolutePath
+      graft.sources.ScratchRoot.path("r14_advised")
     val (pane, rec) = Layout.writeAdvised(df, "crafted", out,
       fileBytes = 262144L)
     val estBytes = 20000L * 108L

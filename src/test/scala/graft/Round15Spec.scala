@@ -134,7 +134,7 @@ class Round15Spec extends GraftSuite {
     import graft.sources.VersionedState
     import spark.implicits._
     val local =
-      new java.io.File("target/qtmp/r15_vstate_uri").getAbsolutePath
+      graft.sources.ScratchRoot.path("r15_vstate_uri")
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(local))
     val uri = s"file:$local" // scheme-qualified, resolved by Hadoop FS
@@ -152,7 +152,7 @@ class Round15Spec extends GraftSuite {
     import graft.sources.VersionedState
     import spark.implicits._
     val path =
-      new java.io.File("target/qtmp/r15_vstate_order").getAbsolutePath
+      graft.sources.ScratchRoot.path("r15_vstate_order")
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))
     VersionedState.write(path, "v1", "part" -> Seq(1).toDF("x"))
@@ -195,7 +195,7 @@ class Round15Spec extends GraftSuite {
        "realizes rec files exactly") {
     import spark.implicits._
     val tiny = Seq.fill(3)("x" * 4096).toDF("text") // ~12 KB in 3 rows
-    val out = new java.io.File("target/qtmp/r15_advised").getAbsolutePath
+    val out = graft.sources.ScratchRoot.path("r15_advised")
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(out))
     // 1-byte target would recommend thousands of files unclamped;
@@ -223,7 +223,7 @@ class Round15Spec extends GraftSuite {
     val encoded = Similarity.ivfpqEncode(lake, "vec_id", "embedding",
       cents, codebook)
     val path =
-      new java.io.File("target/qtmp/r15_ann_index").getAbsolutePath
+      graft.sources.ScratchRoot.path("r15_ann_index")
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))
     val version = Similarity.annIndexVersion(nlist, 8, 16)
@@ -256,9 +256,9 @@ class Round15Spec extends GraftSuite {
     val (cents, codebook) = Similarity.ivfpqTrain(lake, "vec_id",
       "embedding", nlist = 4, m = 8, ksub = 4)
     val defPath =
-      new java.io.File("target/qtmp/r15_st23_def").getAbsolutePath
+      graft.sources.ScratchRoot.path("r15_st23_def")
     val encPath =
-      new java.io.File("target/qtmp/r15_st23_enc").getAbsolutePath
+      graft.sources.ScratchRoot.path("r15_st23_enc")
     for (p <- Seq(defPath, encPath))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
     // definition persisted under a DIFFERENT m's stamp; the fold
@@ -317,9 +317,9 @@ class Round15Spec extends GraftSuite {
        "silently score against stale weights") {
     import spark.implicits._
     val modelPath =
-      new java.io.File("target/qtmp/r15_st19_model").getAbsolutePath
+      graft.sources.ScratchRoot.path("r15_st19_model")
     val scoredPath =
-      new java.io.File("target/qtmp/r15_st19_scores").getAbsolutePath
+      graft.sources.ScratchRoot.path("r15_st19_scores")
     for (p <- Seq(modelPath, scoredPath))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
     // a syntactically-valid model persisted under the WRONG recipe

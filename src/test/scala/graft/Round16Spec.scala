@@ -211,7 +211,8 @@ class Round16Spec extends GraftSuite {
       coarseIters = 1, pqIters = 1)
     val enc = Similarity.ivfpqEncode(lake, "vec_id", "embedding",
       cents, cb, 8).localCheckpoint(true)
-    val path = new java.io.File("target/qtmp/r16_sq8_ledger")
+    val path = new java.io.File(
+      graft.sources.ScratchRoot.path("r16_sq8_ledger"))
       .getAbsolutePath
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))
@@ -243,8 +244,8 @@ class Round16Spec extends GraftSuite {
     val v = Similarity.annIndexVersion(16, 8, 16) // stamps m=8
     val e = intercept[IllegalArgumentException] {
       graft.streaming.Streams.annIngestFold(batch, 0L,
-        "target/qtmp/r16_nonexistent_def", v,
-        "target/qtmp/r16_nonexistent_enc", m = 16)
+        graft.sources.ScratchRoot.path("r16_nonexistent_def"), v,
+        graft.sources.ScratchRoot.path("r16_nonexistent_enc"), m = 16)
     }
     assert(e.getMessage.contains("geometry"))
   }
@@ -253,7 +254,8 @@ class Round16Spec extends GraftSuite {
        "hashed-ngram counts are only additive within one bucket " +
        "space (the st19/st23 version contract on the DSIR tier)") {
     import spark.implicits._
-    val path = new java.io.File("target/qtmp/r16_dsir_ledger")
+    val path = new java.io.File(
+      graft.sources.ScratchRoot.path("r16_dsir_ledger"))
       .getAbsolutePath
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))
@@ -282,7 +284,7 @@ class Round16Spec extends GraftSuite {
        "segment hashes are only additive within one segmentation " +
        "(the dsirLedgerFold recipe stamp, applied to st22's ledger)") {
     import spark.implicits._
-    val path = new java.io.File("target/qtmp/r16_bp_ledger")
+    val path = new java.io.File(graft.sources.ScratchRoot.path("r16_bp_ledger"))
       .getAbsolutePath
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(path))
@@ -311,7 +313,7 @@ class Round16Spec extends GraftSuite {
     // per-partition start offsets can collide here (ADVICE r8); the
     // deterministic numbering path cannot
     val tiny = Seq.fill(3)("x" * 4096).toDF("text").repartition(3)
-    val out = new java.io.File("target/qtmp/r16_advised")
+    val out = new java.io.File(graft.sources.ScratchRoot.path("r16_advised"))
       .getAbsolutePath
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(out))

@@ -17,7 +17,7 @@ class Round17Spec extends GraftSuite {
   import graft.sources.VersionedState
 
   private def tmp(name: String): String = {
-    val d = new java.io.File(s"target/qtmp/$name")
+    val d = new java.io.File(graft.sources.ScratchRoot.path(name))
     org.apache.commons.io.FileUtils.deleteQuietly(d)
     d.getAbsolutePath
   }
@@ -343,27 +343,37 @@ class Round17Spec extends GraftSuite {
        "tombstoned ids on EVERY load — the x119 contract holds for " +
        "consumers that never called annForget themselves") {
     import spark.implicits._
+    import org.apache.spark.sql.types.LongType
     val n = 500L; val nlist = 16
     val lake = Similarity.hashBlobLake(spark, n).localCheckpoint(true)
-    val key = "r17-wiring-test"
-    // fresh key: ensure no prior state
     val version = Similarity.annIndexVersion(nlist, 8, 16)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(
-      s"target/qtmp/ann_${version}_$key"))
-    val (_, _, enc0) = QuerySupport.standingAnnIndex(spark, key, lake,
-      nlist, 8, 16)
-    assert(enc0.filter(col("neighbor_id") === 42L).count() === 8L)
-    Similarity.annForget(
-      new java.io.File(s"target/qtmp/ann_${version}_$key")
-        .getAbsolutePath,
-      Seq(42L).toDF("vec_id"))
-    // a DIFFERENT consumer loads through the same helper: excluded
-    val (_, _, enc1) = QuerySupport.standingAnnIndex(spark, key, lake,
-      nlist, 8, 16)
-    assert(enc1.filter(col("neighbor_id") === 42L).count() === 0L,
-      "a forgotten id surfaced from the shared loader — the " +
-        "engine-wide tombstone wiring is dead")
-    assert(enc1.count() === (n - 1) * 8)
+    // the same body for both layouts standingAnnBundle writes
+    for ((cellLayout, key) <- Seq(false -> "r17-wiring-test",
+                                  true -> "r17-wiring-test-cells")) {
+      val path = QuerySupport.annLedgerPath(version, key)
+      // fresh key: ensure no prior state
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+      val (_, _, enc0) = QuerySupport.standingAnnIndex(spark, key, lake,
+        nlist, 8, 16, cellLayout)
+      assert(enc0.filter(col("neighbor_id") === 42L).count() === 8L)
+      if (cellLayout)
+        assert(enc0.schema("cell").dataType === LongType,
+          "the cell-layout read must cast the partition column back to " +
+            "LONG")
+      val stamp = new java.io.File(s"$path/meta/version.txt")
+      val stamped = stamp.lastModified()
+      assert(stamped > 0L, s"no version stamp at $stamp")
+      Similarity.annForget(path, Seq(42L).toDF("vec_id"))
+      // a DIFFERENT consumer loads through the same helper: excluded
+      val (_, _, enc1) = QuerySupport.standingAnnIndex(spark, key, lake,
+        nlist, 8, 16, cellLayout)
+      assert(enc1.filter(col("neighbor_id") === 42L).count() === 0L,
+        "a forgotten id surfaced from the shared loader — the " +
+          "engine-wide tombstone wiring is dead")
+      assert(enc1.count() === (n - 1) * 8)
+      assert(stamp.lastModified() === stamped,
+        "the second guarded call rebuilt the bundle")
+    }
   }
 
   // --------------------------------------- streaming delete (st24)

@@ -17,7 +17,7 @@ class Round19Spec extends GraftSuite {
   import graft.streaming.Streams
 
   private def tmp(name: String): String = {
-    val d = new java.io.File(s"target/qtmp/$name")
+    val d = new java.io.File(graft.sources.ScratchRoot.path(name))
     org.apache.commons.io.FileUtils.deleteQuietly(d)
     d.getAbsolutePath
   }

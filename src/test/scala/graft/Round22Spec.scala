@@ -133,7 +133,7 @@ class Round22Spec extends GraftSuite {
 
   test("VersionedState.readParts validates once per bundle and keeps " +
     "read's fail-fast version contract") {
-    val dir = new java.io.File("target/qtmp/r22_vs")
+    val dir = new java.io.File(graft.sources.ScratchRoot.path("r22_vs"))
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
     val path = dir.getAbsolutePath
     val a = spark.range(5).select(col("id").as("k"))

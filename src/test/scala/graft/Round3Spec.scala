@@ -119,7 +119,7 @@ class Round3Spec extends GraftSuite {
   }
 
   test("zorderWrite: each file owns a disjoint compact z-range") {
-    val path = "/root/repo/target/qtmp/test_zorder"
+    val path = graft.sources.ScratchRoot.path("test_zorder")
     val ev = Tables.load(spark, SparkTestBase.sfDir, "events")
       .select(col("event_id"), col("user_id"), col("value"))
     Layout.zorderWrite(ev, col("user_id"), col("event_id"), path,

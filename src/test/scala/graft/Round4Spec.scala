@@ -141,7 +141,7 @@ class Round4Spec extends GraftSuite {
 
   test("snapshots: versions sequence, pinned reads see the old world") {
     import spark.implicits._
-    val root = "/root/repo/target/qtmp/test_snap_lake"
+    val root = graft.sources.ScratchRoot.path("test_snap_lake")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     val lake = new graft.sources.Lake(spark, root)
     assert(lake.writeSnapshot(Seq((1, "a")).toDF("k", "v"), "d") === 1)

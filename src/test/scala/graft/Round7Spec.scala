@@ -88,12 +88,14 @@ class Round7Spec extends GraftSuite {
     // genuine micro-batches — the batching-invariance claim of
     // m8/st13 exercised with real multi-batch delivery, not the
     // single-batch AvailableNow degenerate
-    val stage = new java.io.File("target/qtmp/r7_sketch_src")
+    val stage = new java.io.File(
+      graft.sources.ScratchRoot.path("r7_sketch_src"))
     org.apache.commons.io.FileUtils.deleteQuietly(stage); stage.mkdirs()
     val ev = Tables.load(spark, SparkTestBase.sfDir, "events")
       .select(col("event_type"), col("user_id"))
     (0 until 3).foreach { i =>
-      val tmp = new java.io.File(s"target/qtmp/r7_sketch_tmp_$i")
+      val tmp = new java.io.File(
+        graft.sources.ScratchRoot.path(s"r7_sketch_tmp_$i"))
       org.apache.commons.io.FileUtils.deleteQuietly(tmp)
       ev.filter($"user_id" % 3 === i).coalesce(1)
         .write.parquet(tmp.getAbsolutePath)
@@ -102,7 +104,8 @@ class Round7Spec extends GraftSuite {
         new java.io.File(stage, s"slice_$i.parquet").toPath)
       org.apache.commons.io.FileUtils.deleteQuietly(tmp)
     }
-    val target = new java.io.File("target/qtmp/r7_sketch_target")
+    val target = new java.io.File(
+      graft.sources.ScratchRoot.path("r7_sketch_target"))
     org.apache.commons.io.FileUtils.deleteQuietly(target)
     graft.operators.Mutations.seedEmptyLedger(spark,
       target.getAbsolutePath,

@@ -103,7 +103,7 @@ class Round8Spec extends GraftSuite {
     import java.io.File
     import org.apache.commons.io.FileUtils
     import graft.streaming.Streams
-    val base = s"target/qtmp/st_resume_${System.nanoTime()}"
+    val base = graft.sources.ScratchRoot.path(s"st_resume_${System.nanoTime()}")
     def dirOf(n: String) = { val f = new File(s"$base/$n"); f.mkdirs(); f }
     // events split into three staged drop files (the multi-day ingest)
     val ev = Tables.load(spark, SparkTestBase.sfDir, "events")

@@ -3,7 +3,8 @@
 # skipping sbt's JVM startup. Usage: tools/run.sh graft.Scratch [args...]
 set -e
 CLS="$1"; shift || true
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:${SPARK_HOME:-/opt/spark}/jars/*"
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
